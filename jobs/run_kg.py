@@ -120,8 +120,9 @@ def main() -> None:
         lang_filter=args.lang or None,
         claims_hook=claims_hook,
     )
+    # rows this run wrote, not store totals: a resumed run prints all zeros
     print(
-        f"run {run_id}: documents={result.documents} chunks={result.chunks} "
+        f"run {run_id} batch: documents={result.documents} chunks={result.chunks} "
         f"claims={result.claims} facts_current={result.facts_current} "
         f"superseded={result.facts_superseded} conflicts={result.conflicts} edges={result.edges}"
     )

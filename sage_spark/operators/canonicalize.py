@@ -79,6 +79,21 @@ _SINGLETON_PASSTHROUGH = (
 )
 
 
+def _promotable(rows: pd.DataFrame) -> pd.Series:
+    """Vectorized kernel/claims.promotable() with its exact null semantics:
+    null claim_type is not in NON_CANONICAL_TYPES; null graph_worthy or
+    resolution_status fails the gate; null confidence reads as 0.0. Stream
+    rows may hold these columns as object dtype (``None`` beside values),
+    so nulls are handled by comparison and a float cast rather than an
+    object-dtype ``fillna``, which pandas deprecates (it downcasts)."""
+    return (
+        ~rows["claim_type"].isin(NON_CANONICAL_TYPES)
+        & rows["graph_worthy"].eq(True)
+        & (rows["resolution_status"] == "resolved")
+        & (rows["canonical_confidence"].astype(float).fillna(0.0) >= MIN_CANONICAL_CONFIDENCE)
+    )
+
+
 def _emit_uncontested(fast: pd.DataFrame, seen_at: str) -> list[pd.DataFrame]:
     """Vectorized replay of the UNCONTESTED rows: (a) a canonical_key with
     exactly one claim and nothing in the store, and (b) claims of groups
@@ -94,17 +109,7 @@ def _emit_uncontested(fast: pd.DataFrame, seen_at: str) -> list[pd.DataFrame]:
     import hashlib
 
     f = fast.reset_index(drop=True)
-    ct, gw = f["claim_type"], f["graph_worthy"]
-    rs, conf = f["resolution_status"], f["canonical_confidence"]
-    # exact null semantics of kernel/claims.promotable(): null claim_type is
-    # not in NON_CANONICAL_TYPES; null graph_worthy/resolution_status fails
-    # the gate; null confidence reads as 0.0
-    promo = (
-        ~ct.isin(NON_CANONICAL_TYPES)
-        & gw.fillna(False).astype(bool)
-        & (rs == "resolved")
-        & (conf.fillna(0.0) >= MIN_CANONICAL_CONFIDENCE)
-    )
+    promo = _promotable(f)
     out: list[pd.DataFrame] = []
     p = f[promo].reset_index(drop=True)
     if len(p):
@@ -253,12 +258,7 @@ def canonicalize_claims(
             neq_next[-1] = True
             neq_next[:-1] = neq_prev[1:]
             group_id = np.cumsum(neq_prev) - 1
-            promo = (
-                (~batch["claim_type"].isin(NON_CANONICAL_TYPES))
-                & batch["graph_worthy"].fillna(False).astype(bool)
-                & (batch["resolution_status"] == "resolved")
-                & (batch["canonical_confidence"].fillna(0.0) >= MIN_CANONICAL_CONFIDENCE)
-            ).to_numpy()
+            promo = _promotable(batch).to_numpy()
             any_promo = np.zeros(group_id[-1] + 1, dtype=bool)
             np.logical_or.at(any_promo, group_id, promo)
             fast = (keys != keys[0]) & (keys != keys[-1]) & (

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from .operators.canonicalize import (
     canonicalize_claims,
@@ -54,8 +54,27 @@ def _last_claim_wins(claims: DataFrame) -> DataFrame:
     return claims.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
+def _observed(df: DataFrame, **metrics: Column) -> tuple[DataFrame, Observation]:
+    """``df`` with named aggregate ``metrics`` gathered by whatever action
+    first runs it — counts without an extra Spark job. ``Observation.get``
+    blocks until that action has run, so observe only frames that are
+    always written."""
+    seen = Observation()
+    return df.observe(seen, *[m.alias(name) for name, m in metrics.items()]), seen
+
+
+def _rows_where(cond: Column) -> Column:
+    return F.count(F.when(cond, 1))
+
+
 @dataclass
 class PipelineResult:
+    """Rows this batch wrote, per table — not store totals (a resumed run
+    over already-stored documents reports all zeros). ``claims`` counts
+    extracted claims before the per-claim_id dedupe, ``conflicts`` the
+    batch's CONTRADICTS edges; every other field counts the rows handed to
+    that table's upsert."""
+
     documents: int
     chunks: int
     claims: int
@@ -100,6 +119,7 @@ def run_pipeline(
         )
     # One pass of the html kernel feeds both the chunk and claim stages:
     # materialize it once (staging parquet doubles as the stage checkpoint).
+    documents, documents_seen = _observed(documents, rows=F.count(F.lit(1)))
     store.overwrite(documents, f"_staging/{run_id}/documents")
     documents = store.read(spark, f"_staging/{run_id}/documents")
 
@@ -108,6 +128,7 @@ def run_pipeline(
 
     # --- stage 3: claims -------------------------------------------------------
     claims = extract_claims_stage(documents, persons, groups, run_ts=run_ts)
+    claims, claims_seen = _observed(claims, rows=F.count(F.lit(1)))
     store.overwrite(claims, f"_staging/{run_id}/claims")
     claims = store.read(spark, f"_staging/{run_id}/claims")
 
@@ -121,6 +142,18 @@ def run_pipeline(
             claims.select("canonical_key").dropDuplicates(), "canonical_key", "left_semi"
         )
     union = canonicalize_claims(claims, existing, seen_at=run_ts)
+    union, mutations_seen = _observed(
+        union,
+        canonicalized=_rows_where(
+            (F.col("record_type") == "claim_update")
+            & F.col("mutation_action").isin(
+                "insert_new_fact", "confirm_existing_fact", "supersede_current_fact"
+            )
+        ),
+        conflicts=_rows_where(
+            (F.col("record_type") == "edge") & (F.col("relation_type") == "CONTRADICTS")
+        ),
+    )
     store.overwrite(union, f"_staging/{run_id}/mutations")
     union = store.read(spark, f"_staging/{run_id}/mutations")
     facts = split_facts(union)
@@ -136,6 +169,7 @@ def run_pipeline(
 
     # --- stage 5: materialize ---------------------------------------------------
     store.upsert(documents.drop("message_id"), "documents", ["doc_id"])
+    chunks, chunks_seen = _observed(chunks, rows=F.count(F.lit(1)))
     store.upsert(chunks, "chunks", ["chunk_id"])
     store.upsert(updated_claims, "claims", ["claim_id"])
     store.upsert(claim_fact_edges, "claim_fact_edges", ["claim_id", "fact_id", "relation_type"])
@@ -149,7 +183,12 @@ def run_pipeline(
     facts_with_support = incremental_support(
         facts, store.read(spark, "claim_fact_edges")
     )
-    store.upsert(facts_with_support, "facts", ["fact_id"])
+    observed_facts, facts_seen = _observed(
+        facts_with_support,
+        current=_rows_where(F.col("status") == "current"),
+        superseded=_rows_where(F.col("status") == "superseded"),
+    )
+    store.upsert(observed_facts, "facts", ["fact_id"])
 
     # Typed graph edges are additive projections of rows (SCD-2 never
     # removes an edge; a supersede only adds one), so deriving them from the
@@ -158,25 +197,19 @@ def run_pipeline(
     # batch facts cover every touched key (incl. replayed prior versions),
     # so status-change edges are always present.
     graph_edges = graph_edges_from_outputs(updated_claims, facts_with_support, documents)
+    graph_edges, edges_seen = _observed(graph_edges, rows=F.count(F.lit(1)))
     store.upsert(graph_edges, "edges", ["src", "dst", "type"])
 
     # --- lineage (S15 analog): per-partition metrics, no driver-side loops -----
+    # the run-level figures were observed by the staging writes above
+    ingested_docs = documents_seen.get["rows"]
+    claims_total = claims_seen.get["rows"]
+    mutations = mutations_seen.get
+    canonicalized, conflict_count = mutations["canonicalized"], mutations["conflicts"]
     claim_part_metrics = (
         claims.groupBy("partition_id")
         .agg(F.countDistinct("doc_id").alias("docs_processed"), F.count("*").alias("claims_extracted"))
     )
-    outcome_metrics = claim_updates.agg(
-        F.sum(
-            F.when(
-                F.col("mutation_action").isin(
-                    "insert_new_fact", "confirm_existing_fact", "supersede_current_fact"
-                ),
-                1,
-            ).otherwise(0)
-        ).alias("claims_canonicalized"),
-    )
-    conflict_count = claim_fact_edges.filter(F.col("relation_type") == "CONTRADICTS").count()
-    canonicalized = outcome_metrics.collect()[0]["claims_canonicalized"] or 0
     runs = claim_part_metrics.select(
         F.lit(run_id).alias("run_id"),
         F.col("partition_id").cast("int"),
@@ -185,14 +218,12 @@ def run_pipeline(
         F.lit(run_ts).alias("processed_at"),
         F.col("docs_processed").cast("long"),
         F.col("claims_extracted").cast("long"),
-        F.lit(int(canonicalized)).cast("long").alias("claims_canonicalized"),
-        F.lit(int(conflict_count)).cast("long").alias("conflicts_found"),
+        F.lit(canonicalized).cast("long").alias("claims_canonicalized"),
+        F.lit(conflict_count).cast("long").alias("conflicts_found"),
         F.lit(None).cast("string").alias("errors_json"),
     )
     # run-level summary row (partition_id = -1): present even for a no-op
     # resume, so every run_id is visible in lineage
-    ingested_docs = documents.count()
-    claims_total = claims.count()
     summary = spark.createDataFrame(
         [
             (
@@ -201,10 +232,10 @@ def run_pipeline(
                 "run_summary",
                 "completed",
                 run_ts,
-                int(ingested_docs),
-                int(claims_total),
-                int(canonicalized),
-                int(conflict_count),
+                ingested_docs,
+                claims_total,
+                canonicalized,
+                conflict_count,
                 None,
             )
         ],
@@ -212,15 +243,15 @@ def run_pipeline(
     )
     store.upsert(runs.unionByName(summary), "runs", ["run_id", "partition_id", "stage"])
 
-    facts_df = store.read(spark, "facts")
+    fact_counts = facts_seen.get
     result = PipelineResult(
-        documents=store.read(spark, "documents").count(),
-        chunks=store.read(spark, "chunks").count(),
-        claims=store.read(spark, "claims").count(),
-        facts_current=facts_df.filter(F.col("status") == "current").count(),
-        facts_superseded=facts_df.filter(F.col("status") == "superseded").count(),
-        conflicts=int(conflict_count),
-        edges=store.read(spark, "edges").count(),
+        documents=ingested_docs,
+        chunks=chunks_seen.get["rows"],
+        claims=claims_total,
+        facts_current=fact_counts["current"],
+        facts_superseded=fact_counts["superseded"],
+        conflicts=conflict_count,
+        edges=edges_seen.get["rows"],
     )
     if claims_hook is not None:
         claims_hook(claims)

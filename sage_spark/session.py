@@ -44,6 +44,20 @@ def resolve_session_shape(
     return master, shuffle_partitions, submitted
 
 
+def default_driver_memory(
+    environ: os._Environ[str] | dict[str, str], phys_bytes: int | None = None
+) -> str:
+    """Driver heap for a standalone session: ``SAGE_SPARK_DRIVER_MEM`` when
+    set, else half the host's physical memory in whole GiB, clamped to
+    1g..16g. In local mode the executors run inside this heap; the other
+    half stays free for the Python workers and the JVM's off-heap use."""
+    if "SAGE_SPARK_DRIVER_MEM" in environ:
+        return environ["SAGE_SPARK_DRIVER_MEM"]
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(max(phys_bytes // 2**31, 1), 16)}g"
+
+
 def build_spark(
     app_name: str = "sage-spark",
     master: str | None = None,
@@ -80,9 +94,7 @@ def build_spark(
     if not submitted:
         # under spark-submit the driver JVM already exists; driver memory can
         # only come from the submit command line, so setting it here is noise
-        builder = builder.config(
-            "spark.driver.memory", os.environ.get("SAGE_SPARK_DRIVER_MEM", "16g")
-        )
+        builder = builder.config("spark.driver.memory", default_driver_memory(os.environ))
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

@@ -16,9 +16,11 @@ Two layouts:
   updates hash into (partition pruning on the scan) and rewrites ONLY those
   bucket dirs (dynamic partition overwrite) — per-batch cost scales with the
   batch's touched buckets, not the store, which is the parquet analog of an
-  Iceberg MERGE at 10^12-row store scale. Iceberg additionally gives atomic
-  snapshot commits; dynamic overwrite swaps each touched bucket dir
-  non-atomically, an accepted stand-in here.
+  Iceberg MERGE at 10^12-row store scale. Every bucketed write clusters its
+  rows on the bucket first, so each touched bucket dir is rewritten by one
+  task into exactly one file: a long ingest never fragments the dirs.
+  Iceberg additionally gives atomic snapshot commits; dynamic overwrite
+  swaps each touched bucket dir non-atomically, an accepted stand-in here.
 
 Full-table writes go to a temp dir then swap, so a killed job never leaves a
 half-written table.
@@ -30,7 +32,7 @@ import json
 import shutil
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 BUCKET_COL = "__bucket"
@@ -194,23 +196,36 @@ class TableStore:
                 self.overwrite(df.dropDuplicates(keys), table)
                 return
             existing = self.read(spark, table)
-            kept = existing.join(df.select(*keys).dropDuplicates(keys), on=keys, how="left_anti")
+            # an anti-join never multiplies rows: duplicate update keys need
+            # no dedupe (and no exchange) on its probe side
+            kept = existing.join(df.select(*keys), on=keys, how="left_anti")
             merged = kept.unionByName(df.dropDuplicates(keys), allowMissingColumns=True)
             self.overwrite(merged, table)
             return
 
-        updates = df.dropDuplicates(keys).withColumn(
-            BUCKET_COL, self._bucket_expr(layout_keys or keys)
+        # pin the lineage before it is consumed twice (the existing-bucket
+        # filter and the merge write): a nondeterministic upstream must not
+        # emit rows into a bucket absent from `touched`, or dynamic overwrite
+        # would drop that bucket's pre-existing rows. The checkpoint's own
+        # pass also observes the row count and the touched-bucket set (a
+        # bounded scalar set, <= self.buckets), so neither costs a job.
+        # Callers observe `df` too (run_pipeline counts its upsert inputs):
+        # keep the bucket repartition out of this pass, since adaptive
+        # execution drops an empty subtree below a repartition together with
+        # the metrics observed inside it.
+        seen = Observation()
+        updates = (
+            df.dropDuplicates(keys)
+            .withColumn(BUCKET_COL, self._bucket_expr(layout_keys or keys))
+            .observe(seen, F.count(F.lit(1)).alias("rows"), F.collect_set(BUCKET_COL).alias("touched"))
+            .localCheckpoint(eager=True)
         )
-        # pin the lineage before it is consumed by two separate actions (the
-        # touched-bucket collect and the overwrite): a nondeterministic
-        # upstream must not emit rows into a bucket absent from `touched`,
-        # or dynamic overwrite would drop that bucket's pre-existing rows
-        updates = updates.localCheckpoint(eager=True)
+        stats = seen.get
+        rows, touched = stats["rows"], sorted(stats["touched"])
         self._recover(table)
         target = self.path(table)
         if not target.exists():
-            if updates.isEmpty():
+            if not rows:
                 # creating a table from zero rows would write a partitioned
                 # dir with no parquet files (unreadable) — an empty batch
                 # against an absent table is a no-op instead
@@ -218,7 +233,7 @@ class TableStore:
             tmp = target.with_name(target.name + ".__tmp__")
             if tmp.exists():
                 shutil.rmtree(tmp)
-            updates.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(str(tmp))
+            self._write_buckets(updates, tmp)
             # layout rides inside tmp BEFORE the publish rename: a crash
             # after the rename (or a _recover that adopts this staged dir)
             # must never yield a bucketed table without its layout record
@@ -226,20 +241,27 @@ class TableStore:
             tmp.rename(target)
             return
         self._check_layout(table, layout_keys or keys)
-        # the touched-bucket list is a bounded scalar set (<= self.buckets),
-        # never data-sized
-        touched = sorted(r[0] for r in updates.select(BUCKET_COL).distinct().collect())
+        if not rows:
+            return
         existing = (
             spark.read.parquet(str(target)).filter(F.col(BUCKET_COL).isin(touched))
         )
-        kept = existing.join(updates.select(*keys).dropDuplicates(keys), on=keys, how="left_anti")
+        kept = existing.join(updates.select(*keys), on=keys, how="left_anti")
         merged = kept.unionByName(updates, allowMissingColumns=True)
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(BUCKET_COL)
-            .parquet(str(target))
-        )
+        self._write_buckets(merged, target, dynamic=True)
+
+    @staticmethod
+    def _write_buckets(df: DataFrame, path: Path, *, dynamic: bool = False) -> None:
+        """Partitioned write with each bucket's rows clustered into one task:
+        hash-repartitioning ON the bucket value makes every task own whole
+        buckets (adaptive execution may merge small partitions, never split
+        one), so each ``__bucket=K/`` dir the write touches is written by
+        exactly one task into exactly one file. ``dynamic`` replaces only
+        the bucket dirs present in ``df``."""
+        writer = df.repartition(F.col(BUCKET_COL)).write.mode("overwrite")
+        if dynamic:
+            writer = writer.option("partitionOverwriteMode", "dynamic")
+        writer.partitionBy(BUCKET_COL).parquet(str(path))
 
     def read_pruned(
         self,
@@ -279,9 +301,10 @@ class TableStore:
         return _reconcile(df, schema)
 
     def compact(self, spark: SparkSession, table: str, *, keep: Column | None = None) -> None:
-        """Maintenance rewrite (Iceberg's rewrite_data_files analog): every
-        keyed upsert appends one file-set into each touched bucket dir, so a
-        long-running ingest accumulates many small files per dir and scan
+        """Maintenance rewrite (Iceberg's rewrite_data_files analog). Upserts
+        already leave one file per touched bucket dir, but dirs written any
+        other way (appends from several tasks, tables laid down before
+        upserts clustered on the bucket) hold many small files and scan
         cost creeps up. Compaction rewrites the table so each bucket dir
         holds one file (rows and bucket assignment unchanged), via a temp
         dir + rename-aside swap so a killed compaction never corrupts the
@@ -320,14 +343,7 @@ class TableStore:
             shutil.rmtree(tmp)
         layout = self._read_layout(table)
         if partitioned:
-            # hash-repartition ON the bucket value: each task owns whole
-            # buckets, so every dir is written by exactly one task -> one file
-            (
-                df.repartition(self.buckets, F.col(BUCKET_COL))
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(str(tmp))
-            )
+            self._write_buckets(df, tmp)
         else:
             df.coalesce(1).write.mode("overwrite").parquet(str(tmp))
         if layout is not None:  # layout record rides along through the rewrite

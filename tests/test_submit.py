@@ -22,7 +22,7 @@ from pathlib import Path
 
 import pytest
 
-from sage_spark.session import _under_spark_submit, resolve_session_shape
+from sage_spark.session import _under_spark_submit, default_driver_memory, resolve_session_shape
 
 REPO = Path(__file__).resolve().parents[1]
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
@@ -45,6 +45,19 @@ def test_resolve_session_shape_under_submit() -> None:
     assert (master, shuffle) == ("local[2]", 3)
     assert _under_spark_submit({"PYSPARK_GATEWAY_SECRET": "x"})
     assert not _under_spark_submit({})
+
+
+def test_default_driver_memory_fits_the_host() -> None:
+    gib = 2**30
+    # half of physical memory, whole GiB, clamped to 1g..16g
+    assert default_driver_memory({}, 15 * gib + 512 * 2**20) == "7g"
+    assert default_driver_memory({}, 1 * gib) == "1g"
+    assert default_driver_memory({}, 256 * gib) == "16g"
+    # the environment override wins on any host
+    assert default_driver_memory({"SAGE_SPARK_DRIVER_MEM": "96g"}, 15 * gib) == "96g"
+    # this host: never more than it physically has
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert int(default_driver_memory({})[:-1]) * gib <= max(host, gib)
 
 
 def test_spark_submit_py_files_e2e(tmp_path: Path) -> None:
@@ -82,7 +95,7 @@ def test_spark_submit_py_files_e2e(tmp_path: Path) -> None:
         env=env,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
-    line = [l for l in proc.stdout.splitlines() if l.startswith("run sub1:")][-1]
+    line = [l for l in proc.stdout.splitlines() if l.startswith("run sub1 batch:")][-1]
     counts = dict(kv.split("=") for kv in line.split(": ", 1)[1].split())
     assert int(counts["documents"]) > 0
     assert int(counts["facts_current"]) > 0
