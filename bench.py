@@ -24,6 +24,56 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from sage_spark.session import build_spark  # noqa: E402
 
 
+# the timed per-query set; bench_extra.py times the same list by default
+HEADLINE = [
+    "agg_pricing_summary",
+    "join_revenue_by_nation",
+    "join_top_brands_by_revenue",
+    "window_top_order_per_customer",
+    "agg_event_type_daily",
+    "text_quality",
+    "text_language_id",
+    "dedup_exact_keep",
+    "dedup_minhash_candidates",
+    "sim_cosine_topk",
+    "sim_lsh_topk",
+    # round-2 operators, now wall-time-tracked so regressions surface
+    "join_asof_last_signup",
+    "join_range_after_purchase",
+    "agg_hypertable_rollup",
+    "graph_pagerank",
+    "text_pii_redacted",
+    "text_repetition_stats",
+    "text_unigram_logprob",
+    # round-4 surfaces
+    "kg_insight",
+    "chat_unread_counts",
+]
+
+
+def bench_queries() -> dict:
+    """Every declared query by name: ``queries_all()`` is the 50-slot driver
+    window PLUS every rotated-out query, so the bench set survives per-round
+    window rotation untouched and wall-time series stay like-for-like across
+    rounds. The driver-contract minhash query is sliced to doc_id<500 for
+    its serial-replay oracle; the bench keeps the full-corpus workload."""
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entrymod
+    from sage_spark.operators.dedup import minhash_lsh_candidates
+
+    queries = entrymod.queries_all()
+    queries["dedup_minhash_candidates"] = lambda s, d: minhash_lsh_candidates(
+        s.read.parquet(f"{d}/documents.parquet").withColumn("doc_id", F.col("doc_id").cast("string")),
+        "text",
+        "doc_id",
+        shingle_len=5,
+        num_hashes=64,
+        bands=8,
+    )
+    return queries
+
+
 def _burn_worker(out_q, seconds: float) -> None:
     import hashlib
 
@@ -257,50 +307,7 @@ def main() -> None:
     spark = build_spark(app_name="sage-bench", master=f"local[{cpus}]", shuffle_partitions=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")
 
-    import __spark_entry__ as entrymod
-
-    headline = [
-        "agg_pricing_summary",
-        "join_revenue_by_nation",
-        "join_top_brands_by_revenue",
-        "window_top_order_per_customer",
-        "agg_event_type_daily",
-        "text_quality",
-        "text_language_id",
-        "dedup_exact_keep",
-        "dedup_minhash_candidates",
-        "sim_cosine_topk",
-        "sim_lsh_topk",
-        # round-2 operators, now wall-time-tracked so regressions surface
-        "join_asof_last_signup",
-        "join_range_after_purchase",
-        "agg_hypertable_rollup",
-        "graph_pagerank",
-        "text_pii_redacted",
-        "text_repetition_stats",
-        "text_unigram_logprob",
-        # round-4 surfaces
-        "kg_insight",
-        "chat_unread_counts",
-    ]
-    # queries_all = the 50-slot driver window PLUS every rotated-out query:
-    # the bench set must survive per-round window rotation untouched so
-    # wall-time series stay like-for-like across rounds
-    queries = entrymod.queries_all()
-    # the driver-contract minhash query is sliced to doc_id<500 for its
-    # serial-replay oracle; the bench keeps the full-corpus workload
-    from pyspark.sql import functions as F  # noqa: E402
-
-    from sage_spark.operators.dedup import minhash_lsh_candidates  # noqa: E402
-
-    queries["dedup_minhash_candidates"] = lambda s, d: minhash_lsh_candidates(
-        s.read.parquet(f"{d}/documents.parquet").withColumn("doc_id", F.col("doc_id").cast("string")),
-        "text",
-        "doc_id",
-        shingle_len=5,
-        num_hashes=64,
-        bands=8,
-    )
+    queries = bench_queries()
     # warm up the JVM/codegen + python workers so one-shot timings measure
     # the engine, not JIT cold start
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").groupBy("l_returnflag").count().write.format(
@@ -313,7 +320,7 @@ def main() -> None:
     # recorded explicitly in the output JSON.
     runs_per_query = int(os.environ.get("SAGE_BENCH_RUNS", "2"))
     timings: dict[str, float] = {}
-    for name in headline:
+    for name in HEADLINE:
         fn = queries[name]
         best = float("inf")
         for _ in range(runs_per_query):

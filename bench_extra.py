@@ -22,30 +22,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from bench import HEADLINE, bench_queries  # noqa: E402
 from sage_spark.session import build_spark  # noqa: E402
-
-HEADLINE = [
-    "agg_pricing_summary",
-    "join_revenue_by_nation",
-    "join_top_brands_by_revenue",
-    "window_top_order_per_customer",
-    "agg_event_type_daily",
-    "text_quality",
-    "text_language_id",
-    "dedup_exact_keep",
-    "dedup_minhash_candidates",
-    "sim_cosine_topk",
-    "sim_lsh_topk",
-    "join_asof_last_signup",
-    "join_range_after_purchase",
-    "agg_hypertable_rollup",
-    "graph_pagerank",
-    "text_pii_redacted",
-    "text_repetition_stats",
-    "text_unigram_logprob",
-    "kg_insight",
-    "chat_unread_counts",
-]
 
 
 def main() -> None:
@@ -63,22 +41,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    import __spark_entry__ as entrymod
-
-    all_queries = entrymod.queries_all()
-    # match bench.py: the bench-timed minhash is the full-corpus workload
-    from pyspark.sql import functions as F
-
-    from sage_spark.operators.dedup import minhash_lsh_candidates
-
-    all_queries["dedup_minhash_candidates"] = lambda s, d: minhash_lsh_candidates(
-        s.read.parquet(f"{d}/documents.parquet").withColumn("doc_id", F.col("doc_id").cast("string")),
-        "text",
-        "doc_id",
-        shingle_len=5,
-        num_hashes=64,
-        bands=8,
-    )
+    all_queries = bench_queries()
 
     names = args.queries or HEADLINE
     # warm up JVM/codegen + python workers like bench.py does

@@ -55,12 +55,11 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--persons", default=None, help="parquet with (id, name[, email]) display rows")
     ap.add_argument("--messages", default=None, help="comma-separated message ids to scope to")
-    ap.add_argument("--store-buckets", type=int, default=16)
     args = ap.parse_args()
 
     spark = build_spark(app_name="sage-insight")
     spark.sparkContext.setLogLevel("WARN")
-    store = TableStore(args.store, buckets=args.store_buckets or None)
+    store = TableStore(args.store)
 
     documents = store.read(spark, "documents")
     if "origin_message_id" not in documents.columns:

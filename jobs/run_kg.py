@@ -46,11 +46,6 @@ def main() -> None:
     ap.add_argument("--embed-chunks", action="store_true")
     ap.add_argument("--synthetic", type=int, default=0, help="generate N synthetic docs instead of --input")
     ap.add_argument(
-        "--store-buckets", type=int, default=16,
-        help="hash-bucket the store tables so upserts rewrite only touched "
-             "buckets (0 = legacy whole-table rewrite)",
-    )
-    ap.add_argument(
         "--publish-catalog", default=None, metavar="NAMESPACE",
         help="after the run, materialize the store tables as catalog tables "
              "under this namespace (the north rule's node/edge table output)",
@@ -99,7 +94,7 @@ def main() -> None:
             [r.asDict() for r in spark.read.parquet(args.groups).collect()] if args.groups else []
         )
 
-    store = TableStore(args.store, buckets=args.store_buckets or None)
+    store = TableStore(args.store)
     claims_hook = None
     if args.maintain_components:
         from sage_spark.operators.components import claim_entity_edges, maintain_component_store

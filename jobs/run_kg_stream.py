@@ -55,7 +55,6 @@ def main() -> None:
         "--continuous", action="store_true",
         help="keep the query running (default: drain what's there and exit)",
     )
-    ap.add_argument("--store-buckets", type=int, default=16)
     ap.add_argument(
         "--maintain-components", action="store_true",
         help="fold each batch's entity-mention edges into a persisted "
@@ -71,7 +70,7 @@ def main() -> None:
     groups = (
         [r.asDict() for r in spark.read.parquet(args.groups).collect()] if args.groups else []
     )
-    store = TableStore(args.store, buckets=args.store_buckets or None)
+    store = TableStore(args.store)
 
     stream = stream_webtext_from_dir(
         spark,

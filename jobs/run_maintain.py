@@ -85,7 +85,6 @@ def main() -> None:
         "--synthetic", type=int, default=0,
         help="generate an N-doc synthetic batch instead of --input",
     )
-    ap.add_argument("--store-buckets", type=int, default=16)
     args = ap.parse_args()
 
     run_ts = args.run_ts or datetime.now(timezone.utc).isoformat()
@@ -107,7 +106,7 @@ def main() -> None:
             [r.asDict() for r in spark.read.parquet(args.groups).collect()] if args.groups else []
         )
 
-    store = TableStore(args.store, buckets=args.store_buckets or None)
+    store = TableStore(args.store)
     out = Path(args.output) if "://" not in args.output else None
 
     # --- the new batch, gated exactly like run_kg's resume path: only docs

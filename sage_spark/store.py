@@ -7,20 +7,20 @@ All row identities are content hashes (doc_id/claim_id/fact_id), so re-running
 any partition of any stage and upserting again is a no-op — that is the
 checkpoint/resume story the north rule requires.
 
-Two layouts:
-
-* legacy (``buckets=None``): ``upsert`` rewrites the whole table as
-  (existing ANTI-JOIN updates) UNION updates — simple, O(store) per batch.
-* hash-bucketed (``buckets=N``): rows live in ``__bucket=K/`` partition dirs
-  keyed by xxhash64 of the upsert key. An upsert reads ONLY the buckets its
-  updates hash into (partition pruning on the scan) and rewrites ONLY those
-  bucket dirs (dynamic partition overwrite) — per-batch cost scales with the
-  batch's touched buckets, not the store, which is the parquet analog of an
-  Iceberg MERGE at 10^12-row store scale. Every bucketed write clusters its
-  rows on the bucket first, so each touched bucket dir is rewritten by one
-  task into exactly one file: a long ingest never fragments the dirs.
-  Iceberg additionally gives atomic snapshot commits; dynamic overwrite
-  swaps each touched bucket dir non-atomically, an accepted stand-in here.
+Layout: rows live in ``__bucket=K/`` partition dirs keyed by xxhash64 of
+the upsert key (16 buckets unless the caller picks another count). An upsert
+reads ONLY the buckets its updates hash into (partition pruning on the scan)
+and rewrites ONLY those bucket dirs (dynamic partition overwrite) — per-batch
+cost scales with the batch's touched buckets, not the store, which is the
+parquet analog of an Iceberg MERGE at 10^12-row store scale. Every bucketed
+write clusters its rows on the bucket first, so each touched bucket dir is
+rewritten by one task into exactly one file: a long ingest never fragments
+the dirs. Each table records its bucket count and hash keys in
+``_LAYOUT.json``; upserts, pruned reads and compaction refuse a table whose
+record is missing (written flat, or externally) or differs from the store's,
+while plain ``read`` still serves it. Iceberg additionally gives atomic
+snapshot commits; dynamic overwrite swaps each touched bucket dir
+non-atomically, an accepted stand-in here.
 
 Full-table writes go to a temp dir then swap, so a killed job never leaves a
 half-written table.
@@ -40,7 +40,7 @@ LAYOUT_FILE = "_LAYOUT.json"
 
 
 class TableStore:
-    def __init__(self, root: str | Path, *, buckets: int | None = None) -> None:
+    def __init__(self, root: str | Path, *, buckets: int = 16) -> None:
         self.root = Path(root)
         self.root.mkdir(parents=True, exist_ok=True)
         self.buckets = buckets
@@ -110,10 +110,17 @@ class TableStore:
             json.dumps({"version": 1, "buckets": self.buckets, "layout_keys": layout_keys})
         )
 
-    def _read_layout(self, table: str) -> dict | None:
+    def _read_layout(self, table: str) -> dict:
+        """The table's layout record; a table without one (written flat,
+        before layout versioning, or externally) fails loudly rather than
+        being merged into, probed or compacted as if its dirs were hashed."""
         p = self.path(table) / LAYOUT_FILE
         if not p.exists():
-            return None
+            raise ValueError(
+                f"table {table!r} has no {LAYOUT_FILE}: it predates layout "
+                "versioning (or was written externally); rebuild it or record its "
+                "layout with adopt_layout() before upserting/probing/compacting"
+            )
         return json.loads(p.read_text())
 
     def _check_layout(self, table: str, layout_keys: list[str]) -> None:
@@ -122,12 +129,6 @@ class TableStore:
         out by (doc_id, band) probed by (band, bucket)) reads the WRONG dirs
         and misses rows with no error. Fail loudly instead."""
         rec = self._read_layout(table)
-        if rec is None:
-            raise ValueError(
-                f"bucketed table {table!r} has no {LAYOUT_FILE}: it predates layout "
-                "versioning (or was written externally); rebuild it or record its "
-                "layout with adopt_layout() before upserting/probing"
-            )
         if rec["buckets"] != self.buckets or rec["layout_keys"] != layout_keys:
             raise ValueError(
                 f"bucketed table {table!r} layout mismatch: stored "
@@ -177,10 +178,9 @@ class TableStore:
     ) -> None:
         """Iceberg-MERGE-equivalent: updates win over existing rows on key.
 
-        Legacy layout rewrites the whole table. Bucketed layout reads and
-        rewrites only the bucket dirs the updates hash into: the scan prunes
-        untouched ``__bucket=K/`` partitions and the write uses dynamic
-        partition overwrite, so per-batch IO is O(touched buckets).
+        Reads and rewrites only the bucket dirs the updates hash into: the
+        scan prunes untouched ``__bucket=K/`` partitions and the write uses
+        dynamic partition overwrite, so per-batch IO is O(touched buckets).
 
         ``layout_keys`` decouples the partition-dir hash from the upsert
         identity: lay the table out by the columns the READ side probes on
@@ -191,18 +191,6 @@ class TableStore:
         row could survive in a dir the new version's hash no longer touches.
         """
         spark = df.sparkSession
-        if self.buckets is None:
-            if not self.exists(table):
-                self.overwrite(df.dropDuplicates(keys), table)
-                return
-            existing = self.read(spark, table)
-            # an anti-join never multiplies rows: duplicate update keys need
-            # no dedupe (and no exchange) on its probe side
-            kept = existing.join(df.select(*keys), on=keys, how="left_anti")
-            merged = kept.unionByName(df.dropDuplicates(keys), allowMissingColumns=True)
-            self.overwrite(merged, table)
-            return
-
         # pin the lineage before it is consumed twice (the existing-bucket
         # filter and the merge write): a nondeterministic upstream must not
         # emit rows into a bucket absent from `touched`, or dynamic overwrite
@@ -278,15 +266,15 @@ class TableStore:
         batch's (band, bucket) pairs); the touched bucket-id set is bounded
         by ``self.buckets`` — a scalar list, never data-sized — and the scan
         prunes to those ``__bucket=K/`` dirs, the read-side twin of the
-        upsert's touched-bucket pruning. Falls back to a full read for
-        legacy (unbucketed) layouts, and REFUSES to prune a bucketed table
-        whose recorded layout differs from the probe's (a mismatched hash
-        would silently read the wrong dirs and miss rows). When ``schema``
-        is given the result is reconciled to it — missing columns (a table
-        written before a schema evolution, e.g. pre-``batch_seq`` index
-        rows) surface as typed nulls instead of an AnalysisException.
+        upsert's touched-bucket pruning. An absent table reads as empty;
+        a table whose layout record is missing or differs from the probe's
+        is REFUSED (a mismatched hash would silently read the wrong dirs
+        and miss rows). When ``schema`` is given the result is reconciled
+        to it — missing columns (a table written before a schema evolution,
+        e.g. pre-``batch_seq`` index rows) surface as typed nulls instead
+        of an AnalysisException.
         """
-        if self.buckets is None or not self.exists(table):
+        if not self.exists(table):
             return _reconcile(self.read(spark, table, schema), schema)
         keys = layout_keys or layout_values.columns
         self._check_layout(table, keys)
@@ -297,8 +285,7 @@ class TableStore:
             .collect()
         )
         df = spark.read.parquet(str(self.path(table))).filter(F.col(BUCKET_COL).isin(touched))
-        df = df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
-        return _reconcile(df, schema)
+        return _reconcile(df.drop(BUCKET_COL), schema)
 
     def compact(self, spark: SparkSession, table: str, *, keep: Column | None = None) -> None:
         """Maintenance rewrite (Iceberg's rewrite_data_files analog). Upserts
@@ -310,7 +297,7 @@ class TableStore:
         dir + rename-aside swap so a killed compaction never corrupts the
         table: the old table is renamed aside before the new one lands and
         ``_recover`` restores whichever complete copy survives a crash.
-        Unbucketed tables collapse to a single file.
+        A table without a layout record raises instead of being rewritten.
 
         ``keep`` optionally filters rows during the rewrite (rows where the
         predicate is false are dropped) — the eviction/TTL primitive for
@@ -321,11 +308,11 @@ class TableStore:
         target = self.path(table)
         if not target.exists():
             return
+        layout = self._read_layout(table)
         df = spark.read.parquet(str(target))
         if keep is not None:
             df = df.filter(keep)
-        partitioned = self.buckets is not None and BUCKET_COL in df.columns
-        if partitioned and df.isEmpty():
+        if df.isEmpty():
             # a partitionBy write of zero rows leaves a dir with no parquet
             # files — unreadable (UNABLE_TO_INFER_SCHEMA) and it wedges
             # every later read/upsert. Zero survivors (e.g. a TTL horizon
@@ -341,13 +328,9 @@ class TableStore:
         tmp = target.with_name(target.name + ".__compact__")
         if tmp.exists():
             shutil.rmtree(tmp)
-        layout = self._read_layout(table)
-        if partitioned:
-            self._write_buckets(df, tmp)
-        else:
-            df.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-        if layout is not None:  # layout record rides along through the rewrite
-            (tmp / LAYOUT_FILE).write_text(json.dumps(layout))
+        self._write_buckets(df, tmp)
+        # the layout record rides along through the rewrite
+        (tmp / LAYOUT_FILE).write_text(json.dumps(layout))
         self._swap_in(tmp, target)
 
     def drop(self, table: str) -> None:
@@ -372,11 +355,3 @@ def _reconcile(df: DataFrame, schema: StructType | None) -> DataFrame:
         for f in schema.fields
     ]
     return df.select(cols)
-
-
-def dedupe_latest(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
-    """Keep the newest row per key (window row_number == 1)."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(F.col(order_col).desc())
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")

@@ -470,16 +470,6 @@ def test_bucketed_store_compaction(spark, tmp_path):
     got = {r["k"]: r["v"] for r in store.read(spark, "t").collect()}
     assert got["id0_0"] == "NEW" and len(got) == 180
 
-    # unbucketed table collapses to one file
-    flat = TableStore(tmp_path / "fstore")
-    for batch in range(3):
-        flat.upsert(
-            spark.createDataFrame([(f"x{batch}", "v")], "k string, v string"), "t", ["k"]
-        )
-    flat.compact(spark, "t")
-    assert len(glob.glob(f"{tmp_path}/fstore/t/*.parquet")) == 1
-    assert flat.read(spark, "t").count() == 3
-
 
 def test_store_crash_recovery_and_layout_versioning(spark, tmp_path):
     """The round-4 advice items on store.py: (a) a crash inside the

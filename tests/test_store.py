@@ -1,9 +1,12 @@
-"""TableStore upserts on both layouts: the file shape a bucketed upsert
-leaves behind, the Spark jobs it costs, the empty-batch no-op, and the
-batch (not store) counts ``run_pipeline`` reports on a resumed run."""
+"""TableStore upserts on its hash-bucketed layout: the file shape an
+upsert leaves behind, the Spark jobs it costs, the empty-batch no-op, the
+16-bucket default and the refusal to merge into a table without a layout
+record, and the batch (not store) counts ``run_pipeline`` reports on a
+resumed run."""
 
 from __future__ import annotations
 
+import json
 import uuid
 from pathlib import Path
 
@@ -12,9 +15,9 @@ from pyspark.sql import functions as F
 
 from sage_spark.datagen import build_groups, synth_webtext
 from sage_spark.pipeline import PipelineResult, run_pipeline
-from sage_spark.store import TableStore
+from sage_spark.store import LAYOUT_FILE, TableStore
 
-LAYOUTS = {"bucketed": 4, "legacy": None}
+LAYOUTS = {"bucketed": 4}
 SCHEMA = "k string, v string"
 
 
@@ -58,16 +61,14 @@ def test_upserts_leave_one_file_per_bucket(spark, tmp_path, layout):
     assert {r["k"]: r["v"] for r in store.read(spark, "t").collect()} == expected
     assert store.read(spark, "t").columns == ["k", "v"]
     by_dir = _parquet_files(store.path("t"))
-    if layout == "bucketed":
-        assert sorted(d.name for d in by_dir) == [f"__bucket={k}" for k in range(4)]
-        assert {d.name: len(fs) for d, fs in by_dir.items() if len(fs) != 1} == {}
+    assert sorted(d.name for d in by_dir) == [f"__bucket={k}" for k in range(4)]
+    assert {d.name: len(fs) for d, fs in by_dir.items() if len(fs) != 1} == {}
 
 
 # Spark jobs of one merge upsert of ``_batch`` into an existing table, with
-# the suite's session (local[4], 4 shuffle partitions). The bucketed path
-# used to run a separate distinct().collect() for its touched buckets (9
-# jobs); the checkpoint now observes them. The legacy path is unchanged.
-MERGE_JOBS = {"bucketed": 8, "legacy": 6}
+# the suite's session (local[4], 4 shuffle partitions). The checkpoint pass
+# observes the touched buckets, so no separate job collects them.
+MERGE_JOBS = 8
 
 
 @pytest.mark.parametrize("layout", LAYOUTS)
@@ -75,7 +76,7 @@ def test_merge_upsert_job_count(spark, tmp_path, layout):
     store = TableStore(tmp_path / "s", buckets=LAYOUTS[layout])
     store.upsert(_batch(spark, 0)[0], "t", ["k"])
     df, _ = _batch(spark, 1)
-    assert _jobs(spark, lambda: store.upsert(df, "t", ["k"])) == MERGE_JOBS[layout]
+    assert _jobs(spark, lambda: store.upsert(df, "t", ["k"])) == MERGE_JOBS
 
 
 @pytest.mark.parametrize("layout", LAYOUTS)
@@ -84,17 +85,45 @@ def test_empty_batch_upsert_is_a_noop(spark, tmp_path, layout):
     empty = spark.createDataFrame([], SCHEMA)
     store.upsert(empty, "absent", ["k"])
     assert store.read(spark, "absent", empty.schema).count() == 0
-    if layout == "bucketed":
-        # a partitioned write of zero rows would leave an unreadable dir
-        assert not store.exists("absent")
+    # a partitioned write of zero rows would leave an unreadable dir
+    assert not store.exists("absent")
 
     df, rows = _batch(spark, 0)
     store.upsert(df, "t", ["k"])
     files = _parquet_files(store.path("t"))
     store.upsert(empty, "t", ["k"])
     assert {r["k"]: r["v"] for r in store.read(spark, "t").collect()} == rows
-    if layout == "bucketed":
-        assert _parquet_files(store.path("t")) == files  # nothing rewritten
+    assert _parquet_files(store.path("t")) == files  # nothing rewritten
+
+
+def test_default_layout_is_16_buckets_and_layoutless_tables_are_refused(spark, tmp_path):
+    """A store built without a bucket count lays tables out in 16 hashed
+    dirs with a layout record. A table without that record (written by
+    ``overwrite``, as a flat store was) or with another bucket count still
+    reads, but an upsert, pruned read or compaction of it raises instead of
+    merging into dirs it cannot prune."""
+    store = TableStore(tmp_path / "s")
+    df, rows = _batch(spark, 0, n=200)
+    store.upsert(df, "t", ["k"])
+    dirs = {d.name for d in _parquet_files(store.path("t"))}
+    assert dirs == {f"__bucket={k}" for k in range(16)}
+    layout = json.loads((store.path("t") / LAYOUT_FILE).read_text())
+    assert (layout["buckets"], layout["layout_keys"]) == (16, ["k"])
+
+    store.overwrite(df, "flat")
+    upd, _ = _batch(spark, 1, n=3)
+    with pytest.raises(ValueError, match=f"no {LAYOUT_FILE}"):
+        store.upsert(upd, "flat", ["k"])
+    with pytest.raises(ValueError, match=f"no {LAYOUT_FILE}"):
+        store.read_pruned(spark, "flat", upd.select("k"))
+    with pytest.raises(ValueError, match=f"no {LAYOUT_FILE}"):
+        store.compact(spark, "flat")
+    assert {r["k"]: r["v"] for r in store.read(spark, "flat").collect()} == rows
+
+    other = TableStore(tmp_path / "s", buckets=4)
+    with pytest.raises(ValueError, match="layout mismatch"):
+        other.upsert(upd, "t", ["k"])
+    assert {r["k"]: r["v"] for r in other.read(spark, "t").collect()} == rows
 
 
 def _totals(spark, store: TableStore) -> dict[str, int]:
