@@ -1,6 +1,6 @@
 """Vectorized MinHash signature kernel (numpy, Arrow-batched).
 
-The native signature pipeline (operators/dedup.minhash_signature_wide)
+The all-JVM signature pipeline (the oracle in tests/test_operators.py)
 builds each document's shingle array with a higher-order-function
 ``transform`` — ~1 interpreted substr call per shingle, the same
 outside-codegen class the round-4 repetition-stats rework removed — then
@@ -21,7 +21,7 @@ Normalization matches operators/textstats.char_ngrams exactly: JAVA
 use Python's unicode-aware ``\\s`` (same rule as kernel/expected.py).
 
 The hash-family constants here are the single source of truth; the JVM
-form (operators/dedup.py) and the serial oracle replay
+oracle form (tests/test_operators.py) and the serial oracle replay
 (kernel/expected.py) import them, so all three paths stay pinned.
 """
 

@@ -12,22 +12,16 @@ embedding        cosine near-dup over an embedding column
 
 Scale notes: every strategy keys its shuffle on a short hash/bucket column
 (never raw text); minhash bands bound the candidate-pair blowup; AQE's skew
-join handles hot buckets (boilerplate pages). The minhash itself is pure
-column arithmetic over xxhash64 — JVM-side, no Python."""
+join handles hot buckets (boilerplate pages). The minhash signature is one
+numpy kernel per Arrow batch (kernel/minhash.py), bit-identical to Spark's
+xxhash64 over the same shingles."""
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..kernel.minhash import MERSENNE31, hash_family
+from .spread import spread_input
 from .textstats import char_ngrams
-
-# (a*x+b) mod 2^31-1 minhash family. The field is 31-bit so every
-# intermediate product stays < 2^62 and never overflows a Spark LongType
-# under ANSI arithmetic. Constants live in kernel/minhash.py (the single
-# source shared by the JVM form, the Arrow kernel, and the oracle replay).
-_MERSENNE = MERSENNE31
-_hash_family = hash_family
 
 
 def normalized_text(col: Column) -> Column:
@@ -68,41 +62,22 @@ def minhash_signature_wide(
     *,
     shingle_len: int = 5,
     num_hashes: int = 64,
-    impl: str = "arrow",
 ) -> DataFrame:
     """MinHash signature as ``num_hashes`` concrete columns mh_0..mh_{n-1}.
 
-    ``impl="arrow"`` (default): one vectorized numpy kernel per Arrow batch
-    (kernel/minhash.py) — shingle windows, the bit-exact XXH64, and the
-    family mins all evaluated as matrix ops, no per-shingle anything.
-    Measured at 120k docs (local[16], warm): signature 13.8 s -> ~3 s; the
-    native form spends ~half its time in the interpreted HOF ``transform``
-    that builds the shingle array (~1500 substr lambda calls per doc).
-
-    ``impl="native"``: the all-JVM form — explode shingles -> one xxhash per
-    shingle row -> ONE groupBy with num_hashes min() aggregates, signature
-    landing in *materialized* aggregate columns so downstream band
-    expressions reference cheap attributes instead of re-inlining the whole
-    shingle pipeline per reference (which blows up codegen — 100x
-    slowdowns). Kept as the pure-JVM reference; the equivalence of the two
-    forms is pinned by tests/test_operators.py on corpus + edge cases."""
+    One vectorized numpy kernel per Arrow batch (kernel/minhash.py) —
+    shingle windows, the bit-exact XXH64, and the family mins all evaluated
+    as matrix ops, no per-shingle anything. Measured at 120k docs
+    (local[16], warm): signature 13.8 s -> ~3 s against the all-JVM
+    explode -> xxhash -> groupBy-min form, which spends ~half its time in
+    the interpreted HOF ``transform`` that builds the shingle array (~1500
+    substr lambda calls per doc). That form is the oracle in
+    tests/test_operators.py, which pins the two equal on corpus + edge
+    cases."""
     # A small input file arrives as one split and would run the signature
-    # single-threaded (the native explode multiplies rows ~300x; the Arrow
-    # kernel batches per partition) — spread it first.
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < max(2, target // 2):
-        df = df.repartition(target)
-    if impl == "arrow":
-        return _minhash_signature_arrow(df, text_col, id_col, shingle_len, num_hashes)
-    shingle_rows = df.select(
-        F.col(id_col), F.explode(F.array_distinct(char_ngrams(F.col(text_col), shingle_len))).alias("__sh")
-    ).select(F.col(id_col), F.pmod(F.xxhash64("__sh"), F.lit(_MERSENNE)).alias("__h"))
-    aggs = []
-    for i in range(num_hashes):
-        a, b = _hash_family(i)
-        aggs.append(F.min((F.col("__h") * F.lit(a) + F.lit(b)) % _MERSENNE).alias(f"mh_{i}"))
-    return shingle_rows.groupBy(id_col).agg(*aggs)
+    # single-threaded (the Arrow kernel batches per partition) — spread it
+    # first.
+    return _minhash_signature_arrow(spread_input(df), text_col, id_col, shingle_len, num_hashes)
 
 
 def _minhash_signature_arrow(

@@ -1,19 +1,22 @@
 """PageRank over the entity graph — the iterative-algorithm pattern.
 
-Classic damped PageRank with uniform dangling-mass redistribution, as pure
-DataFrame joins/aggregations: each iteration is one join (ranks x edges),
-one groupBy(dst) sum, and one scalar aggregate for the dangling mass.
-``localCheckpoint`` truncates lineage per iteration so the plan stays flat
-at any iteration count (the same discipline as connected components,
+Damped PageRank and personalized PageRank share one power iteration over a
+``(v, rank, p, deg)`` vertex state, where ``p`` is the teleport vector
+(uniform for PageRank, the seed set for personalized PageRank) and ``deg``
+the out-degree (null for dangling vertices, whose mass restarts along
+``p``). Each iteration is pure DataFrame joins/aggregations: one join
+(ranks x edges), one groupBy(dst) sum, and one scalar aggregate for the
+dangling mass. ``localCheckpoint`` truncates lineage every
+``_CHECKPOINT_EVERY`` iterations so the plan stays flat at any iteration
+count (the same discipline as connected components,
 operators/components.py).
 
 Scale notes: ranks and degrees are (vertex, double) tables — the shuffles
 key on vertex ids only. For the per-iteration ranks⋈edges join the edge
 side can be made exchange-free: feed a src-bucketed table through
 ``pagerank_on_bucketed_edges`` (survives AQE; the 10^12-edge deployment
-shape) or pre-pin with ``partition_edges_by_src`` (AQE off). The dangling
-term is a single scalar per iteration (an aggregate, not a collect of data
-rows).
+shape). The dangling term is a single scalar per iteration (an aggregate,
+not a collect of data rows).
 
 Reference anchor: the entity graph this ranks is the subject/object mention
 graph the reference materializes in Neo4j (app/saia.py:1184-1215);
@@ -24,18 +27,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def partition_edges_by_src(e: DataFrame) -> DataFrame:
-    """Pin the edge table to HashPartitioning(src, shuffle-partitions) and
-    checkpoint it: localCheckpoint preserves the physical partitioning in
-    the LogicalRDD, so every subsequent equi-join/agg keyed on ``src``
-    satisfies its distribution requirement from the checkpoint — no
-    edge-side Exchange. CAVEAT (plan-measured): AQE's re-planning does not
-    honor LogicalRDD partitioning, so this only helps with
-    spark.sql.adaptive.enabled=false; under AQE use the bucketed-TABLE path
-    (pagerank_on_bucketed_edges), whose scan partitioning AQE does respect."""
-    n = int(e.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return e.repartition(n, "src").localCheckpoint(eager=True)
+# Lineage is truncated every _CHECKPOINT_EVERY iterations. The cadence is a
+# measured trade: `ranks` appears twice in each iteration's plan
+# (dangling-mass aggregate + contribution join), so k un-checkpointed
+# iterations grow the logical plan exponentially — cadence 2 benched fastest
+# (6.3 s vs 9.1 s at 1 and 7.2 s at 4 for the 20-iteration contract graph);
+# per-iteration eager actions were the round-3 bottleneck, plan blowup
+# punishes long cadences. Re-swept in round 5 under the 4-shuffle-partition
+# contract config: cadences 1-4 read 9.7-14.4 s within window noise,
+# cadence 10 ran past a 15-minute budget — the exponential-plan cliff is
+# real. The cadence never changes values (pinned in tests/test_graph_ops.py).
+_CHECKPOINT_EVERY = 2
 
 
 def pagerank_on_bucketed_edges(spark, table: str, **kwargs) -> DataFrame:
@@ -51,6 +53,15 @@ def pagerank_on_bucketed_edges(spark, table: str, **kwargs) -> DataFrame:
     return pagerank(read_bucketed(spark, table), prepartitioned=True, **kwargs)
 
 
+def _edge_set(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(src, dst) with set semantics, matching the MERGE-built reference
+    graph: raw mention edges repeat, and multiplicity would skew out-degree
+    and ranks."""
+    return edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).dropDuplicates(
+        ["src", "dst"]
+    )
+
+
 def pagerank(
     edges: DataFrame,
     *,
@@ -59,47 +70,26 @@ def pagerank(
     damping: float = 0.85,
     iterations: int = 20,
     tol: float | None = None,
-    checkpoint_every: int = 2,
     prepartitioned: bool = False,
 ) -> DataFrame:
     """Returns (v, rank); ranks sum to 1. Edges are de-duplicated (set
     semantics, matching the MERGE-built reference graph).
 
-    Lineage is truncated every ``checkpoint_every`` iterations. The cadence
-    is a measured trade: `ranks` appears twice in each iteration's plan
-    (dangling-mass aggregate + contribution join), so k un-checkpointed
-    iterations grow the logical plan exponentially — cadence 2 benched fastest
-    (6.3 s vs 9.1 s at 1 and 7.2 s at 4 for the 20-iteration contract
-    graph); per-iteration eager actions were the round-3 bottleneck, plan
-    blowup punishes long cadences. Re-swept in round 5 under the 4-shuffle-
-    partition contract config: cadences 1-4 read 9.7-14.4 s within window
-    noise (no change warranted), cadence 10 ran past a 15-minute budget —
-    the exponential-plan cliff is real. With ``tol`` set, stops
-    early once the L1 delta between consecutive checkpointed states drops
-    below it — the fixed-point contraction bound |r_k - r_inf|_1 <=
-    delta * d/(1-d) makes that a certified convergence test. ``tol=None``
-    runs exactly ``iterations`` rounds (bit-stable vs the serial oracle)."""
-    if prepartitioned:
-        # caller provides a src-co-located edge set (e.g. a bucketed table
-        # via pagerank_on_bucketed_edges): do NOT checkpoint or re-shuffle
-        # it — that would erase the scan partitioning that makes the
-        # iteration joins exchange-free. The set-semantics dedup still
-        # applies (raw mention edges repeat; multiplicity would skew
-        # out-degree and ranks) and stays exchange-free: HashPartitioning
-        # on src satisfies the (src, dst) clustering the dedup needs, so
-        # Catalyst plans it partition-local (asserted in test_plans).
-        e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).dropDuplicates(
-            ["src", "dst"]
-        )
-    else:
-        e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).dropDuplicates(
-            ["src", "dst"]
-        )
+    With ``tol`` set, stops early once the L1 delta between consecutive
+    checkpointed states drops below it — the fixed-point contraction bound
+    |r_k - r_inf|_1 <= delta * d/(1-d) makes that a certified convergence
+    test. ``tol=None`` runs exactly ``iterations`` rounds (bit-stable vs the
+    serial oracle)."""
+    # a prepartitioned (src-co-located) edge set, e.g. a bucketed table via
+    # pagerank_on_bucketed_edges, is neither checkpointed nor re-shuffled:
+    # that would erase the scan partitioning that makes the iteration joins
+    # exchange-free. Its dedup stays exchange-free too: HashPartitioning on
+    # src satisfies the (src, dst) clustering it needs, so Catalyst plans it
+    # partition-local (asserted in test_plans).
+    e = _edge_set(edges, src, dst)
+    if not prepartitioned:
         e = e.localCheckpoint(eager=True)
     verts = e.select(F.col("src").alias("v")).unionByName(e.select(F.col("dst").alias("v"))).distinct()
-    # out-degree is loop-invariant: join it into the vertex STATE once, so
-    # no iteration re-joins the degree table (r6 rework — one join and one
-    # groupBy per iteration instead of three joins)
     out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
     state = (
         verts.join(out_deg.withColumnRenamed("src", "v"), "v", "left")
@@ -110,80 +100,18 @@ def pagerank(
         F.count("*").alias("n"),
         F.count(F.when(F.col("deg").isNull(), True)).alias("n_dangling"),
     ).collect()[0]
-    n, has_dangling = counts["n"], counts["n_dangling"] > 0
+    n = counts["n"]
     if n == 0:
         return state.select("v").withColumn("rank", F.lit(0.0))
-    ranks = state.select("v", F.lit(1.0 / n).alias("rank"), "deg")
-    prev_checkpointed = ranks
-    for it in range(iterations):
-        # the dangling mass aggregates into a broadcast 1-row frame, so the
-        # whole iteration is a single distributed plan with no driver
-        # round-trip for the scalar; when the graph has no dangling vertex
-        # the term is identically 0.0 and the aggregate (and its broadcast
-        # build job per iteration) is skipped outright
-        if has_dangling:
-            dangling = F.broadcast(
-                ranks.agg(
-                    F.coalesce(
-                        F.sum(F.when(F.col("deg").isNull(), F.col("rank"))), F.lit(0.0)
-                    ).alias("__dang")
-                )
-            )
-        contribs = e.join(
-            ranks.filter(F.col("deg").isNotNull()).withColumnRenamed("v", "src"), "src"
-        ).select(
-            F.col("dst").alias("v"),
-            (F.col("rank") / F.col("deg")).alias("c"),
-            F.lit(None).cast("long").alias("deg"),
-        )
-        # vertices with no inbound contribution re-enter through a zero row
-        # unioned into the SAME aggregation (one shuffle) instead of a
-        # per-iteration left join back to the vertex table; max(deg) picks
-        # the single non-null degree each vertex carries
-        summed = (
-            contribs.unionByName(ranks.select("v", F.lit(0.0).alias("c"), "deg"))
-            .groupBy("v")
-            .agg(F.sum("c").alias("s"), F.max("deg").alias("deg"))
-        )
-        if has_dangling:
-            ranks = summed.join(dangling).select(
-                "v",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("s"), F.lit(0.0)) + F.col("__dang") / n)
-                ).alias("rank"),
-                "deg",
-            )
-        else:
-            ranks = summed.select(
-                "v",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("rank"),
-                "deg",
-            )
-        at_boundary = (it + 1) % max(checkpoint_every, 1) == 0 or it == iterations - 1
-        if at_boundary:
-            # lazy checkpoints truncate the plan immediately but fold the
-            # materialization jobs into the caller's one action (measured
-            # ~15% off the 20-iteration wall vs one eager job per boundary);
-            # the tol path needs the ranks NOW for the delta, so it stays
-            # eager there
-            ranks = ranks.localCheckpoint(eager=tol is not None)
-            if tol is not None and it < iterations - 1:
-                delta = (
-                    ranks.join(
-                        prev_checkpointed.select("v", F.col("rank").alias("__prev")), "v"
-                    )
-                    .agg(F.sum(F.abs(F.col("rank") - F.col("__prev"))).alias("d"))
-                    .collect()[0]["d"]
-                )
-                if delta is not None and delta <= tol:
-                    return ranks.select("v", "rank")
-            prev_checkpointed = ranks
-    return ranks.select("v", "rank")
+    ranks = state.select("v", F.lit(1.0 / n).alias("rank"), F.lit(1.0 / n).alias("p"), "deg")
+    return _power_iteration(
+        e,
+        ranks,
+        damping=damping,
+        iterations=iterations,
+        has_dangling=counts["n_dangling"] > 0,
+        tol=tol,
+    )
 
 
 def personalized_pagerank(
@@ -194,7 +122,6 @@ def personalized_pagerank(
     dst: str = "dst",
     damping: float = 0.85,
     iterations: int = 20,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Personalized PageRank: random walks restart at the SEED set instead
     of uniformly — rank(v) measures proximity to the seeds, which is the
@@ -231,18 +158,13 @@ def personalized_pagerank(
         n_seeds = len(set(seeds))
         seed_df = spark.createDataFrame([(s,) for s in sorted(set(seeds))], "v string")
     p0 = 1.0 / n_seeds
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).dropDuplicates(
-        ["src", "dst"]
-    ).localCheckpoint(eager=True)
+    e = _edge_set(edges, src, dst).localCheckpoint(eager=True)
     verts = (
         e.select(F.col("src").alias("v"))
         .unionByName(e.select(F.col("dst").alias("v")))
         .unionByName(seed_df)
         .distinct()
     )
-    # vertex STATE (teleport p on seeds, loop-invariant out-degree) built
-    # once: no iteration re-joins the teleport or degree tables (the same
-    # fused-state shape as pagerank, r6)
     out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
     state = (
         verts.join(F.broadcast(seed_df.withColumn("__seed", F.lit(True))), "v", "left")
@@ -251,14 +173,39 @@ def personalized_pagerank(
         .localCheckpoint(eager=True)
     )
     ranks = state.select("v", F.col("p").alias("rank"), "p", "deg")
+    # no sink count here: it would add a job to every query, and the
+    # dangling aggregate simply reads 0.0 on a sink-free graph
+    return _power_iteration(e, ranks, damping=damping, iterations=iterations, has_dangling=True)
+
+
+def _power_iteration(
+    e: DataFrame,
+    ranks: DataFrame,
+    *,
+    damping: float,
+    iterations: int,
+    has_dangling: bool,
+    tol: float | None = None,
+) -> DataFrame:
+    """rank_{t+1}(v) = (1-d)·p(v) + d·(Σ in-contribs + dangling·p(v)) over
+    the (v, rank, p, deg) state ``ranks`` and the deduplicated edge set
+    ``e``; returns (v, rank). The teleport vector and the out-degree live
+    in the state, built once, so no iteration re-joins a loop-invariant
+    table. ``has_dangling=False`` promises the graph has no sink, which
+    drops the per-iteration dangling aggregate and its broadcast job."""
+    prev_checkpointed = ranks
     for it in range(iterations):
-        dangling = F.broadcast(
-            ranks.agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("deg").isNull(), F.col("rank"))), F.lit(0.0)
-                ).alias("__dang")
+        # the dangling mass aggregates into a broadcast 1-row frame, so the
+        # whole iteration is a single distributed plan with no driver
+        # round-trip for the scalar
+        if has_dangling:
+            dangling = F.broadcast(
+                ranks.agg(
+                    F.coalesce(
+                        F.sum(F.when(F.col("deg").isNull(), F.col("rank"))), F.lit(0.0)
+                    ).alias("__dang")
+                )
             )
-        )
         contribs = e.join(
             ranks.filter(F.col("deg").isNotNull()).withColumnRenamed("v", "src"), "src"
         ).select(
@@ -267,21 +214,41 @@ def personalized_pagerank(
             F.lit(None).cast("double").alias("p"),
             F.lit(None).cast("long").alias("deg"),
         )
+        # vertices with no inbound contribution re-enter through a zero row
+        # unioned into the SAME aggregation (one shuffle) instead of a
+        # per-iteration left join back to the vertex table; max(p) and
+        # max(deg) pick the single non-null value each vertex carries
         summed = (
             contribs.unionByName(ranks.select("v", F.lit(0.0).alias("c"), "p", "deg"))
             .groupBy("v")
             .agg(F.sum("c").alias("s"), F.max("p").alias("p"), F.max("deg").alias("deg"))
         )
-        ranks = summed.join(dangling).select(
+        inflow = F.coalesce(F.col("s"), F.lit(0.0))
+        if has_dangling:
+            summed = summed.join(dangling)
+            inflow = inflow + F.col("__dang") * F.col("p")
+        ranks = summed.select(
             "v",
-            (
-                F.lit(1.0 - damping) * F.col("p")
-                + F.lit(damping)
-                * (F.coalesce(F.col("s"), F.lit(0.0)) + F.col("__dang") * F.col("p"))
-            ).alias("rank"),
+            (F.lit(1.0 - damping) * F.col("p") + F.lit(damping) * inflow).alias("rank"),
             "p",
             "deg",
         )
-        if (it + 1) % max(checkpoint_every, 1) == 0 or it == iterations - 1:
-            ranks = ranks.localCheckpoint(eager=False)
+        if (it + 1) % _CHECKPOINT_EVERY == 0 or it == iterations - 1:
+            # lazy checkpoints truncate the plan immediately but fold the
+            # materialization jobs into the caller's one action (measured
+            # ~15% off the 20-iteration wall vs one eager job per boundary);
+            # the tol path needs the ranks NOW for the delta, so it stays
+            # eager there
+            ranks = ranks.localCheckpoint(eager=tol is not None)
+            if tol is not None and it < iterations - 1:
+                delta = (
+                    ranks.join(
+                        prev_checkpointed.select("v", F.col("rank").alias("__prev")), "v"
+                    )
+                    .agg(F.sum(F.abs(F.col("rank") - F.col("__prev"))).alias("d"))
+                    .collect()[0]["d"]
+                )
+                if delta is not None and delta <= tol:
+                    return ranks.select("v", "rank")
+            prev_checkpointed = ranks
     return ranks.select("v", "rank")

@@ -75,52 +75,38 @@ def with_lsh_bucket(
     n_planes: int = 8,
     seed: int = 13,
     out_col: str = "lsh_bucket",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Random-hyperplane (cosine) LSH signature: n_planes sign bits packed
     into one long.
 
-    ``impl="arrow"`` (default): one numpy matmul per Arrow batch —
-    (batch x dim) @ (dim x n_planes) then sign-pack. The native column form
-    evaluates n_planes ``aggregate(zip_with(...))`` HOF lambdas per row
-    INTERPRETED (outside codegen; the same class the MinHash/bigram
-    reworks removed) and measured 2x slower on the 20k x 64 table. The
-    sign of a dot product is insensitive to summation order (it would take
+    One numpy matmul per Arrow batch — (batch x dim) @ (dim x n_planes)
+    then sign-pack. The pure-column form (n_planes ``aggregate(zip_with(...))``
+    HOF lambdas per row, evaluated INTERPRETED outside codegen) measured 2x
+    slower on the 20k x 64 table; it is the oracle in tests. The sign of a
+    dot product is insensitive to summation order (it would take
     |dot| < 1e-16 to flip), and the similarity SCORE still comes from the
-    unchanged JVM expression over the pruned candidates, so results are
-    bit-stable vs the native path (equality pinned by test).
+    JVM expression over the pruned candidates, so results are bit-stable
+    vs the column form (equality pinned by tests/test_operators.py)."""
+    import numpy as np
+    import pandas as pd
 
-    ``impl="native"``: the pure-column form, kept as the dependency-free
-    reference."""
-    if impl == "arrow":
-        import math as _math
+    planes = np.array([_hyperplane(dim, p, seed) for p in range(n_planes)]).T  # (dim, P)
+    weights = (1 << np.arange(n_planes)).astype(np.int64)
 
-        import numpy as np
-        import pandas as pd
+    # no signature annotations: postponed evaluation (PEP 563) plus the
+    # function-scoped pandas import would break pyspark's hint
+    # resolution; the return type is declared explicitly
+    @F.pandas_udf("long")
+    def _bucket(embs):
+        mask = embs.notna()
+        out = pd.Series([None] * len(embs), dtype="object")
+        if mask.any():
+            m = np.array(embs[mask].tolist(), dtype=np.float64)
+            dots = m @ planes
+            out[mask] = ((dots >= 0).astype(np.int64) * weights).sum(axis=1)
+        return out
 
-        planes = np.array([_hyperplane(dim, p, seed) for p in range(n_planes)]).T  # (dim, P)
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-
-        # no signature annotations: postponed evaluation (PEP 563) plus the
-        # function-scoped pandas import would break pyspark's hint
-        # resolution; the return type is declared explicitly
-        @F.pandas_udf("long")
-        def _bucket(embs):
-            mask = embs.notna()
-            out = pd.Series([None] * len(embs), dtype="object")
-            if mask.any():
-                m = np.array(embs[mask].tolist(), dtype=np.float64)
-                dots = m @ planes
-                out[mask] = ((dots >= 0).astype(np.int64) * weights).sum(axis=1)
-            return out
-
-        return df.withColumn(out_col, _bucket(F.col(embedding_col)))
-    bucket = F.lit(0).cast("long")
-    for p in range(n_planes):
-        plane = _hyperplane(dim, p, seed)
-        sign_bit = (_dot(F.col(embedding_col), F.array(*[F.lit(v) for v in plane])) >= 0).cast("long")
-        bucket = bucket + sign_bit * F.lit(2**p)
-    return df.withColumn(out_col, bucket)
+    return df.withColumn(out_col, _bucket(F.col(embedding_col)))
 
 
 def lsh_topk(

@@ -11,8 +11,6 @@ every core for the expensive per-row work.
 Scale behaviour: the guard only fires when the scan delivers fewer splits
 than half the cores, which a warehouse-scale table (thousands of row groups)
 never does — there the function is an exact no-op and no shuffle is added.
-The same rule already lived inline in the MinHash signature operator; this
-module is the shared form.
 """
 
 from __future__ import annotations
@@ -20,15 +18,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread_input(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def spread_input(df: DataFrame) -> DataFrame:
     """Repartition ``df`` to the session's default parallelism iff its
-    current partition count is below ``min_partitions`` (default: half the
-    cores, floor 2). Row-to-partition assignment is deterministic (Spark
-    sorts before round-robin repartition), and every caller's result is
+    current partition count is below half the cores (floor 2).
+    Row-to-partition assignment is deterministic (Spark sorts before
+    round-robin repartition), and every caller's result is
     partitioning-invariant anyway."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    threshold = min_partitions if min_partitions is not None else max(2, target // 2)
-    if df.rdd.getNumPartitions() < threshold:
+    if df.rdd.getNumPartitions() < max(2, target // 2):
         return df.repartition(target)
     return df

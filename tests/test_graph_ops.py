@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sage_spark.kernel.retrieval import (
@@ -17,10 +18,19 @@ from sage_spark.operators.graph import (
     ist_display,
 )
 
-from .test_retrieval_parity import services
+
+def _reference_services():
+    """The reference's read-side services module, loaded on first use so
+    only the parity tests that need it skip when it is absent."""
+    try:
+        from .test_retrieval_parity import services
+    except ImportError as exc:
+        pytest.skip(f"reference services unavailable: {exc}")
+    return services
 
 
 def test_displayable_entity_parity():
+    services = _reference_services()
     cases = [
         "Alice Johnson", "EMP001", "currentuser", "unknown", "sage", "chat-msg-42",
         "d1-chunk-3", "assignment::direct:a:b::send-report", "direct:a:b",
@@ -32,6 +42,7 @@ def test_displayable_entity_parity():
 
 
 def test_ist_formatting_parity():
+    services = _reference_services()
     samples = [
         "2026-04-01T10:00:00+00:00",
         "2026-04-01T10:00:00Z",
@@ -174,10 +185,11 @@ def test_pagerank_properties_and_replay_agreement(spark):
         assert abs(got[v] - exp[v]) < 1e-9, v
 
 
-def test_pagerank_early_exit_converges_to_fixed_point(spark):
+def test_pagerank_early_exit_converges_to_fixed_point(spark, monkeypatch):
     """tol-based early exit must land on the same fixed point as a long
     exact run (contraction bound |r_k - r_inf|_1 <= delta*d/(1-d)), and
     sparser checkpoint cadence must not change values at all."""
+    import sage_spark.operators.pagerank as pr_mod
     from sage_spark.operators.pagerank import pagerank
 
     edges = [("a", "hub"), ("b", "hub"), ("c", "hub"), ("hub", "a"), ("a", "b"), ("b", "c")]
@@ -188,9 +200,32 @@ def test_pagerank_early_exit_converges_to_fixed_point(spark):
     for v in exact:
         assert abs(early[v] - exact[v]) < 1e-6, v
     # cadence-only change (tol=None) is bit-stable vs per-iteration checkpoints
-    a = {r["v"]: r["rank"] for r in pagerank(df, iterations=7, checkpoint_every=1).collect()}
-    b = {r["v"]: r["rank"] for r in pagerank(df, iterations=7, checkpoint_every=4).collect()}
+    monkeypatch.setattr(pr_mod, "_CHECKPOINT_EVERY", 1)
+    a = {r["v"]: r["rank"] for r in pagerank(df, iterations=7).collect()}
+    monkeypatch.setattr(pr_mod, "_CHECKPOINT_EVERY", 4)
+    b = {r["v"]: r["rank"] for r in pagerank(df, iterations=7).collect()}
     assert a == b
+
+
+def test_pagerank_is_personalized_pagerank_seeded_everywhere(spark):
+    """PageRank is the special case of personalized PageRank whose teleport
+    vector is uniform over every vertex: the two operators share one
+    recurrence, so seeding PPR with the whole vertex set must reproduce
+    PageRank, on a graph with dangling vertices and one without."""
+    from sage_spark.operators.pagerank import pagerank, personalized_pagerank
+
+    graphs = [
+        [("a", "hub"), ("b", "hub"), ("c", "hub"), ("hub", "a"), ("a", "b"), ("b", "c"), ("c", "sink")],
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "b")],
+    ]
+    for edges in graphs:
+        df = spark.createDataFrame(edges, "src string, dst string")
+        verts = sorted({v for edge in edges for v in edge})
+        pr = {r["v"]: r["rank"] for r in pagerank(df, iterations=15).collect()}
+        ppr = {r["v"]: r["rank"] for r in personalized_pagerank(df, verts, iterations=15).collect()}
+        assert set(pr) == set(ppr) == set(verts)
+        for v in verts:
+            assert abs(pr[v] - ppr[v]) < 1e-12, v
 
 
 def test_facts_as_of_boundary_semantics(spark):

@@ -94,6 +94,23 @@ def test_minhash_signature_deterministic(spark, docs_df):
     assert [r["minhash"] for r in a] == [r["minhash"] for r in b]
 
 
+def _minhash_signature_native(df, text_col, id_col, *, shingle_len=5, num_hashes=64):
+    """The all-JVM MinHash signature, kept here as the oracle for the Arrow
+    kernel: explode shingles -> one xxhash per shingle row -> ONE groupBy
+    with num_hashes min() aggregates over the (a*x+b) mod 2^31-1 family."""
+    from sage_spark.kernel.minhash import MERSENNE31, hash_family
+    from sage_spark.operators.textstats import char_ngrams
+
+    shingle_rows = df.select(
+        F.col(id_col), F.explode(F.array_distinct(char_ngrams(F.col(text_col), shingle_len))).alias("__sh")
+    ).select(F.col(id_col), F.pmod(F.xxhash64("__sh"), F.lit(MERSENNE31)).alias("__h"))
+    aggs = []
+    for i in range(num_hashes):
+        a, b = hash_family(i)
+        aggs.append(F.min((F.col("__h") * F.lit(a) + F.lit(b)) % MERSENNE31).alias(f"mh_{i}"))
+    return shingle_rows.groupBy(id_col).agg(*aggs)
+
+
 def test_minhash_arrow_matches_native_jvm(spark, docs_df):
     """The Arrow signature kernel must be bit-identical to the all-JVM
     explode+agg form — on the fixture corpus AND on adversarial rows:
@@ -117,13 +134,13 @@ def test_minhash_arrow_matches_native_jvm(spark, docs_df):
         "doc_id int, text string",
     )
     df = docs_df.select("doc_id", "text").unionByName(tricky)
-    arrow = minhash_signature_wide(df, "text", "doc_id", impl="arrow").orderBy("doc_id").collect()
-    native = minhash_signature_wide(df, "text", "doc_id", impl="native").orderBy("doc_id").collect()
+    arrow = minhash_signature_wide(df, "text", "doc_id").orderBy("doc_id").collect()
+    native = _minhash_signature_native(df, "text", "doc_id").orderBy("doc_id").collect()
     assert [tuple(r) for r in arrow] == [tuple(r) for r in native]
     # shingles >= 32 bytes exceed the vectorized XXH64's short-input path;
     # the kernel must route them to the serial walk, not assert
-    wide_a = minhash_signature_wide(df, "text", "doc_id", shingle_len=40, num_hashes=8, impl="arrow")
-    wide_n = minhash_signature_wide(df, "text", "doc_id", shingle_len=40, num_hashes=8, impl="native")
+    wide_a = minhash_signature_wide(df, "text", "doc_id", shingle_len=40, num_hashes=8)
+    wide_n = _minhash_signature_native(df, "text", "doc_id", shingle_len=40, num_hashes=8)
     assert [tuple(r) for r in wide_a.orderBy("doc_id").collect()] == [
         tuple(r) for r in wide_n.orderBy("doc_id").collect()
     ]
@@ -1218,6 +1235,20 @@ def test_cap_per_group_equals_global_window_and_passes_light_groups(spark):
     assert len([1 for (g, _) in got if g == "big"]) == 5
 
 
+def _lsh_bucket_native(df, embedding_col="embedding", *, dim, n_planes=8, seed=13):
+    """The pure-column LSH bucket, kept here as the oracle for the Arrow
+    kernel: one interpreted ``aggregate(zip_with(...))`` dot product per
+    hyperplane, sign bits packed into one long."""
+    from sage_spark.operators.similarity import _dot, _hyperplane
+
+    bucket = F.lit(0).cast("long")
+    for p in range(n_planes):
+        plane = _hyperplane(dim, p, seed)
+        sign_bit = (_dot(F.col(embedding_col), F.array(*[F.lit(v) for v in plane])) >= 0).cast("long")
+        bucket = bucket + sign_bit * F.lit(2**p)
+    return df.withColumn("lsh_bucket", bucket)
+
+
 def test_lsh_bucket_arrow_matches_native(spark):
     """r6: the Arrow LSH-bucket kernel must produce the exact bucket of the
     pure-column HOF form for every row, including null embeddings (the
@@ -1233,11 +1264,11 @@ def test_lsh_bucket_arrow_matches_native(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     a = {
         r["vec_id"]: r["lsh_bucket"]
-        for r in with_lsh_bucket(df, dim=16, n_planes=8, impl="arrow").collect()
+        for r in with_lsh_bucket(df, dim=16, n_planes=8).collect()
     }
     b = {
         r["vec_id"]: r["lsh_bucket"]
-        for r in with_lsh_bucket(df, dim=16, n_planes=8, impl="native").collect()
+        for r in _lsh_bucket_native(df, dim=16, n_planes=8).collect()
     }
     assert a == b
     assert a[300] is None
