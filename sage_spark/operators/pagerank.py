@@ -1,14 +1,15 @@
 """PageRank over the entity graph — the iterative-algorithm pattern.
 
 Damped PageRank and personalized PageRank share one power iteration over a
-``(v, rank, p, deg)`` vertex state, where ``p`` is the teleport vector
-(uniform for PageRank, the seed set for personalized PageRank) and ``deg``
-the out-degree (null for dangling vertices, whose mass restarts along
-``p``). Each iteration is pure DataFrame joins/aggregations: one join
-(ranks x edges), one groupBy(dst) sum, and one scalar aggregate for the
-dangling mass. ``localCheckpoint`` truncates lineage every
-``_CHECKPOINT_EVERY`` iterations so the plan stays flat at any iteration
-count (the same discipline as connected components,
+``(v, rank, deg)`` vertex state, where ``deg`` is the out-degree (null for
+dangling vertices, whose mass restarts along the teleport vector). The
+teleport vector is a literal ``1/n`` for PageRank and a state column ``p``
+(the seed set) for personalized PageRank, so only the personalized state
+carries it through the iteration shuffles. Each iteration is pure
+DataFrame joins/aggregations: one join (ranks x edges), one groupBy(dst)
+sum, and one scalar aggregate for the dangling mass. ``localCheckpoint``
+truncates lineage every ``_CHECKPOINT_EVERY`` iterations so the plan stays
+flat at any iteration count (the same discipline as connected components,
 operators/components.py).
 
 Scale notes: ranks and degrees are (vertex, double) tables — the shuffles
@@ -25,7 +26,7 @@ centrality over it identifies hub entities for skew planning.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 # Lineage is truncated every _CHECKPOINT_EVERY iterations. The cadence is a
 # measured trade: `ranks` appears twice in each iteration's plan
@@ -103,10 +104,11 @@ def pagerank(
     n = counts["n"]
     if n == 0:
         return state.select("v").withColumn("rank", F.lit(0.0))
-    ranks = state.select("v", F.lit(1.0 / n).alias("rank"), F.lit(1.0 / n).alias("p"), "deg")
+    ranks = state.select("v", F.lit(1.0 / n).alias("rank"), "deg")
     return _power_iteration(
         e,
         ranks,
+        teleport=F.lit(1.0 / n),
         damping=damping,
         iterations=iterations,
         has_dangling=counts["n_dangling"] > 0,
@@ -133,9 +135,10 @@ def personalized_pagerank(
     the seeds too, keeping the distribution normalized):
     rank_{t+1}(v) = (1-d)·p(v) + d·(Σ in-contribs + dangling·p(v)).
 
-    Scale shape: identical to :func:`pagerank` — the only addition is the
-    teleport column, joined once from a BROADCAST seed set (a query's
-    focus entities are a handful of ids by construction, never data-sized).
+    Scale shape: the power iteration is :func:`pagerank`'s; the teleport
+    vector is a state column ``p``, joined once from a BROADCAST seed set (a
+    query's focus entities are a handful of ids by construction, never
+    data-sized).
     Seeds absent from the graph still receive teleport mass (they rank
     even when unconnected), matching the serial replay.
 
@@ -175,24 +178,30 @@ def personalized_pagerank(
     ranks = state.select("v", F.col("p").alias("rank"), "p", "deg")
     # no sink count here: it would add a job to every query, and the
     # dangling aggregate simply reads 0.0 on a sink-free graph
-    return _power_iteration(e, ranks, damping=damping, iterations=iterations, has_dangling=True)
+    return _power_iteration(
+        e, ranks, teleport=F.col("p"), damping=damping, iterations=iterations, has_dangling=True
+    )
 
 
 def _power_iteration(
     e: DataFrame,
     ranks: DataFrame,
     *,
+    teleport: Column,
     damping: float,
     iterations: int,
     has_dangling: bool,
     tol: float | None = None,
 ) -> DataFrame:
     """rank_{t+1}(v) = (1-d)·p(v) + d·(Σ in-contribs + dangling·p(v)) over
-    the (v, rank, p, deg) state ``ranks`` and the deduplicated edge set
-    ``e``; returns (v, rank). The teleport vector and the out-degree live
-    in the state, built once, so no iteration re-joins a loop-invariant
-    table. ``has_dangling=False`` promises the graph has no sink, which
-    drops the per-iteration dangling aggregate and its broadcast job."""
+    the (v, rank, deg[, p]) state ``ranks`` and the deduplicated edge set
+    ``e``; returns (v, rank). ``teleport`` is p(v): a literal, or a column
+    of the state. The state's columns besides v and rank are loop-invariant
+    and built once, so no iteration re-joins a loop-invariant table.
+    ``has_dangling=False`` promises the graph has no sink, which drops the
+    per-iteration dangling aggregate and its broadcast job."""
+    carried = [c for c in ranks.columns if c not in ("v", "rank")]
+    carried_nulls = [F.lit(None).cast(ranks.schema[c].dataType).alias(c) for c in carried]
     prev_checkpointed = ranks
     for it in range(iterations):
         # the dangling mass aggregates into a broadcast 1-row frame, so the
@@ -211,27 +220,25 @@ def _power_iteration(
         ).select(
             F.col("dst").alias("v"),
             (F.col("rank") / F.col("deg")).alias("c"),
-            F.lit(None).cast("double").alias("p"),
-            F.lit(None).cast("long").alias("deg"),
+            *carried_nulls,
         )
         # vertices with no inbound contribution re-enter through a zero row
         # unioned into the SAME aggregation (one shuffle) instead of a
-        # per-iteration left join back to the vertex table; max(p) and
-        # max(deg) pick the single non-null value each vertex carries
+        # per-iteration left join back to the vertex table; max() picks the
+        # single non-null value each vertex carries in every state column
         summed = (
-            contribs.unionByName(ranks.select("v", F.lit(0.0).alias("c"), "p", "deg"))
+            contribs.unionByName(ranks.select("v", F.lit(0.0).alias("c"), *carried))
             .groupBy("v")
-            .agg(F.sum("c").alias("s"), F.max("p").alias("p"), F.max("deg").alias("deg"))
+            .agg(F.sum("c").alias("s"), *[F.max(c).alias(c) for c in carried])
         )
         inflow = F.coalesce(F.col("s"), F.lit(0.0))
         if has_dangling:
             summed = summed.join(dangling)
-            inflow = inflow + F.col("__dang") * F.col("p")
+            inflow = inflow + F.col("__dang") * teleport
         ranks = summed.select(
             "v",
-            (F.lit(1.0 - damping) * F.col("p") + F.lit(damping) * inflow).alias("rank"),
-            "p",
-            "deg",
+            (F.lit(1.0 - damping) * teleport + F.lit(damping) * inflow).alias("rank"),
+            *carried,
         )
         if (it + 1) % _CHECKPOINT_EVERY == 0 or it == iterations - 1:
             # lazy checkpoints truncate the plan immediately but fold the
