@@ -15,7 +15,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
 
 from sage_spark.datagen import build_groups, build_persons, synth_webtext
 from sage_spark.kernel.embed import hash_embedding
@@ -41,6 +40,7 @@ from sage_spark.operators.textstats import (
     with_language_id,
     with_quality_stats,
 )
+from sage_spark.pipeline import _first_per_doc
 
 SYNTH_DOCS = 300
 SYNTH_PERSONS = 20
@@ -119,9 +119,7 @@ def _synth_claims(spark: SparkSession) -> DataFrame:
         return cached
     webtext, persons_df = synth_webtext(spark, SYNTH_DOCS, n_persons=SYNTH_PERSONS, seed=SEED)
     persons = [r.asDict() for r in persons_df.collect()]
-    docs = extract_documents(webtext, lang_filter="en")
-    w = Window.partitionBy("doc_id").orderBy(F.col("url").asc())
-    docs = docs.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+    docs = _first_per_doc(extract_documents(webtext, lang_filter="en"))
     claims = extract_claims_stage(docs, persons, build_groups(), run_ts=RUN_TS).localCheckpoint(eager=True)
     _SYNTH_CLAIMS_CACHE[key] = claims
     return claims
@@ -192,9 +190,7 @@ def q_kg_facts_current(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kg_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     webtext, _ = synth_webtext(spark, SYNTH_DOCS, n_persons=SYNTH_PERSONS, seed=SEED)
-    docs = extract_documents(webtext, lang_filter="en")
-    w = Window.partitionBy("doc_id").orderBy(F.col("url").asc())
-    docs = docs.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+    docs = _first_per_doc(extract_documents(webtext, lang_filter="en"))
     return build_chunks(docs, embed=False).select("chunk_id", "doc_id", "seq", "summary")
 
 

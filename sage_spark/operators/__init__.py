@@ -8,6 +8,5 @@ components      connected-components canonicalization (K7)
 dedup           exact / MinHash-LSH / SimHash / n-gram Jaccard / embedding near-dup
 similarity      cosine top-k (brute force + LSH-bucketed ANN)
 textstats       language-id, quality scoring, token counting, fingerprinting
-relational      retrieval/analytics DataFrame queries (A*/J*/R* of SURVEY.md §2)
 multimodal      binary-column decode/feature plumbing (decoders stubbed)
 """

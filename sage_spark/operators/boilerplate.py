@@ -33,13 +33,12 @@ def strip_boilerplate(
     id_col: str = "doc_id",
     min_docs: int = 3,
     frac: float = 0.5,
-    materialize: bool = True,
 ) -> DataFrame:
     """Returns (id_col, text_clean, n_lines_removed): each document with
     its group's boilerplate lines removed (matched on trimmed content,
     original spelling and order preserved for surviving lines).
 
-    ``materialize`` checkpoints the exploded line table before its three
+    The exploded line table is checkpointed before its three
     consumers (line stats, per-doc totals, the kept/rebuild branch) so the
     corpus text is split exactly once — without it Catalyst re-derives the
     explode per consumer. Same discipline as the unigram-logprob TF table;
@@ -48,9 +47,7 @@ def strip_boilerplate(
         F.col(id_col),
         F.col(group_col).alias("__g"),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("__seq", "__line"),
-    ).withColumn("__norm", F.trim(F.col("__line")))
-    if materialize:
-        lines = lines.localCheckpoint(eager=True)
+    ).withColumn("__norm", F.trim(F.col("__line"))).localCheckpoint(eager=True)
     group_sizes = docs.groupBy(F.col(group_col).alias("__g")).agg(
         F.count_distinct(F.col(id_col)).alias("__n_docs")
     )

@@ -6,7 +6,8 @@ plan a SortMergeJoin with ZERO Exchange on either side — the join cost
 becomes a streaming merge of pre-sorted bucket files. This is the parquet
 analog of the Iceberg ``bucket(N, key)`` partition transform the production
 deployment would use (reference stores rows per-key in Neo4j; here the
-co-location is explicit in the table layout).
+co-location is explicit in the table layout). Read a table back with
+``spark.table(name)``: the scan carries the bucket HashPartitioning.
 
 Plan-regression-tested in tests/test_plans.py: joining two tables written
 through ``write_bucketed`` on their bucket key must contain no Exchange.
@@ -14,7 +15,7 @@ through ``write_bucketed`` on their bucket key must contain no Exchange.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -36,7 +37,3 @@ def write_bucketed(
         .format("parquet")
         .saveAsTable(table)
     )
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

@@ -187,10 +187,13 @@ def canonicalize_claims(
     PARTITION, not per key — the difference between ~6k tiny UDF calls and
     ~64 streaming ones at test scale, and the only layout that stays flat
     at 10^12 keys."""
-    # Bootstrap fast path: with no prior facts the stream carries only the
+    # Bootstrap fast path: with no facts table the stream carries only the
     # 27 claim columns — the 26 fact columns would double the Arrow transfer
-    # for every row of every initial load.
-    has_facts = existing_facts is not None and not existing_facts.isEmpty()
+    # for every row of every initial load. An existing but empty (or fully
+    # pruned) facts frame takes the union shape: a key with no stored facts
+    # replays the same either way, and probing for emptiness would run the
+    # facts scan + semi-join as a job of its own before the stage runs it.
+    has_facts = existing_facts is not None
 
     claims_in = claims.select(*_CLAIM_REPLAY_COLS, F.lit(1).alias("kind"))
     if has_facts:

@@ -1,9 +1,9 @@
 """Community detection + coreness over the entity co-mention graph.
 
 No reference counterpart — these are the next graph-analytics operators a
-webtext KG needs after degree stats (operators/relational.py), PageRank
-(operators/pagerank.py), connected components (operators/components.py)
-and triangle counting (operators/triangles.py): "which entities form a
+webtext KG needs after degree stats, PageRank (operators/pagerank.py),
+connected components (operators/components.py) and triangle counting
+(operators/triangles.py): "which entities form a
 community?" drives topic clustering and canonical-entity review queues,
 and "how deep in the core is this entity?" separates load-bearing hub
 entities from peripheral one-off mentions. The reference stores the
@@ -70,24 +70,6 @@ def write_symmetric_edges(edges: DataFrame, table: str, path: str, *, buckets: i
     write_bucketed(_symmetric(edges), table, path, "v", buckets=buckets)
 
 
-def label_propagation_on_bucketed_edges(spark, table: str, **kwargs) -> DataFrame:
-    """LPA over a ``write_symmetric_edges`` table: the bucketed scan carries
-    HashPartitioning(v) that survives AQE, so every round's vote join reads
-    the edges with no Exchange — only the iteration-varying label table
-    moves (plan-pinned in tests/test_plans.py)."""
-    from .bucketing import read_bucketed
-
-    return label_propagation(read_bucketed(spark, table), prepartitioned=True, **kwargs)
-
-
-def core_numbers_on_bucketed_edges(spark, table: str, **kwargs) -> DataFrame:
-    """Coreness over a ``write_symmetric_edges`` table — zero edge-side
-    Exchange per H-index round, as above."""
-    from .bucketing import read_bucketed
-
-    return core_numbers(read_bucketed(spark, table), prepartitioned=True, **kwargs)
-
-
 def lpa_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
     """One synchronous LPA round: every vertex adopts the most frequent
     label among its neighbours, ties to the smallest label. Factored out so
@@ -141,8 +123,11 @@ def label_propagation(
 
     ``prepartitioned=True`` declares ``edges`` an already-canonical
     symmetric adjacency whose scan carries HashPartitioning(v) (a
-    ``write_symmetric_edges`` table): the per-round symmetrize/checkpoint
-    is skipped so the scan partitioning reaches every vote join intact.
+    ``write_symmetric_edges`` table read with ``spark.table(name)``): the
+    per-round symmetrize/checkpoint is skipped so the scan partitioning,
+    which survives AQE, reaches every vote join intact — the edges never
+    shuffle, only the iteration-varying label table moves (plan-pinned in
+    tests/test_plans.py).
     """
     sym = edges if prepartitioned else _symmetric(edges)
     labels = (

@@ -111,23 +111,6 @@ def _minhash_signature_arrow(
     return df.select(id_col, text_col).mapInPandas(compute, out_schema)
 
 
-def with_minhash(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    shingle_len: int = 5,
-    num_hashes: int = 64,
-    out_col: str = "minhash",
-) -> DataFrame:
-    """MinHash signature as a single array<long> column (joined back on id)."""
-    wide = minhash_signature_wide(df, text_col, id_col, shingle_len=shingle_len, num_hashes=num_hashes)
-    sig = wide.select(
-        F.col(id_col), F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)]).alias(out_col)
-    )
-    return df.join(sig, id_col, "left")
-
-
 def banded_minhash_buckets(
     df: DataFrame,
     text_col: str = "text",

@@ -14,10 +14,10 @@ operators/components.py).
 
 Scale notes: ranks and degrees are (vertex, double) tables — the shuffles
 key on vertex ids only. For the per-iteration ranks⋈edges join the edge
-side can be made exchange-free: feed a src-bucketed table through
-``pagerank_on_bucketed_edges`` (survives AQE; the 10^12-edge deployment
-shape). The dangling term is a single scalar per iteration (an aggregate,
-not a collect of data rows).
+side can be made exchange-free: pass a src-bucketed table's scan with
+``prepartitioned=True`` (the 10^12-edge deployment shape). The dangling
+term is a single scalar per iteration (an aggregate, not a collect of
+data rows).
 
 Reference anchor: the entity graph this ranks is the subject/object mention
 graph the reference materializes in Neo4j (app/saia.py:1184-1215);
@@ -39,19 +39,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 # cadence 10 ran past a 15-minute budget — the exponential-plan cliff is
 # real. The cadence never changes values (pinned in tests/test_graph_ops.py).
 _CHECKPOINT_EVERY = 2
-
-
-def pagerank_on_bucketed_edges(spark, table: str, **kwargs) -> DataFrame:
-    """PageRank over an edge table persisted bucketed+sorted by ``src``
-    (operators/bucketing.write_bucketed): the bucketed scan carries
-    HashPartitioning(src) that survives AQE, so the out-degree aggregate
-    and every iteration's contribution join read the edges with ZERO
-    edge-side Exchange — only the iteration-varying rank table moves. This
-    is the deployment shape for a 10^12-edge graph: edges live bucketed
-    (Iceberg ``bucket(N, src)``), ranks re-shuffle per iteration."""
-    from .bucketing import read_bucketed
-
-    return pagerank(read_bucketed(spark, table), prepartitioned=True, **kwargs)
 
 
 def _edge_set(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -80,9 +67,15 @@ def pagerank(
     checkpointed states drops below it — the fixed-point contraction bound
     |r_k - r_inf|_1 <= delta * d/(1-d) makes that a certified convergence
     test. ``tol=None`` runs exactly ``iterations`` rounds (bit-stable vs the
-    serial oracle)."""
-    # a prepartitioned (src-co-located) edge set, e.g. a bucketed table via
-    # pagerank_on_bucketed_edges, is neither checkpointed nor re-shuffled:
+    serial oracle).
+
+    ``prepartitioned=True`` declares ``edges`` the scan of a table bucketed
+    and sorted by ``src`` (operators/bucketing.write_bucketed, e.g.
+    ``spark.table(name)``; Iceberg ``bucket(N, src)`` in production). That
+    scan carries HashPartitioning(src), which survives AQE, so the
+    out-degree aggregate and every iteration's contribution join read the
+    edges with no edge-side Exchange; only the rank table moves."""
+    # a prepartitioned edge set is neither checkpointed nor re-shuffled:
     # that would erase the scan partitioning that makes the iteration joins
     # exchange-free. Its dedup stays exchange-free too: HashPartitioning on
     # src satisfies the (src, dst) clustering it needs, so Catalyst plans it

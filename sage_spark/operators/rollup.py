@@ -27,14 +27,13 @@ def hypertable_rollup(
     value_col: str = "value",
     group_col: str | None = None,
     levels: tuple[str, ...] = ("minute", "hour", "day"),
-    materialize: bool = True,
 ) -> DataFrame:
     """Returns the union of all requested granularities with columns
     (granularity, bucket, [group], n, sum_value, min_value, max_value,
     mean_value). Coarser levels reaggregate the next-finer level; only the
     finest level reads the raw events.
 
-    ``materialize`` checkpoints the finest bucket table before the coarser
+    The finest bucket table is checkpointed before the coarser
     levels derive from it, so the raw event log is scanned EXACTLY once
     (Spark does not reuse a shared un-materialized subtree across union
     branches — without this the plan re-scans raw per level). In production
@@ -53,9 +52,8 @@ def hypertable_rollup(
             F.min(value_col).alias("min_value"),
             F.max(value_col).alias("max_value"),
         )
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        finest = finest.localCheckpoint(eager=True)
     out = None
     prev = finest
     for lvl in levels:

@@ -238,8 +238,6 @@ def with_unigram_logprob(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    *,
-    materialize: bool = True,
 ) -> DataFrame:
     """LM-proxy quality score: mean corpus-unigram log-probability per
     document (the cheap stand-in for model perplexity used to rank crawl
@@ -264,9 +262,7 @@ def with_unigram_logprob(
         F.col(id_col),
         F.explode(F.regexp_extract_all(F.lower(F.col(text_col)), F.lit("[a-z]+"), F.lit(0))).alias("tok"),
     )
-    tf = toks.groupBy(id_col, "tok").agg(F.count("*").alias("tf"))
-    if materialize:
-        tf = tf.localCheckpoint(eager=True)
+    tf = toks.groupBy(id_col, "tok").agg(F.count("*").alias("tf")).localCheckpoint(eager=True)
     vocab = tf.groupBy("tok").agg(F.sum("tf").alias("c"))
     total = F.broadcast(vocab.agg(F.sum("c").cast("double").alias("__total")))
     scored = tf.join(vocab, "tok").join(total).select(

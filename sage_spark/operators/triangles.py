@@ -1,9 +1,9 @@
 """Entity co-mention graph + triangle counting / clustering coefficient.
 
 No reference counterpart — this is the graph-analytics operator a KG built
-from webtext needs next after degree stats (operators/relational.py A1-A4)
-and PageRank (operators/pagerank.py): "how clustered is the neighbourhood
-around each entity?" drives community detection, hub-vs-bridge entity
+from webtext needs next after degree stats and PageRank
+(operators/pagerank.py): "how clustered is the neighbourhood around each
+entity?" drives community detection, hub-vs-bridge entity
 triage, and link-prediction features, and its input (the co-mention graph:
 two entities linked when some document mentions both) is exactly the
 mention structure the reference stores per-chunk in Neo4j

@@ -168,7 +168,14 @@ def run_pipeline(
     )
 
     # --- stage 5: materialize ---------------------------------------------------
-    store.upsert(documents.drop("message_id"), "documents", ["doc_id"])
+    # `documents` is the skip-if-exists gate, so it is upserted LAST, after
+    # `runs`: it is the batch's commit record. A job that dies before it
+    # leaves the batch's documents absent, so a rerun replays the batch
+    # instead of anti-joining the half-written batch away. Up to the facts
+    # upsert that replay reaches a clean run's store (keyed upserts; support
+    # is re-derived from the edge store). Once facts have landed, the replay
+    # sees the batch's own facts, so its claims' statuses and the run's
+    # conflict count differ from a clean run's.
     chunks, chunks_seen = _observed(chunks, rows=F.count(F.lit(1)))
     store.upsert(chunks, "chunks", ["chunk_id"])
     store.upsert(updated_claims, "claims", ["claim_id"])
@@ -242,6 +249,7 @@ def run_pipeline(
         RUNS_SCHEMA,
     )
     store.upsert(runs.unionByName(summary), "runs", ["run_id", "partition_id", "stage"])
+    store.upsert(documents.drop("message_id"), "documents", ["doc_id"])
 
     fact_counts = facts_seen.get
     result = PipelineResult(

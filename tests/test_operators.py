@@ -15,9 +15,9 @@ from sage_spark.operators.dedup import (
     exact_dedup,
     exact_duplicates,
     minhash_lsh_candidates,
+    minhash_signature_wide,
     near_dup_clusters,
     ngram_jaccard_pairs,
-    with_minhash,
     with_simhash,
 )
 from sage_spark.operators.linking import link_mentions_exact, link_mentions_lsh
@@ -89,9 +89,10 @@ def test_minhash_bucket_truncation_observable_and_recoverable(spark):
 
 
 def test_minhash_signature_deterministic(spark, docs_df):
-    a = with_minhash(docs_df).orderBy("doc_id").collect()
-    b = with_minhash(docs_df.repartition(5)).orderBy("doc_id").collect()
-    assert [r["minhash"] for r in a] == [r["minhash"] for r in b]
+    mh = [f"mh_{i}" for i in range(64)]
+    a = minhash_signature_wide(docs_df).orderBy("doc_id").select(mh).collect()
+    b = minhash_signature_wide(docs_df.repartition(5)).orderBy("doc_id").select(mh).collect()
+    assert a == b
 
 
 def _minhash_signature_native(df, text_col, id_col, *, shingle_len=5, num_hashes=64):
@@ -118,8 +119,6 @@ def test_minhash_arrow_matches_native_jvm(spark, docs_df):
     NOT collapse — Java \\s is ASCII-only), multi-byte letters (serial
     fallback path), duplicate-heavy text."""
     from pyspark.sql import functions as F
-
-    from sage_spark.operators.dedup import minhash_signature_wide
 
     tricky = spark.createDataFrame(
         [

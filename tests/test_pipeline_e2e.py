@@ -18,8 +18,6 @@ from sage_spark.store import TableStore
 
 from .ref_oracle import RefSession, load_reference_saia
 
-saia = load_reference_saia()
-
 N_DOCS = 120
 SEED = 7
 RUN_TS = "2026-05-01T00:00:00+00:00"
@@ -63,7 +61,12 @@ def test_pipeline_counts(pipeline_store):
 def test_spark_claims_match_reference_on_whole_corpus(spark, pipeline_store):
     """Every (doc, claim) the Spark job emitted must equal what the reference
     extractor produces for the same text + grounding + dimension — and vice
-    versa (P/R = 1.0 at full-row granularity, modulo created_at)."""
+    versa (P/R = 1.0 at full-row granularity, modulo created_at). Skips
+    when the reference extractor cannot be loaded."""
+    try:
+        saia = load_reference_saia()
+    except ImportError as exc:
+        pytest.skip(f"reference extractor unavailable: {exc}")
     store, _, persons, groups = pipeline_store
     session = RefSession(persons, groups)
 
@@ -1008,30 +1011,34 @@ def test_canonicalize_uncontested_fast_path_matches_serial_replay(spark):
         [tuple(store_fact[f.name] for f in FACTS_SCHEMA.fields)], FACTS_SCHEMA
     )
 
-    union = canonicalize_claims(claims_df, facts_df, seen_at=seen_at)
-    got_facts = {tuple(r) for r in split_facts(union).collect()}
-    got_updates = {tuple(r) for r in split_claim_updates(union).collect()}
-    got_edges = {tuple(r) for r in split_edges(union).collect()}
-
-    exp_facts, exp_updates, exp_edges = set(), set(), set()
-    by_key = itertools.groupby(
-        sorted(rows, key=lambda r: (r["canonical_key"], r["sent_at"], r["doc_id"], r["claim_seq"])),
-        key=lambda r: r["canonical_key"],
-    )
+    # an empty facts frame (a facts table the semi-join pruned to nothing)
+    # must replay exactly as no store facts
+    empty_facts = spark.createDataFrame([], FACTS_SCHEMA)
     fact_cols = [f.name for f in FACTS_SCHEMA.fields]
-    for key, group in by_key:
-        store = [store_fact] if key == "k-store" else []
-        out = replay_key_mutations(store, list(group), seen_at)
-        exp_facts |= {tuple(f.get(c) for c in fact_cols) for f in out.facts}
-        exp_updates |= {
-            (u["claim_id"], u["promotion_status"], u["mutation_action"])
-            for u in out.claim_updates
-        }
-        exp_edges |= {
-            (e["claim_id"], e["fact_id"], e["relation_type"]) for e in out.edges
-        }
-    assert got_facts == exp_facts
-    assert got_updates == exp_updates
-    assert got_edges == exp_edges
-    # the confirm chain must have aggregated support, not three facts
-    assert sum(1 for f in got_facts if f[1] == "k-eq") == 1
+    for existing, stored in ((facts_df, [store_fact]), (empty_facts, [])):
+        union = canonicalize_claims(claims_df, existing, seen_at=seen_at)
+        got_facts = {tuple(r) for r in split_facts(union).collect()}
+        got_updates = {tuple(r) for r in split_claim_updates(union).collect()}
+        got_edges = {tuple(r) for r in split_edges(union).collect()}
+
+        exp_facts, exp_updates, exp_edges = set(), set(), set()
+        by_key = itertools.groupby(
+            sorted(rows, key=lambda r: (r["canonical_key"], r["sent_at"], r["doc_id"], r["claim_seq"])),
+            key=lambda r: r["canonical_key"],
+        )
+        for key, group in by_key:
+            store = stored if key == "k-store" else []
+            out = replay_key_mutations(store, list(group), seen_at)
+            exp_facts |= {tuple(f.get(c) for c in fact_cols) for f in out.facts}
+            exp_updates |= {
+                (u["claim_id"], u["promotion_status"], u["mutation_action"])
+                for u in out.claim_updates
+            }
+            exp_edges |= {
+                (e["claim_id"], e["fact_id"], e["relation_type"]) for e in out.edges
+            }
+        assert got_facts == exp_facts
+        assert got_updates == exp_updates
+        assert got_edges == exp_edges
+        # the confirm chain must have aggregated support, not three facts
+        assert sum(1 for f in got_facts if f[1] == "k-eq") == 1

@@ -99,7 +99,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     shuffle-free at 10^12 rows."""
     from pyspark.sql import functions as F
 
-    from sage_spark.operators.bucketing import read_bucketed, write_bucketed
+    from sage_spark.operators.bucketing import write_bucketed
 
     facts = spark.range(0, 10000).select(
         F.concat(F.lit("f"), F.col("id")).alias("fact_id"), (F.col("id") % 7).alias("x")
@@ -114,9 +114,9 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         # hint forces the merge strategy (at real scale neither side fits a
         # broadcast; at test scale AQE would broadcast the 10k-row side)
         joined = (
-            read_bucketed(spark, "t_facts_b")
+            spark.table("t_facts_b")
             .hint("merge")
-            .join(read_bucketed(spark, "t_edges_b"), "fact_id")
+            .join(spark.table("t_edges_b"), "fact_id")
         )
         plan = _plan(spark, joined)
         assert "SortMergeJoin" in plan
@@ -155,8 +155,8 @@ def test_pagerank_bucketed_edges_join_adds_no_edge_exchange(spark, tmp_path):
     alongside."""
     from pyspark.sql import functions as F
 
-    from sage_spark.operators.bucketing import read_bucketed, write_bucketed
-    from sage_spark.operators.pagerank import pagerank, pagerank_on_bucketed_edges
+    from sage_spark.operators.bucketing import write_bucketed
+    from sage_spark.operators.pagerank import pagerank
 
     raw = spark.createDataFrame(
         # (c, a) and (a, b) repeat: multiplicity must NOT skew out-degree
@@ -165,7 +165,7 @@ def test_pagerank_bucketed_edges_join_adds_no_edge_exchange(spark, tmp_path):
     )
     write_bucketed(raw, "pr_edges_b", str(tmp_path / "pr_edges"), "src", buckets=4)
     try:
-        e = read_bucketed(spark, "pr_edges_b")
+        e = spark.table("pr_edges_b")
         agg_plan = (
             e.groupBy("src").agg(F.count("*").alias("deg"))
             ._jdf.queryExecution().executedPlan().toString()
@@ -189,7 +189,7 @@ def test_pagerank_bucketed_edges_join_adds_no_edge_exchange(spark, tmp_path):
         assert "rank" in join_plan[ex_pos : ex_pos + 300]
         got = {
             r["v"]: round(r["rank"], 10)
-            for r in pagerank_on_bucketed_edges(spark, "pr_edges_b", iterations=10).collect()
+            for r in pagerank(e, prepartitioned=True, iterations=10).collect()
         }
         exp = {r["v"]: round(r["rank"], 10) for r in pagerank(raw, iterations=10).collect()}
         assert got == exp
@@ -354,12 +354,9 @@ def test_iterative_graph_family_bucketed_edges_no_edge_exchange(spark, tmp_path)
     alongside for all three operators."""
     from pyspark.sql import functions as F
 
-    from sage_spark.operators.bucketing import read_bucketed
     from sage_spark.operators.communities import (
         core_numbers,
-        core_numbers_on_bucketed_edges,
         label_propagation,
-        label_propagation_on_bucketed_edges,
         write_symmetric_edges,
     )
     from sage_spark.operators.incremental import impact_radius
@@ -370,7 +367,7 @@ def test_iterative_graph_family_bucketed_edges_no_edge_exchange(spark, tmp_path)
     )
     write_symmetric_edges(raw, "sym_edges_b", str(tmp_path / "sym_edges"))
     try:
-        sym = read_bucketed(spark, "sym_edges_b")
+        sym = spark.table("sym_edges_b")
         state = spark.createDataFrame([("a", "a"), ("b", "b")], "v string, label string")
         # force the at-scale SMJ shape (tiny test state would broadcast)
         join_plan = (
@@ -383,7 +380,7 @@ def test_iterative_graph_family_bucketed_edges_no_edge_exchange(spark, tmp_path)
 
         lpa_b = {
             (r["entity"], r["community"])
-            for r in label_propagation_on_bucketed_edges(spark, "sym_edges_b", iterations=3).collect()
+            for r in label_propagation(sym, prepartitioned=True, iterations=3).collect()
         }
         lpa_p = {
             (r["entity"], r["community"])
@@ -393,7 +390,7 @@ def test_iterative_graph_family_bucketed_edges_no_edge_exchange(spark, tmp_path)
 
         core_b = {
             (r["entity"], r["core"])
-            for r in core_numbers_on_bucketed_edges(spark, "sym_edges_b").collect()
+            for r in core_numbers(sym, prepartitioned=True).collect()
         }
         core_p = {(r["entity"], r["core"]) for r in core_numbers(raw).collect()}
         assert core_b == core_p

@@ -175,3 +175,60 @@ def test_pipeline_reports_batch_counts_and_resume_is_zero(spark, tmp_path, layou
         .collect()
     )
     assert [(r["docs_processed"], r["claims_extracted"]) for r in summary] == [(0, 0)]
+
+
+class _CrashOnce(TableStore):
+    """A store whose next upsert into ``crash_on`` dies before writing."""
+
+    crash_on: str | None = None
+
+    def upsert(self, df, table, keys, **kwargs):
+        if table == self.crash_on:
+            self.crash_on = None
+            raise RuntimeError(f"injected crash before the {table} upsert")
+        super().upsert(df, table, keys, **kwargs)
+
+
+KG_TABLES = ("documents", "chunks", "claims", "claim_fact_edges", "facts", "edges")
+
+
+def _kg_state(spark, store: TableStore, run_id: str) -> dict[str, list[str]]:
+    """Sorted rows of every KG table plus ``run_id``'s lineage summary row."""
+    state = {t: sorted(map(repr, store.read(spark, t).collect())) for t in KG_TABLES}
+    state["runs"] = sorted(
+        map(
+            repr,
+            store.read(spark, "runs")
+            .filter((F.col("run_id") == run_id) & (F.col("partition_id") == -1))
+            .collect(),
+        )
+    )
+    return state
+
+
+def test_crash_mid_materialization_resumes_to_the_clean_store(spark, tmp_path):
+    """A batch that dies after some of its upserts landed, and is rerun
+    with the same run id and timestamp, leaves the store a clean run
+    leaves: the skip-if-exists gate (`documents`) commits last, so the
+    rerun replays the batch instead of skipping its documents."""
+    groups = build_groups()
+    first, persons_df = synth_webtext(spark, 20, n_persons=10, seed=7, partitions=2)
+    persons = [r.asDict() for r in persons_df.collect()]
+    full, _ = synth_webtext(spark, 30, n_persons=10, seed=7, partitions=2)
+
+    def run(store, webtext, run_id: str) -> PipelineResult:
+        return run_pipeline(
+            spark, webtext, persons, groups, store, run_id=run_id, run_ts="2026-04-02T00:00:00+00:00"
+        )
+
+    clean = TableStore(tmp_path / "clean", buckets=4)
+    run(clean, first, "c1")
+    run(clean, full, "c2")
+
+    crashed = _CrashOnce(tmp_path / "crashed", buckets=4)
+    run(crashed, first, "c1")
+    crashed.crash_on = "facts"
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run(crashed, full, "c2")
+    run(crashed, full, "c2")
+    assert _kg_state(spark, crashed, "c2") == _kg_state(spark, clean, "c2")

@@ -5,7 +5,7 @@ against a persons dimension with broadcasting disabled — the regime where a
 plain shuffle join funnels the hub key through one reducer. Compares:
 
   plain    repartition join on lower(mention)
-  salted   operators/relational.salted_join-style: dim exploded xN,
+  salted   operators/linking.link_mentions_exact-style: dim exploded xN,
            fact side scattered uniformly
   aqe      plain join with AQE skew-join splitting enabled
 
