@@ -12,7 +12,9 @@ the order-insensitive value-hash is robust to engine-level FP noise.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -106,61 +108,57 @@ def _set_shuffle(spark: SparkSession, tiny: bool) -> None:
     )
 
 
-_SYNTH_CLAIMS_CACHE: dict[int, DataFrame] = {}
+T = TypeVar("T")
 
 
+def _per_session(build: Callable[[SparkSession], T]) -> Callable[[SparkSession], T]:
+    """Memoize ``build`` per Spark session: the first call in a session
+    computes (and pins) the result, later calls in it return that object."""
+    built: dict[int, T] = {}
+
+    @functools.wraps(build)
+    def cached(spark: SparkSession) -> T:
+        key = id(spark)
+        if key not in built:
+            built[key] = build(spark)
+        return built[key]
+
+    return cached
+
+
+@_per_session
 def _synth_claims(spark: SparkSession) -> DataFrame:
     """Deterministic synthetic claims; memoized per session (several KG
     queries share it — the driver runs them all, so compute the kernel
     chain once and localCheckpoint the result)."""
-    key = id(spark)
-    cached = _SYNTH_CLAIMS_CACHE.get(key)
-    if cached is not None:
-        return cached
     webtext, persons_df = synth_webtext(spark, SYNTH_DOCS, n_persons=SYNTH_PERSONS, seed=SEED)
     persons = [r.asDict() for r in persons_df.collect()]
     docs = _first_per_doc(extract_documents(webtext, lang_filter="en"))
-    claims = extract_claims_stage(docs, persons, build_groups(), run_ts=RUN_TS).localCheckpoint(eager=True)
-    _SYNTH_CLAIMS_CACHE[key] = claims
-    return claims
+    return extract_claims_stage(docs, persons, build_groups(), run_ts=RUN_TS).localCheckpoint(
+        eager=True
+    )
 
 
-_SYNTH_UNION_CACHE: dict[int, DataFrame] = {}
-
-
+@_per_session
 def _synth_union(spark: SparkSession) -> DataFrame:
     """Canonicalized claim/fact union over the synthetic claims; memoized
     per session like _synth_claims — three contract queries (facts_current,
     facts_with_evidence, insight) share the cogrouped mutation replay, so
     compute it once and pin it."""
-    key = id(spark)
-    cached = _SYNTH_UNION_CACHE.get(key)
-    if cached is not None:
-        return cached
-    union = canonicalize_claims(_synth_claims(spark), None, seen_at=RUN_TS).localCheckpoint(
+    return canonicalize_claims(_synth_claims(spark), None, seen_at=RUN_TS).localCheckpoint(
         eager=True
     )
-    _SYNTH_UNION_CACHE[key] = union
-    return union
 
 
-_SYNTH_MESSAGES_CACHE: dict[int, DataFrame] = {}
-
-
+@_per_session
 def _synth_messages(spark: SparkSession) -> DataFrame:
     """The synthetic chat message log, memoized per session: all three chat
     contract queries walk the same log, so derive it once and pin it (the
     _synth_claims discipline, extended per the round-4 verdict)."""
     from sage_spark.operators.chat import messages_from_webtext
 
-    key = id(spark)
-    cached = _SYNTH_MESSAGES_CACHE.get(key)
-    if cached is not None:
-        return cached
     webtext, _ = synth_webtext(spark, SYNTH_DOCS, n_persons=SYNTH_PERSONS, seed=SEED)
-    msgs = messages_from_webtext(webtext).localCheckpoint(eager=True)
-    _SYNTH_MESSAGES_CACHE[key] = msgs
-    return msgs
+    return messages_from_webtext(webtext).localCheckpoint(eager=True)
 
 
 def q_kg_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1341,28 +1339,20 @@ def q_kg_insight(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("claim_id", "fact_id", "previous_fact_id")
 
 
-_SYNTH_SPLIT_CACHE: dict[int, tuple[DataFrame, DataFrame, DataFrame]] = {}
-
-
+@_per_session
 def _synth_split(spark: SparkSession) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Deterministic store/batch split for the incremental-maintenance
     queries: docs whose sha256 doc_id starts 0-7 are the established corpus
     (canonicalized into a fact store), the rest arrive as the new batch.
     Returns (claims_batch, facts_store_current, claims_store), memoized —
     kg_fact_diff and kg_impact_radius share the replay."""
-    key = id(spark)
-    cached = _SYNTH_SPLIT_CACHE.get(key)
-    if cached is not None:
-        return cached
     claims = _synth_claims(spark)
     first = F.substring("doc_id", 1, 1)
     store_claims = claims.filter(first.isin(*"01234567")).localCheckpoint(eager=True)
     batch_claims = claims.filter(~first.isin(*"01234567")).localCheckpoint(eager=True)
     union = canonicalize_claims(store_claims, None, seen_at=RUN_TS)
     facts = split_facts(union).filter(F.col("status") == "current").localCheckpoint(eager=True)
-    out = (batch_claims, facts, store_claims)
-    _SYNTH_SPLIT_CACHE[key] = out
-    return out
+    return batch_claims, facts, store_claims
 
 
 RUN_TS2 = "2026-05-02T00:00:00+00:00"

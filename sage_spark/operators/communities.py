@@ -10,9 +10,10 @@ entities from peripheral one-off mentions. The reference stores the
 mention structure per chunk in Neo4j (app/pipeline.py:157-224) but never
 aggregates it.
 
-Both are iterative label algorithms in the operators/components.py shape —
-DataFrame joins + groupBy only, lineage truncated per round with
-``localCheckpoint`` so plans stay bounded at any iteration count:
+Both are iterative label algorithms over operators/graph.py's
+``symmetric_adjacency`` — DataFrame joins + groupBy only, lineage truncated
+per round with ``localCheckpoint`` so plans stay bounded at any iteration
+count:
 
 * ``label_propagation`` — SYNCHRONOUS deterministic LPA: every vertex
   simultaneously adopts the most frequent label among its neighbours,
@@ -30,8 +31,8 @@ DataFrame joins + groupBy only, lineage truncated per round with
   point IS the k-core number. Distributed peeling would need one global
   round per degeneracy level; the H-operator converges in a handful of
   rounds on web-like graphs and each round is two vertex-keyed shuffles.
-  The convergence check is a ``limit(1).count()`` on the changed set —
-  one tiny job per round, same discipline as components.py.
+  The rounds run in graph.py's ``until_stable`` loop, shared with
+  connected_components: one ``limit(1).count()`` job per round.
 
 Scale notes: all shuffles key on a vertex id; hub vertices fan IN (their
 votes/values are aggregated map-side by the partial groupBy), never OUT,
@@ -43,18 +44,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-
-def _symmetric(edges: DataFrame) -> DataFrame:
-    """Canonical undirected adjacency (both directions, no loops/dupes)."""
-    canon = (
-        edges.select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull() & (F.col("u") != F.col("v")))
-        .distinct()
-    )
-    return (
-        canon.unionByName(canon.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .localCheckpoint(eager=True)
-    )
+from .graph import symmetric_adjacency, until_stable
 
 
 def write_symmetric_edges(edges: DataFrame, table: str, path: str, *, buckets: int = 16) -> None:
@@ -67,7 +57,7 @@ def write_symmetric_edges(edges: DataFrame, table: str, path: str, *, buckets: i
     once here, at write time, not per run."""
     from .bucketing import write_bucketed
 
-    write_bucketed(_symmetric(edges), table, path, "v", buckets=buckets)
+    write_bucketed(symmetric_adjacency(edges), table, path, "v", buckets=buckets)
 
 
 def lpa_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
@@ -129,7 +119,7 @@ def label_propagation(
     shuffle, only the iteration-varying label table moves (plan-pinned in
     tests/test_plans.py).
     """
-    sym = edges if prepartitioned else _symmetric(edges)
+    sym = edges if prepartitioned else symmetric_adjacency(edges)
     labels = (
         sym.select(F.col("u").alias("vertex"))
         .distinct()
@@ -156,16 +146,11 @@ def core_numbers(
     Returns (entity, core) for every vertex with degree ≥ 1.
     ``prepartitioned`` as in :func:`label_propagation`.
     """
-    sym = edges if prepartitioned else _symmetric(edges)
+    sym = edges if prepartitioned else symmetric_adjacency(edges)
     vals = (
         sym.groupBy(F.col("u").alias("vertex"))
         .agg(F.count("*").alias("value"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iterations):
-        updated = hindex_round(sym, vals)
-        changed = updated.filter(F.col("changed")).limit(1).count()
-        vals = updated.drop("changed").localCheckpoint(eager=True)
-        if changed == 0:
-            break
+    vals = until_stable(lambda state: hindex_round(sym, state), vals, max_iterations)
     return vals.select(F.col("vertex").alias("entity"), F.col("value").alias("core"))

@@ -8,13 +8,35 @@ matches, etc.) form edges; each component becomes one canonical entity.
 Implementation: large-star/small-star-style iterative min-label propagation
 using only DataFrame joins + groupBy — no GraphFrames dependency. Converges
 in O(log n) rounds for typical web graphs; each round is two shuffles keyed
-on vertex ids. ``localCheckpoint`` truncates the growing lineage every round
-so plans stay bounded at any iteration count.
+on vertex ids. The rounds run over operators/graph.py's
+``symmetric_adjacency`` in its ``until_stable`` loop, shared with coreness
+(operators/communities.py), which truncates the lineage every round.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from .graph import symmetric_adjacency, until_stable
+
+
+def min_label_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
+    """One min-label round: every vertex adopts the min label in its
+    closed neighbourhood (its own label ∪ its neighbours' labels), plus a
+    `changed` flag column."""
+    neighbor_labels = sym.join(labels.withColumnRenamed("vertex", "v"), "v").select(
+        F.col("u").alias("vertex"), "component"
+    )
+    proposals = (
+        labels.unionByName(neighbor_labels)
+        .groupBy("vertex")
+        .agg(F.min("component").alias("new_component"))
+    )
+    return labels.join(proposals, "vertex").select(
+        "vertex",
+        F.least(F.col("component"), F.col("new_component")).alias("component"),
+        (F.col("new_component") < F.col("component")).alias("changed"),
+    )
 
 
 def connected_components(
@@ -25,43 +47,24 @@ def connected_components(
     max_iterations: int = 50,
 ) -> DataFrame:
     """Returns (vertex, component) with component = min vertex id (string
-    order) reachable in the undirected graph."""
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .dropDuplicates(["a", "b"])
+    order) reachable in the undirected graph. Every endpoint of an edge
+    with no null end is a vertex, so a vertex whose only edge is a
+    self-loop is a component of its own."""
+    pairs = (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
         .localCheckpoint(eager=True)
     )
+    sym = symmetric_adjacency(pairs)
+    # the adjacency drops self-loops, so the vertex set comes from the pairs
     labels = (
-        sym.select(F.col("a").alias("vertex"))
+        pairs.select(F.col("u").alias("vertex"))
+        .unionByName(pairs.select(F.col("v").alias("vertex")))
         .distinct()
         .withColumn("component", F.col("vertex"))
         .localCheckpoint(eager=True)
     )
-
-    for _ in range(max_iterations):
-        # propagate: every vertex adopts the min label in its closed
-        # neighborhood (its own label ∪ neighbors' labels)
-        neighbor_labels = (
-            sym.join(labels.withColumnRenamed("vertex", "b"), "b")
-            .select(F.col("a").alias("vertex"), "component")
-        )
-        proposals = (
-            labels.unionByName(neighbor_labels)
-            .groupBy("vertex")
-            .agg(F.min("component").alias("new_component"))
-        )
-        updated = labels.join(proposals, "vertex").select(
-            "vertex",
-            F.least(F.col("component"), F.col("new_component")).alias("component"),
-            (F.col("new_component") < F.col("component")).alias("changed"),
-        )
-        changed = updated.filter(F.col("changed")).limit(1).count()
-        labels = updated.drop("changed").localCheckpoint(eager=True)
-        if changed == 0:
-            break
-    return labels
+    return until_stable(lambda state: min_label_round(sym, state), labels, max_iterations)
 
 
 def incremental_components(

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .similarity import _dot, _norm, with_lsh_bucket
 from .spread import spread_input
 from .textstats import char_ngrams
 
@@ -292,8 +293,6 @@ def embedding_near_duplicates_bucketed(
     shuffles key on (band, bucket) shorts; candidate pairs reuse the
     no-self-join bucket combinatorics of the minhash path, and only
     candidate pairs ever compute a dot product."""
-    from .similarity import with_lsh_bucket
-
     src = df.select(F.col(id_col), F.col(embedding_col).alias("__v"))
     banded = None
     for band in range(bands):
@@ -323,14 +322,9 @@ def embedding_near_duplicates_bucketed(
     left = src.select(F.col(id_col).alias("id_a"), F.col("__v").alias("__va"))
     right = src.select(F.col(id_col).alias("id_b"), F.col("__v").alias("__vb"))
     cand = pairs.join(left, "id_a").join(right, "id_b")
-    dot = F.aggregate(
-        F.zip_with(F.col("__va"), F.col("__vb"), lambda a, b: a * b),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(F.aggregate(F.col(c), F.lit(0.0).cast("double"), lambda acc, x: acc + x * x))  # noqa: E731
+    va, vb = F.col("__va"), F.col("__vb")
     return (
-        cand.withColumn("cosine", dot / (norm("__va") * norm("__vb")))
+        cand.withColumn("cosine", _dot(va, vb) / (_norm(va) * _norm(vb)))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
@@ -348,19 +342,12 @@ def embedding_near_duplicates(
     ``embedding_near_duplicates_bucketed`` above."""
     vecs = df.select(F.col(id_col), F.col(embedding_col).alias("v"))
     pairs = vecs.alias("l").join(vecs.alias("r"), F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-    dot = F.aggregate(
-        F.zip_with(F.col("l.v"), F.col("r.v"), lambda a, b: a * b),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda side: F.sqrt(  # noqa: E731
-        F.aggregate(F.col(f"{side}.v"), F.lit(0.0).cast("double"), lambda acc, x: acc + x * x)
-    )
+    lv, rv = F.col("l.v"), F.col("r.v")
     return (
         pairs.select(
             F.col(f"l.{id_col}").alias("id_a"),
             F.col(f"r.{id_col}").alias("id_b"),
-            (dot / (norm("l") * norm("r"))).alias("cosine"),
+            (_dot(lv, rv) / (_norm(lv) * _norm(rv))).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )

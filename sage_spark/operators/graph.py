@@ -4,11 +4,57 @@ J3 one-hop expansion (services.py:44-45,72), J8 fact -> supporting-document
 join (services.py:98-99,110-111), A5 ingestion summary (document_
 ingestion.py:258-272), A8 entity-id collection (saia.py:1945-1960), plus
 the Spark column form of F6 IST rendering (services.py:572-583).
+
+It also holds what the iterative graph operators share:
+``symmetric_adjacency``, the one edge list → undirected adjacency builder,
+and ``until_stable``, the fixed-point loop of connected components and
+coreness.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, Window, functions as F
+
+
+def undirected_pairs(edges: DataFrame) -> DataFrame:
+    """Distinct canonical pairs (u < v) of an undirected edge list with
+    columns u, v: any orientation, duplicates folded, loops and null
+    endpoints dropped."""
+    return (
+        edges.select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
+        .filter(F.col("u").isNotNull() & F.col("v").isNotNull() & (F.col("u") != F.col("v")))
+        .distinct()
+    )
+
+
+def symmetric_adjacency(edges: DataFrame) -> DataFrame:
+    """Canonical undirected adjacency of an edge list with columns u, v:
+    both directions of every :func:`undirected_pairs` pair, checkpointed
+    once so the iterative rounds that join it on ``v`` never recompute it."""
+    pairs = undirected_pairs(edges)
+    return (
+        pairs.unionByName(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        .localCheckpoint(eager=True)
+    )
+
+
+def until_stable(
+    step: Callable[[DataFrame], DataFrame], state: DataFrame, max_iterations: int
+) -> DataFrame:
+    """Run ``state = step(state)`` until a round changes nothing or
+    ``max_iterations`` rounds ran. ``step`` returns the next state plus a
+    boolean ``changed`` column. The probe is one ``limit(1).count()`` job
+    per round; each state is checkpointed so the plan stays one round deep
+    at any iteration count."""
+    for _ in range(max_iterations):
+        updated = step(state)
+        changed = updated.filter(F.col("changed")).limit(1).count()
+        state = updated.drop("changed").localCheckpoint(eager=True)
+        if changed == 0:
+            break
+    return state
 
 
 def expand_one_hop(seed_ids: DataFrame, edges: DataFrame, id_col: str = "id") -> DataFrame:

@@ -13,9 +13,9 @@ scale the same questions are joins:
 * **fact_diff** — one shuffle keyed on ``canonical_key`` (the only key the
   reference's decision loop ever reads, kernel/facts.py), current facts per
   key are a handful of rows, so the join is skew-free by construction;
-* **impact_radius** — the iterative frontier expansion of
-  operators/components.py: ``max_depth`` rounds of (frontier ⋈ edges),
-  each one vertex-keyed shuffle, lineage checkpointed per round;
+* **impact_radius** — iterative frontier expansion over operators/graph.py's
+  ``symmetric_adjacency``: ``max_depth`` rounds of (frontier ⋈ edges), each
+  one vertex-keyed shuffle, lineage checkpointed per round;
 * **re_embed_targets** — a map-side cosine between stored and candidate
   embeddings (F.aggregate over zipped arrays, JVM codegen — no UDF).
 
@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernel.claims import MIN_CANONICAL_CONFIDENCE, NON_CANONICAL_TYPES
+from .graph import symmetric_adjacency
+from .similarity import _dot, _norm
 
 # the fields deciding confirm-vs-contradict — the ONE definition shared with
 # the serial mutation replay and the expected_fact_diff oracle (saia.py:
@@ -149,23 +151,16 @@ def impact_radius(
     (m)`` collects 1..d; including the seeds makes the result self-contained
     for the downstream doc/chunk join). Each round is one vertex-keyed join
     + anti-join against the reached set, lineage checkpointed so the plan
-    stays flat at any depth (the operators/components.py discipline).
+    stays flat at any depth.
 
     The frontier joins the adjacency on ``v`` (the same orientation as the
     LPA/H-index rounds), so ``prepartitioned=True`` with a
     ``communities.write_symmetric_edges`` table (bucketed on v) runs every
     BFS round with zero edge-side Exchange; pass such a table as ``edges``
     with ``src="u", dst="v"``."""
-    if prepartitioned:
-        sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    else:
-        sym = (
-            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-            .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-            .filter(F.col("u").isNotNull() & F.col("v").isNotNull() & (F.col("u") != F.col("v")))
-            .dropDuplicates(["u", "v"])
-            .localCheckpoint(eager=True)
-        )
+    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    if not prepartitioned:
+        sym = symmetric_adjacency(sym)
     reached = (
         seeds.select(F.col(seeds.columns[0]).alias("entity_id"))
         .distinct()
@@ -218,17 +213,10 @@ def re_embed_targets(
     F.aggregate/F.zip_with over the zipped arrays — no Python on the data
     path; the embedding computation itself is the environment-gated C3
     kernel (kernel/embed.py) upstream of this operator."""
-    dot = F.aggregate(
-        F.zip_with(F.col(vec_col), F.col(new_vec_col), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
+    old, new = F.col(vec_col), F.col(new_vec_col)
     joined = chunks.select(id_col, vec_col).join(new_summaries, id_col)
     scored = joined.withColumn(
-        "cosine", dot / (norm(vec_col) * norm(new_vec_col) + F.lit(1e-8))
+        "cosine", _dot(old, new) / (_norm(old) * _norm(new) + F.lit(1e-8))
     )
     return scored.select(
         id_col,

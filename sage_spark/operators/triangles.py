@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .graph import undirected_pairs
+
 
 def co_mention_edges(
     mentions: DataFrame,
@@ -70,13 +72,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     Returns (entity, degree, triangles, clustering) for every vertex with
     degree >= 1; clustering = 2*T / (deg*(deg-1)), 0.0 when deg < 2.
     """
-    canon = (
-        edges.select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    canon = undirected_pairs(edges)
     deg = (
         canon.select(F.col("u").alias("ent"))
         .unionByName(canon.select(F.col("v").alias("ent")))

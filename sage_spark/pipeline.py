@@ -98,10 +98,12 @@ def run_pipeline(
     claims_hook=None,
 ) -> PipelineResult:
     """claims_hook, when given, is called with this run's claims DataFrame
-    after all table upserts commit and before the staging dir is dropped —
-    the seam maintenance consumers (e.g. the incremental component store,
-    operators/components.maintain_component_store) attach to without
-    re-extracting the batch."""
+    after every other table upsert and before the ``documents`` upsert that
+    commits the batch — the seam maintenance consumers (e.g. the
+    incremental component store, operators/components.maintain_component_
+    store) attach to without re-extracting the batch. A hook that dies
+    leaves the batch uncommitted, so a rerun replays it and calls the hook
+    again; the hook must re-derive the same rows on that replay."""
     # --- stage 1: byte-deterministic text extraction --------------------------
     documents = extract_documents(webtext, lang_filter=lang_filter)
     # Content-level dedupe (P4/J10): pages with identical extracted text share
@@ -169,13 +171,13 @@ def run_pipeline(
 
     # --- stage 5: materialize ---------------------------------------------------
     # `documents` is the skip-if-exists gate, so it is upserted LAST, after
-    # `runs`: it is the batch's commit record. A job that dies before it
-    # leaves the batch's documents absent, so a rerun replays the batch
-    # instead of anti-joining the half-written batch away. Up to the facts
-    # upsert that replay reaches a clean run's store (keyed upserts; support
-    # is re-derived from the edge store). Once facts have landed, the replay
-    # sees the batch's own facts, so its claims' statuses and the run's
-    # conflict count differ from a clean run's.
+    # `runs` and the claims hook: it is the batch's commit record. A job that
+    # dies before it leaves the batch's documents absent, so a rerun replays
+    # the batch instead of anti-joining the half-written batch away. Up to
+    # the facts upsert that replay reaches a clean run's store (keyed
+    # upserts; support is re-derived from the edge store). Once facts have
+    # landed, the replay sees the batch's own facts, so its claims' statuses
+    # and the run's conflict count differ from a clean run's.
     chunks, chunks_seen = _observed(chunks, rows=F.count(F.lit(1)))
     store.upsert(chunks, "chunks", ["chunk_id"])
     store.upsert(updated_claims, "claims", ["claim_id"])
@@ -249,6 +251,8 @@ def run_pipeline(
         RUNS_SCHEMA,
     )
     store.upsert(runs.unionByName(summary), "runs", ["run_id", "partition_id", "stage"])
+    if claims_hook is not None:
+        claims_hook(claims)
     store.upsert(documents.drop("message_id"), "documents", ["doc_id"])
 
     fact_counts = facts_seen.get
@@ -261,7 +265,5 @@ def run_pipeline(
         conflicts=conflict_count,
         edges=edges_seen.get["rows"],
     )
-    if claims_hook is not None:
-        claims_hook(claims)
     store.drop(f"_staging/{run_id}")
     return result

@@ -339,12 +339,17 @@ def test_fingerprint_normalization(spark):
 
 def test_connected_components_two_islands(spark):
     edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y")], "src string, dst string"
+        [("a", "b"), ("b", "c"), ("x", "y"), ("s", "s"), ("n", None), (None, "m")],
+        "src string, dst string",
     )
     comp = {r["vertex"]: r["component"] for r in connected_components(edges).collect()}
     assert comp["a"] == comp["b"] == comp["c"] == "a"
     assert comp["x"] == comp["y"] == "x"
     assert comp["a"] != comp["x"]
+    # a vertex whose only edge is a self-loop is a component of its own;
+    # an edge with a null endpoint contributes no vertex at all
+    assert comp["s"] == "s"
+    assert set(comp) == {"a", "b", "c", "x", "y", "s"}
 
 
 def _cc_map(df) -> dict:

@@ -311,14 +311,15 @@ def test_lpa_vote_plan_no_cartesian_partial_agg(spark):
     join must stay an equality hash join (hub votes can't survive a
     nested-loop blow-up at 10^12 edges) and the vote count must partial-
     aggregate map-side so a hub's in-votes combine before the shuffle."""
-    from sage_spark.operators.communities import _symmetric, lpa_round
+    from sage_spark.operators.communities import lpa_round
+    from sage_spark.operators.graph import symmetric_adjacency
 
     import pyspark.sql.functions as F
 
     edges = spark.createDataFrame(
         [(f"v{i}", f"v{(i * 7 + 1) % 40}") for i in range(60)], "u string, v string"
     )
-    sym = _symmetric(edges)
+    sym = symmetric_adjacency(edges)
     labels = sym.select(F.col("u").alias("vertex")).distinct().withColumn(
         "label", F.col("vertex")
     )
@@ -332,14 +333,15 @@ def test_core_numbers_round_plan_no_cartesian(spark):
     joins + window + aggregate only — no nested-loop product anywhere, at
     any iteration (localCheckpoint keeps the plan per-round, so round 1's
     plan IS the steady-state plan)."""
-    from sage_spark.operators.communities import _symmetric, hindex_round
+    from sage_spark.operators.communities import hindex_round
+    from sage_spark.operators.graph import symmetric_adjacency
 
     import pyspark.sql.functions as F
 
     edges = spark.createDataFrame(
         [(f"v{i}", f"v{(i * 3 + 2) % 25}") for i in range(50)], "u string, v string"
     )
-    sym = _symmetric(edges)
+    sym = symmetric_adjacency(edges)
     vals = sym.groupBy(F.col("u").alias("vertex")).agg(F.count("*").alias("value"))
     plan = _plan(spark, hindex_round(sym, vals))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan

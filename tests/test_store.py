@@ -206,19 +206,21 @@ def _kg_state(spark, store: TableStore, run_id: str) -> dict[str, list[str]]:
     return state
 
 
-def test_crash_mid_materialization_resumes_to_the_clean_store(spark, tmp_path):
-    """A batch that dies after some of its upserts landed, and is rerun
-    with the same run id and timestamp, leaves the store a clean run
-    leaves: the skip-if-exists gate (`documents`) commits last, so the
-    rerun replays the batch instead of skipping its documents."""
+def _clean_and_resumed(spark, tmp_path, crash_on: str, hook=None) -> tuple[TableStore, TableStore]:
+    """Two batches into a clean store, and into a store whose ``crash_on``
+    upsert dies once during the second batch, which is then rerun with the
+    same run id and timestamp. ``hook(store, claims)``, when given, is each
+    run's claims hook. Returns (clean, crashed)."""
     groups = build_groups()
     first, persons_df = synth_webtext(spark, 20, n_persons=10, seed=7, partitions=2)
     persons = [r.asDict() for r in persons_df.collect()]
     full, _ = synth_webtext(spark, 30, n_persons=10, seed=7, partitions=2)
 
-    def run(store, webtext, run_id: str) -> PipelineResult:
-        return run_pipeline(
-            spark, webtext, persons, groups, store, run_id=run_id, run_ts="2026-04-02T00:00:00+00:00"
+    def run(store, webtext, run_id: str) -> None:
+        run_pipeline(
+            spark, webtext, persons, groups, store, run_id=run_id,
+            run_ts="2026-04-02T00:00:00+00:00",
+            claims_hook=hook and (lambda claims: hook(store, claims)),
         )
 
     clean = TableStore(tmp_path / "clean", buckets=4)
@@ -227,8 +229,33 @@ def test_crash_mid_materialization_resumes_to_the_clean_store(spark, tmp_path):
 
     crashed = _CrashOnce(tmp_path / "crashed", buckets=4)
     run(crashed, first, "c1")
-    crashed.crash_on = "facts"
+    crashed.crash_on = crash_on
     with pytest.raises(RuntimeError, match="injected crash"):
         run(crashed, full, "c2")
     run(crashed, full, "c2")
+    return clean, crashed
+
+
+def test_crash_mid_materialization_resumes_to_the_clean_store(spark, tmp_path):
+    """A batch that dies after some of its upserts landed, and is rerun
+    with the same run id and timestamp, leaves the store a clean run
+    leaves: the skip-if-exists gate (`documents`) commits last, so the
+    rerun replays the batch instead of skipping its documents."""
+    clean, crashed = _clean_and_resumed(spark, tmp_path, "facts")
     assert _kg_state(spark, crashed, "c2") == _kg_state(spark, clean, "c2")
+
+
+def test_crash_in_component_maintenance_resumes_to_the_clean_store(spark, tmp_path):
+    """The claims hook (here the incremental component store) runs before
+    the `documents` commit record: a batch whose `components` upsert dies
+    is rerun in full, and the rerun leaves the components and documents a
+    clean run leaves."""
+    from sage_spark.operators.components import claim_entity_edges, maintain_component_store
+
+    def maintain(store, claims):
+        maintain_component_store(spark, store, claim_entity_edges(claims))
+
+    clean, crashed = _clean_and_resumed(spark, tmp_path, "components", maintain)
+    for table in ("components", "documents"):
+        rows = [sorted(map(repr, store.read(spark, table).collect())) for store in (clean, crashed)]
+        assert rows[0] == rows[1], table

@@ -4,6 +4,7 @@ oracle."""
 
 from __future__ import annotations
 
+import time
 from datetime import datetime, timedelta
 
 import pytest
@@ -188,7 +189,17 @@ def test_stateful_sessionize_stream_matches_batch_oracle(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ckpt2"))
         .start()
     )
-    q.awaitTermination(300)
+    # the processing-time timeout keeps this availableNow query running
+    # no-data batches forever, so wait for the input rows to be committed
+    # rather than for termination, and always stop it
+    try:
+        deadline = time.monotonic() + 120
+        while sum(p["numInputRows"] for p in q.recentProgress) < len(_event_rows()):
+            assert q.isActive, q.exception()
+            assert time.monotonic() < deadline, q.recentProgress
+            time.sleep(0.5)
+    finally:
+        q.stop()
     got = spark.sql("SELECT * FROM sess_out").collect()
     # one closed session per user is emitted (the second stays open in state)
     oracle = batch_sessionize(events, gap_seconds=1800)
