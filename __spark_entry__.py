@@ -22,7 +22,7 @@ from sage_spark.datagen import build_groups, build_persons, synth_webtext
 from sage_spark.kernel.embed import hash_embedding
 from sage_spark.operators.canonicalize import canonicalize_claims, split_facts
 from sage_spark.operators.chunking import build_chunks
-from sage_spark.operators.components import canonical_entity_components
+from sage_spark.operators.components import canonical_entity_components, claim_entity_edges
 from sage_spark.operators.dedup import (
     embedding_near_duplicates,
     exact_dedup,
@@ -400,9 +400,10 @@ def q_agg_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """30-minute-gap sessionization of the events stream (batch oracle form
-    of the streaming applyInPandasWithState operator)."""
-    from sage_spark.streaming.events import batch_sessionize
+    """30-minute-gap sessionization of the events table: per user, the
+    session count and the largest session's event count
+    (operators/rollup.py)."""
+    from sage_spark.operators.rollup import batch_sessionize
 
     events = _read(spark, sf_dir, "events")
     sessions = batch_sessionize(events, gap_seconds=1800)
@@ -1136,10 +1137,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay of the same fixed-iteration recurrence."""
     from sage_spark.operators.pagerank import pagerank
 
-    claims = _synth_claims(spark)
-    edges = claims.filter(
-        F.col("subject_entity_id").isNotNull() & F.col("object_entity_id").isNotNull()
-    ).select(F.col("subject_entity_id").alias("src"), F.col("object_entity_id").alias("dst"))
+    edges = claim_entity_edges(_synth_claims(spark))
     ranks = pagerank(edges, damping=0.85, iterations=20)
     return ranks.select("v", F.round("rank", 6).alias("rank")).orderBy("v")
 
@@ -1147,12 +1145,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _synth_entity_edges(spark: SparkSession) -> DataFrame:
     """The entity mention graph shared by the iterative graph queries:
     subject -> object pairs of fully-resolved synthetic claims."""
-    claims = _synth_claims(spark)
-    return claims.filter(
-        F.col("subject_entity_id").isNotNull() & F.col("object_entity_id").isNotNull()
-    ).select(
-        F.col("subject_entity_id").alias("u"), F.col("object_entity_id").alias("v")
-    )
+    return claim_entity_edges(_synth_claims(spark)).toDF("u", "v")
 
 
 def q_graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1184,9 +1177,7 @@ def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     serial replay of the seed-teleport recurrence."""
     from sage_spark.operators.pagerank import personalized_pagerank
 
-    edges = _synth_entity_edges(spark).select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    )
+    edges = claim_entity_edges(_synth_claims(spark))
     verts = edges.select(F.col("src").alias("x")).unionByName(
         edges.select(F.col("dst").alias("x"))
     )
@@ -1416,10 +1407,7 @@ def q_kg_impact_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch, facts, store_claims = _synth_split(spark)
     diff = fact_diff(batch, facts)
     seeds = changed_entities(diff, batch)
-    edges = store_claims.filter(
-        F.col("subject_entity_id").isNotNull() & F.col("object_entity_id").isNotNull()
-    ).select(F.col("subject_entity_id").alias("src"), F.col("object_entity_id").alias("dst"))
-    out = impact_radius(seeds, edges, max_depth=2)
+    out = impact_radius(seeds, claim_entity_edges(store_claims), max_depth=2)
     return out.select("entity_id", F.col("depth").cast("long").alias("depth")).orderBy("entity_id")
 
 

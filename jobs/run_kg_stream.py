@@ -32,6 +32,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from sage_spark.schema import RUNS_SCHEMA  # noqa: E402
 from sage_spark.session import build_spark  # noqa: E402
 from sage_spark.store import TableStore  # noqa: E402
 from sage_spark.streaming.ingest import start_kg_ingestion, stream_webtext_from_dir  # noqa: E402
@@ -91,7 +92,8 @@ def main() -> None:
     )
     query.awaitTermination()
 
-    runs = store.read(spark, "runs")
+    # a drain that found no files leaves a fresh store without a runs table
+    runs = store.read(spark, "runs", RUNS_SCHEMA)
     this_run = runs.filter(F.col("run_id").startswith(f"{args.run_prefix}-"))
     summary = {
         "batches": this_run.select("run_id").distinct().count(),

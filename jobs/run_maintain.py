@@ -40,6 +40,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from pyspark.sql import functions as F  # noqa: E402
 
 from sage_spark.datagen import build_groups, synth_webtext  # noqa: E402
+from sage_spark.operators.components import claim_entity_edges  # noqa: E402
 from sage_spark.operators.extraction import extract_claims_stage, extract_documents  # noqa: E402
 from sage_spark.operators.incremental import (  # noqa: E402
     affected_documents,
@@ -130,9 +131,7 @@ def main() -> None:
     # the non-confirmed diff rows touch (the materialized graph is what
     # downstream artifacts were built from, so it defines staleness) ---------
     seeds = changed_entities(diff, batch_claims)
-    edges = store_claims.filter(
-        F.col("subject_entity_id").isNotNull() & F.col("object_entity_id").isNotNull()
-    ).select(F.col("subject_entity_id").alias("src"), F.col("object_entity_id").alias("dst"))
+    edges = claim_entity_edges(store_claims)
     impacted = impact_radius(seeds, edges, max_depth=args.max_depth)
 
     if args.rank_impact:

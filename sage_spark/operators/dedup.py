@@ -112,43 +112,6 @@ def _minhash_signature_arrow(
     return df.select(id_col, text_col).mapInPandas(compute, out_schema)
 
 
-def banded_minhash_buckets(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    shingle_len: int = 5,
-    num_hashes: int = 64,
-    bands: int = 16,
-) -> DataFrame:
-    """(id, band, bucket) rows: one row per document per band, bucket =
-    xxhash64 over the band's signature rows. The shared front half of
-    batch LSH candidate generation and the streaming near-dup index."""
-    rows_per_band = num_hashes // bands
-    sig = minhash_signature_wide(
-        df.select(id_col, text_col), text_col, id_col, shingle_len=shingle_len, num_hashes=num_hashes
-    )
-    return sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ":",
-                                *[F.col(f"mh_{band * rows_per_band + r}") for r in range(rows_per_band)],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for band in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -172,9 +135,31 @@ def minhash_lsh_candidates(
     (buckets over the cap) and ``dropped_pairs`` (candidate pairs lost to the
     cap) — raise the cap to recover them.
     """
-    banded = banded_minhash_buckets(
-        df, text_col, id_col, shingle_len=shingle_len, num_hashes=num_hashes, bands=bands
+    # one (id, band, bucket) row per document per band, bucket = xxhash64
+    # over the band's signature rows
+    rows_per_band = num_hashes // bands
+    sig = minhash_signature_wide(
+        df.select(id_col, text_col), text_col, id_col, shingle_len=shingle_len, num_hashes=num_hashes
     )
+    banded = sig.select(
+        F.col(id_col),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(band).alias("band"),
+                        F.xxhash64(
+                            F.concat_ws(
+                                ":",
+                                *[F.col(f"mh_{band * rows_per_band + r}") for r in range(rows_per_band)],
+                            )
+                        ).alias("bucket"),
+                    )
+                    for band in range(bands)
+                ]
+            )
+        ).alias("bb"),
+    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
     # Pairs via bucket groupBy + in-array combination instead of a self-join:
     # signatures are computed exactly once, and the only shuffle keys on the
     # short (band, bucket) pair.

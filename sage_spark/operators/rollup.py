@@ -1,4 +1,5 @@
-"""Hypertable-style continuous aggregate: hierarchical time-bucket rollups.
+"""Events-table aggregates: hierarchical time-bucket rollups
+(``hypertable_rollup``) and gap-based sessionization (``batch_sessionize``).
 
 Timescale's continuous aggregates materialize a finest-granularity bucket
 table and derive every coarser level by REAGGREGATING the finer one (sum of
@@ -10,12 +11,14 @@ touches the buckets a new batch lands in.
 
 Composed entirely from groupBy/agg; correctness rests on the reaggregation
 property of (count, sum, min, max) — mean is derived at read time, never
-averaged across levels.
+averaged across levels. Sessionization is two window functions over the
+user's events ordered by time (gap flag, then its running sum).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.window import Window
 
 _LEVELS = ("minute", "hour", "day", "week", "month")
 
@@ -79,3 +82,28 @@ def hypertable_rollup(
         )
         out = level_df if out is None else out.unionByName(level_df)
     return out
+
+
+def batch_sessionize(events: DataFrame, *, gap_seconds: int = 1800) -> DataFrame:
+    """Per-user sessions of an events table: a session starts where the gap
+    from the user's previous event exceeds ``gap_seconds``, and a running
+    sum of those starts labels the sessions. Returns (user_id, session_id,
+    session_start, session_end, n_events), session_id counting from 1."""
+    w = Window.partitionBy("user_id").orderBy("ts")
+    flagged = events.withColumn(
+        "new_session",
+        (
+            F.coalesce(
+                F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w)) > gap_seconds,
+                F.lit(True),
+            )
+        ).cast("int"),
+    ).withColumn("session_id", F.sum("new_session").over(w))
+    return (
+        flagged.groupBy("user_id", "session_id")
+        .agg(
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
+            F.count("*").alias("n_events"),
+        )
+    )

@@ -15,10 +15,10 @@ cost scales with the batch's touched buckets, not the store, which is the
 parquet analog of an Iceberg MERGE at 10^12-row store scale. Every bucketed
 write clusters its rows on the bucket first, so each touched bucket dir is
 rewritten by one task into exactly one file: a long ingest never fragments
-the dirs. Each table records its bucket count and hash keys in
-``_LAYOUT.json``; upserts, pruned reads and compaction refuse a table whose
-record is missing (written flat, or externally) or differs from the store's,
-while plain ``read`` still serves it. Iceberg additionally gives atomic
+the dirs. Each table records its bucket count and hash keys (always its
+upsert keys) in ``_LAYOUT.json``; upserts and compaction refuse a table
+whose record is missing (written flat, or externally) or differs from the
+store's, while plain ``read`` still serves it. Iceberg additionally gives atomic
 snapshot commits; dynamic overwrite swaps each touched bucket dir
 non-atomically, an accepted stand-in here.
 
@@ -105,42 +105,37 @@ class TableStore:
             shutil.rmtree(aside)
 
     # -- layout metadata ---------------------------------------------------
-    def _write_layout(self, target: Path, layout_keys: list[str]) -> None:
+    def _write_layout(self, target: Path, keys: list[str]) -> None:
         (target / LAYOUT_FILE).write_text(
-            json.dumps({"version": 1, "buckets": self.buckets, "layout_keys": layout_keys})
+            json.dumps({"version": 1, "buckets": self.buckets, "layout_keys": keys})
         )
 
     def _read_layout(self, table: str) -> dict:
         """The table's layout record; a table without one (written flat,
         before layout versioning, or externally) fails loudly rather than
-        being merged into, probed or compacted as if its dirs were hashed."""
+        being merged into or compacted as if its dirs were hashed."""
         p = self.path(table) / LAYOUT_FILE
         if not p.exists():
             raise ValueError(
                 f"table {table!r} has no {LAYOUT_FILE}: it predates layout "
-                "versioning (or was written externally); rebuild it or record its "
-                "layout with adopt_layout() before upserting/probing/compacting"
+                "versioning (or was written externally); rebuild it (read, drop, "
+                "upsert its rows) before upserting into or compacting it"
             )
         return json.loads(p.read_text())
 
-    def _check_layout(self, table: str, layout_keys: list[str]) -> None:
-        """Bucketed dirs are only prunable if reader and writer agree on the
-        hash inputs; a silent mismatch (e.g. a pre-``batch_seq`` index laid
-        out by (doc_id, band) probed by (band, bucket)) reads the WRONG dirs
-        and misses rows with no error. Fail loudly instead."""
+    def _check_layout(self, table: str, keys: list[str]) -> None:
+        """The touched-bucket merge is only correct if every writer hashes
+        the same key columns into the same bucket count; a silent mismatch
+        reads and rewrites the WRONG dirs, leaving stale duplicates of the
+        updated keys. Fail loudly instead."""
         rec = self._read_layout(table)
-        if rec["buckets"] != self.buckets or rec["layout_keys"] != layout_keys:
+        if rec["buckets"] != self.buckets or rec["layout_keys"] != keys:
             raise ValueError(
                 f"bucketed table {table!r} layout mismatch: stored "
                 f"(buckets={rec['buckets']}, keys={rec['layout_keys']}) vs requested "
-                f"(buckets={self.buckets}, keys={layout_keys}); pruned reads against "
-                "a differently-hashed layout would silently miss rows"
+                f"(buckets={self.buckets}, keys={keys}); merging into a "
+                "differently-hashed layout would silently miss rows"
             )
-
-    def adopt_layout(self, table: str, layout_keys: list[str]) -> None:
-        """Explicit migration for tables written before layout versioning:
-        records the layout the caller asserts the dirs were hashed by."""
-        self._write_layout(self.path(table), layout_keys)
 
     def read(self, spark: SparkSession, table: str, schema: StructType | None = None) -> DataFrame:
         if not self.exists(table):
@@ -161,34 +156,18 @@ class TableStore:
         df.write.mode("overwrite").parquet(str(tmp))
         self._swap_in(tmp, target)
 
-    def append(self, df: DataFrame, table: str) -> None:
-        # recover first: appending while the table path is absent after a
-        # crashed swap would recreate it fresh and orphan the complete
-        # .__old__ copy (silently rmtree'd by the next swap) — the same
-        # loss window _recover closes for read/overwrite/upsert/compact
-        self._recover(table)
-        df.write.mode("append").parquet(str(self.path(table)))
-
     def _bucket_expr(self, keys: list[str]) -> Column:
         key = F.concat_ws("\x1f", *[F.col(k).cast("string") for k in keys])
         return F.pmod(F.xxhash64(key), F.lit(self.buckets)).cast("int")
 
-    def upsert(
-        self, df: DataFrame, table: str, keys: list[str], *, layout_keys: list[str] | None = None
-    ) -> None:
+    def upsert(self, df: DataFrame, table: str, keys: list[str]) -> None:
         """Iceberg-MERGE-equivalent: updates win over existing rows on key.
 
-        Reads and rewrites only the bucket dirs the updates hash into: the
-        scan prunes untouched ``__bucket=K/`` partitions and the write uses
-        dynamic partition overwrite, so per-batch IO is O(touched buckets).
-
-        ``layout_keys`` decouples the partition-dir hash from the upsert
-        identity: lay the table out by the columns the READ side probes on
-        (e.g. an LSH index keyed (doc_id, band) but probed by (band, bucket))
-        so point reads prune too, not just writes. Requires content-immutable
-        rows — a key's layout-column values must never change across upserts,
-        which holds for this store's hash-identity tables; otherwise a stale
-        row could survive in a dir the new version's hash no longer touches.
+        Rows are hashed into bucket dirs by ``keys``, so every version of a
+        key lands in the same dir. Reads and rewrites only the bucket dirs
+        the updates hash into: the scan prunes untouched ``__bucket=K/``
+        partitions and the write uses dynamic partition overwrite, so
+        per-batch IO is O(touched buckets).
         """
         spark = df.sparkSession
         # pin the lineage before it is consumed twice (the existing-bucket
@@ -204,7 +183,7 @@ class TableStore:
         seen = Observation()
         updates = (
             df.dropDuplicates(keys)
-            .withColumn(BUCKET_COL, self._bucket_expr(layout_keys or keys))
+            .withColumn(BUCKET_COL, self._bucket_expr(keys))
             .observe(seen, F.count(F.lit(1)).alias("rows"), F.collect_set(BUCKET_COL).alias("touched"))
             .localCheckpoint(eager=True)
         )
@@ -225,10 +204,10 @@ class TableStore:
             # layout rides inside tmp BEFORE the publish rename: a crash
             # after the rename (or a _recover that adopts this staged dir)
             # must never yield a bucketed table without its layout record
-            self._write_layout(tmp, layout_keys or keys)
+            self._write_layout(tmp, keys)
             tmp.rename(target)
             return
-        self._check_layout(table, layout_keys or keys)
+        self._check_layout(table, keys)
         if not rows:
             return
         existing = (
@@ -251,43 +230,7 @@ class TableStore:
             writer = writer.option("partitionOverwriteMode", "dynamic")
         writer.partitionBy(BUCKET_COL).parquet(str(path))
 
-    def read_pruned(
-        self,
-        spark: SparkSession,
-        table: str,
-        layout_values: DataFrame,
-        schema: StructType | None = None,
-        *,
-        layout_keys: list[str] | None = None,
-    ) -> DataFrame:
-        """Read only the bucket dirs the given layout-key rows hash into.
-
-        ``layout_values`` holds the probe side's layout columns (e.g. the
-        batch's (band, bucket) pairs); the touched bucket-id set is bounded
-        by ``self.buckets`` — a scalar list, never data-sized — and the scan
-        prunes to those ``__bucket=K/`` dirs, the read-side twin of the
-        upsert's touched-bucket pruning. An absent table reads as empty;
-        a table whose layout record is missing or differs from the probe's
-        is REFUSED (a mismatched hash would silently read the wrong dirs
-        and miss rows). When ``schema`` is given the result is reconciled
-        to it — missing columns (a table written before a schema evolution,
-        e.g. pre-``batch_seq`` index rows) surface as typed nulls instead
-        of an AnalysisException.
-        """
-        if not self.exists(table):
-            return _reconcile(self.read(spark, table, schema), schema)
-        keys = layout_keys or layout_values.columns
-        self._check_layout(table, keys)
-        touched = sorted(
-            r[0]
-            for r in layout_values.select(self._bucket_expr(keys).alias(BUCKET_COL))
-            .distinct()
-            .collect()
-        )
-        df = spark.read.parquet(str(self.path(table))).filter(F.col(BUCKET_COL).isin(touched))
-        return _reconcile(df.drop(BUCKET_COL), schema)
-
-    def compact(self, spark: SparkSession, table: str, *, keep: Column | None = None) -> None:
+    def compact(self, spark: SparkSession, table: str) -> None:
         """Maintenance rewrite (Iceberg's rewrite_data_files analog). Upserts
         already leave one file per touched bucket dir, but dirs written any
         other way (appends from several tasks, tables laid down before
@@ -297,34 +240,13 @@ class TableStore:
         dir + rename-aside swap so a killed compaction never corrupts the
         table: the old table is renamed aside before the new one lands and
         ``_recover`` restores whichever complete copy survives a crash.
-        A table without a layout record raises instead of being rewritten.
-
-        ``keep`` optionally filters rows during the rewrite (rows where the
-        predicate is false are dropped) — the eviction/TTL primitive for
-        unbounded state tables (e.g. the streaming LSH index, keyed by
-        ``batch_seq``); layout and bucket assignment of surviving rows are
-        unchanged, so pruned reads keep working."""
+        A table without a layout record raises instead of being rewritten."""
         self._recover(table)
         target = self.path(table)
         if not target.exists():
             return
         layout = self._read_layout(table)
         df = spark.read.parquet(str(target))
-        if keep is not None:
-            df = df.filter(keep)
-        if df.isEmpty():
-            # a partitionBy write of zero rows leaves a dir with no parquet
-            # files — unreadable (UNABLE_TO_INFER_SCHEMA) and it wedges
-            # every later read/upsert. Zero survivors (e.g. a TTL horizon
-            # past the newest batch) instead drops the table: schema'd
-            # reads (read/read_pruned with schema) treat absent as
-            # typed-empty and the next upsert recreates it with a fresh
-            # layout record. A crash mid-delete can only leave extra rows
-            # that were due for eviction anyway (re-dropped by the next
-            # compact) or a layout-less remnant that fails loudly — never
-            # silent loss.
-            shutil.rmtree(target)
-            return
         tmp = target.with_name(target.name + ".__compact__")
         if tmp.exists():
             shutil.rmtree(tmp)
@@ -344,14 +266,3 @@ class TableStore:
             if p.exists():
                 shutil.rmtree(p)
 
-
-def _reconcile(df: DataFrame, schema: StructType | None) -> DataFrame:
-    """Project ``df`` onto ``schema``: missing columns become typed nulls,
-    extra columns are dropped. No-op when no schema is requested."""
-    if schema is None:
-        return df
-    cols = [
-        F.col(f.name).cast(f.dataType) if f.name in df.columns else F.lit(None).cast(f.dataType).alias(f.name)
-        for f in schema.fields
-    ]
-    return df.select(cols)

@@ -478,14 +478,15 @@ def test_store_crash_recovery_and_layout_versioning(spark, tmp_path):
     """The round-4 advice items on store.py: (a) a crash inside the
     compact/overwrite swap must never lose the table — whichever complete
     copy survives (the aside-renamed old table or a _SUCCESS-marked staged
-    dir) is restored on the next access; (b) pruned reads against a table
-    whose recorded bucket layout differs from the probe's must fail loudly,
-    not silently read the wrong dirs; (c) read_pruned(schema=...) reconciles
-    a pre-schema-evolution table to the requested schema as typed nulls."""
+    dir) is restored on the next access; (b) an upsert keyed differently
+    from the table's recorded layout must fail loudly, not silently merge
+    into the wrong dirs; (c) compaction preserves the layout record, so
+    later upserts still merge; (d) a table without a layout record is
+    refused."""
     import shutil
 
     import pytest
-    from pyspark.sql import functions as F, types as T
+    from pyspark.sql import types as T
 
     from sage_spark.store import TableStore
 
@@ -512,39 +513,20 @@ def test_store_crash_recovery_and_layout_versioning(spark, tmp_path):
     assert store.read(spark, "t", schema).count() == 0
     shutil.rmtree(root / "t.__tmp__")
 
-    # layout versioning: mismatched probe keys refuse to prune
-    store.upsert(
-        spark.createDataFrame(rows, "k string, v int"), "u", ["k"], layout_keys=["v"]
-    )
-    probe = spark.createDataFrame([("id1", 1)], "k string, v int")
-    pruned = store.read_pruned(spark, "u", probe.select("v"), layout_keys=["v"])
-    assert pruned.count() >= 1
+    # layout versioning: keys other than the recorded ones refuse to merge
+    store.upsert(spark.createDataFrame(rows, "k string, v int"), "u", ["k"])
+    probe = spark.createDataFrame([("id1", 100)], "k string, v int")
     with pytest.raises(ValueError, match="layout mismatch"):
-        store.read_pruned(spark, "u", probe.select("k"), layout_keys=["k"])
-    with pytest.raises(ValueError, match="layout mismatch"):
-        store.upsert(probe, "u", ["k"])  # default layout (k) != recorded (v)
-    # a pre-versioning table (no _LAYOUT.json) fails loudly until adopted
+        store.upsert(probe, "u", ["v"])  # requested (v) != recorded (k)
+    # compaction preserves the layout record: the next upsert still merges
+    store.compact(spark, "u")
+    store.upsert(probe, "u", ["k"])
+    got = {r["k"]: r["v"] for r in store.read(spark, "u").collect()}
+    assert len(got) == 50 and got["id1"] == 100
+    # a pre-versioning table (no _LAYOUT.json) fails loudly
     (root / "u" / "_LAYOUT.json").unlink()
     with pytest.raises(ValueError, match="predates layout versioning"):
-        store.read_pruned(spark, "u", probe.select("v"), layout_keys=["v"])
-    store.adopt_layout("u", ["v"])
-    assert store.read_pruned(spark, "u", probe.select("v"), layout_keys=["v"]).count() >= 1
-    # compaction preserves the layout record and subsequent pruning
-    store.compact(spark, "u")
-    assert store.read_pruned(spark, "u", probe.select("v"), layout_keys=["v"]).count() >= 1
-
-    # schema reconcile: a table written before a column existed reads back
-    # with the new column as typed nulls on the pruned path
-    wider = T.StructType(
-        [
-            T.StructField("k", T.StringType()),
-            T.StructField("v", T.IntegerType()),
-            T.StructField("batch_seq", T.LongType()),
-        ]
-    )
-    rec = store.read_pruned(spark, "u", probe.select("v"), wider, layout_keys=["v"])
-    assert rec.columns == ["k", "v", "batch_seq"]
-    assert rec.filter(F.col("batch_seq").isNull()).count() == rec.count() > 0
+        store.upsert(probe, "u", ["k"])
 
 
 def test_pipeline_resume_noop_with_bucketed_store(spark, tmp_path):
@@ -742,27 +724,13 @@ def test_dataprep_job_end_to_end(spark, tmp_path):
 
 
 def test_store_append_recovers_crashed_swap_and_empty_upsert_noop(spark, tmp_path):
-    """(a) append() into the crashed-swap window (table path absent, the
-    complete copy renamed aside) must recover the aside FIRST — appending
-    blind would recreate the table with only the new rows and the next swap
-    would silently rmtree the orphaned aside (permanent loss of all
-    pre-crash rows); (b) a bucketed upsert of an EMPTY batch against an
-    absent table is a no-op, never an unreadable zero-file partitioned dir;
-    (c) a staged .__tmp__ from a crash-after-write carries its layout
-    record, so _recover adoption yields a fully usable bucketed table."""
+    """A bucketed upsert of an EMPTY batch against an absent table is a
+    no-op, never an unreadable zero-file partitioned dir; and a staged
+    .__tmp__ from a crash-after-write carries its layout record, so
+    _recover adoption yields a fully usable bucketed table."""
     from pyspark.sql import types as T
 
     from sage_spark.store import LAYOUT_FILE, TableStore
-
-    root = tmp_path / "astore"
-    store = TableStore(root)
-    store.overwrite(spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int"), "t")
-
-    # crash window: table renamed aside (the _swap_in midpoint)
-    (root / "t").rename(root / "t.__old__")
-    store.append(spark.createDataFrame([("c", 3)], "k string, v int"), "t")
-    got = sorted(map(tuple, store.read(spark, "t").collect()))
-    assert got == [("a", 1), ("b", 2), ("c", 3)]
 
     bstore = TableStore(tmp_path / "bstore", buckets=4)
     schema = T.StructType(
@@ -853,10 +821,11 @@ def test_maintain_job_end_to_end(spark, tmp_path):
 
 
 def test_kg_stream_job_end_to_end(spark, tmp_path):
-    """jobs/run_kg_stream.py drain mode: first invocation ingests the files
-    present, a second invocation with a NEW file ingests only that file
-    (streaming checkpoint resume), and a third with nothing new is a no-op
-    on every store count."""
+    """jobs/run_kg_stream.py drain mode: a drain of an empty drop directory
+    into a fresh store prints an all-zero summary, the next invocation
+    ingests the files present, one with a NEW file ingests only that file
+    (streaming checkpoint resume), and one with nothing new is a no-op on
+    every store count."""
     import json
     import subprocess
     import sys
@@ -875,7 +844,6 @@ def test_kg_stream_job_end_to_end(spark, tmp_path):
     parts1 = list((tmp_path / "b1").glob("part-*.parquet"))
     parts2 = list((tmp_path / "b2").glob("part-*.parquet"))
     assert parts1 and parts2
-    parts1[0].rename(drop / "f1.parquet")
 
     def drain() -> dict:
         proc = subprocess.run(
@@ -890,6 +858,10 @@ def test_kg_stream_job_end_to_end(spark, tmp_path):
         )
         return json.loads([l for l in proc.stdout.splitlines() if l.startswith("{")][-1])
 
+    s0 = drain()
+    assert s0 == {"batches": 0, "documents_total": 0, "facts_current": 0}
+
+    parts1[0].rename(drop / "f1.parquet")
     s1 = drain()
     assert s1["batches"] == 1 and s1["documents_total"] > 0
 

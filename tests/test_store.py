@@ -100,8 +100,8 @@ def test_default_layout_is_16_buckets_and_layoutless_tables_are_refused(spark, t
     """A store built without a bucket count lays tables out in 16 hashed
     dirs with a layout record. A table without that record (written by
     ``overwrite``, as a flat store was) or with another bucket count still
-    reads, but an upsert, pruned read or compaction of it raises instead of
-    merging into dirs it cannot prune."""
+    reads, but an upsert or compaction of it raises instead of merging into
+    dirs it cannot prune."""
     store = TableStore(tmp_path / "s")
     df, rows = _batch(spark, 0, n=200)
     store.upsert(df, "t", ["k"])
@@ -114,8 +114,6 @@ def test_default_layout_is_16_buckets_and_layoutless_tables_are_refused(spark, t
     upd, _ = _batch(spark, 1, n=3)
     with pytest.raises(ValueError, match=f"no {LAYOUT_FILE}"):
         store.upsert(upd, "flat", ["k"])
-    with pytest.raises(ValueError, match=f"no {LAYOUT_FILE}"):
-        store.read_pruned(spark, "flat", upd.select("k"))
     with pytest.raises(ValueError, match=f"no {LAYOUT_FILE}"):
         store.compact(spark, "flat")
     assert {r["k"]: r["v"] for r in store.read(spark, "flat").collect()} == rows
