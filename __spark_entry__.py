@@ -25,7 +25,6 @@ from sage_spark.operators.chunking import build_chunks
 from sage_spark.operators.components import canonical_entity_components, claim_entity_edges
 from sage_spark.operators.dedup import (
     embedding_near_duplicates,
-    exact_dedup,
     exact_duplicates,
     minhash_lsh_candidates,
     near_dup_clusters,

@@ -2,7 +2,10 @@
 
 Reference parity: app/utils.py:81-82 (generate_doc_id), 109-140
 (chunk_document word-budget splitter with sentence overlap),
-app/services.py:1595 (chunk id scheme), app/utils.py:115 (sentence split).
+app/services.py:1583-1600 (single-chunk fast path), 1595 (chunk id scheme),
+app/utils.py:115 (sentence split). ``document_chunks`` is the per-document
+row function of stage 2 that operators/chunking.py and the serial oracle
+(kernel/expected.py) both call.
 """
 
 from __future__ import annotations
@@ -11,6 +14,10 @@ import hashlib
 import re
 
 _SENTENCE_SPLIT_RE = re.compile(r"(?<=[.!?])\s+")
+
+SINGLE_CHUNK_MAX_WORDS = 200  # services.py:1583-1600
+CHUNK_WORD_BUDGET = 250
+CHUNK_OVERLAP_SENTENCES = 2
 
 
 def content_doc_id(content: str) -> str:
@@ -28,7 +35,9 @@ def sentence_split(text: str) -> list[str]:
     return [s.strip() for s in _SENTENCE_SPLIT_RE.split(text) if s.strip()]
 
 
-def chunk_text(text: str, max_chunk_words: int = 250, overlap_sentences: int = 2) -> list[str]:
+def chunk_text(
+    text: str, max_chunk_words: int = CHUNK_WORD_BUDGET, overlap_sentences: int = CHUNK_OVERLAP_SENTENCES
+) -> list[str]:
     """Word-budget chunker with trailing-sentence overlap (utils.py:109-140).
 
     Accumulates sentences until the running word count exceeds the budget,
@@ -62,3 +71,12 @@ def chunk_text(text: str, max_chunk_words: int = 250, overlap_sentences: int = 2
         if emitted:
             chunks.append(emitted)
     return chunks
+
+
+def document_chunks(text: str) -> list[str]:
+    """Stage 2 for one document's content: a document of at most
+    SINGLE_CHUNK_MAX_WORDS words is one chunk (none when blank); a longer
+    one goes through the word-budget chunker."""
+    if len(text.split()) <= SINGLE_CHUNK_MAX_WORDS:
+        return [text] if text.strip() else []
+    return chunk_text(text)

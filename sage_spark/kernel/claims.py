@@ -8,9 +8,10 @@ resolution), 1015-1070 (canonical key, dedupe key, claim id), 1581-1636
 1607-1628 / 1716-1767 (commitment body post-processing), 2085-2131
 (grounding payload).
 
-All functions are pure: (sentence, context, catalog) -> claim dicts. The
-Spark stage in operators/extraction.py maps this over Arrow batches; there
-is no per-row Python anywhere else in the pipeline.
+All functions are pure: (sentence, context, catalog) -> claim dicts.
+``document_claims`` is the per-document row function of stage 3: the Spark
+stage in operators/extraction.py maps it over Arrow batches, and the serial
+oracle (kernel/expected.py) and tools/profile_extract.py call it directly.
 """
 
 from __future__ import annotations
@@ -26,22 +27,14 @@ from .entities import (
     Resolution,
     group_or_scope_subject,
     resolution_label,
-    unresolved,
 )
 
 # every resolution in the cascade goes through the per-catalog memo
 # (entities.resolve_reference_cached): same pure functions, dict-hit fast
 from .entities import resolve_reference_cached as resolve_reference  # noqa: E402
 from .entities import resolved_sender_cached as resolved_sender  # noqa: E402
-from .temporal import (
-    AT_CLOCK_RE,
-    CLOCK_RE,
-    TIME_WORD_RE,
-    resolve_temporal,
-    strip_temporal_tokens,
-    temporal_expressions,
-)
-from .text import collapse_ws, slug
+from .temporal import resolve_temporal, strip_temporal_tokens, temporal_expressions
+from .text import clean_message_text, collapse_ws, slug
 
 # --- thresholds & gates (saia.py:27-33) -------------------------------------
 ELIGIBLE_SOURCES = {"chat_message", "message_attachment"}
@@ -804,4 +797,32 @@ def extract_claims(
     for claim in claims:
         claim["claim_id"] = claim_identity(ctx.doc_id, claim)
         claim["canonical_key"] = canonical_key_for(claim)
+    return claims
+
+
+def document_claims(doc: dict[str, Any], catalog: Optional[EntityCatalog], run_ts: str) -> list[dict[str, Any]]:
+    """Stage 3 for one documents row: grounding context (a null sender,
+    receivers, timestamp or source takes the default below), text cleanup,
+    the eligibility gate, the cascade, then doc_id/claim_seq/sent_at stamped
+    on each claim. ``run_ts`` is the claims' created_at."""
+    ctx = MessageContext(
+        doc_id=doc["doc_id"],
+        sender_id=doc["sender"] or "",
+        receiver_ids=tuple(doc["receivers"]) if doc["receivers"] is not None else (),
+        message_id=doc["message_id"],
+        conversation_id=doc["conversation_id"],
+        conversation_type=doc["conversation_type"],
+        group_id=doc["group_id"],
+        sent_at=doc["timestamp"] or "1970-01-01T00:00:00+00:00",
+        source=doc["source"] or "chat_message",
+        source_kind=doc["source"] or "chat_message",
+    )
+    cleaned = clean_message_text(doc["content"] or "")
+    if not source_eligible(ctx, cleaned):
+        return []
+    claims = extract_claims(cleaned, ctx, catalog, created_at=run_ts)
+    for seq, claim in enumerate(claims):
+        claim["doc_id"] = ctx.doc_id
+        claim["claim_seq"] = seq
+        claim["sent_at"] = ctx.sent_at
     return claims

@@ -1,16 +1,22 @@
 """Pure-Python (no Spark) replay of the synthetic KG pipeline.
 
 The driver's DuckDB oracle needs ANSI-SQL-checkable expected rows for the KG
-queries, but the extraction cascade is not SQL-expressible. The kernel
-functions, however, ARE pure Python with differential-parity coverage against
-the reference (tests/test_kernel_parity.py, test_fuzz_parity.py), so the
-expected output of the whole pipeline over the deterministic synthetic corpus
-can be produced single-threaded with zero Spark machinery: generate pages ->
-extract text -> extract claims -> chunk -> replay fact mutations. The results
-are written to parquet once and the oracle SQL is a plain SELECT over them —
-which makes the driver's check a true differential test of the distributed
-plan (mapInPandas batching, repartition+sort replay streaming, window
-dedupes) against a serial reference run of the same kernel.
+queries, but the extraction cascade is not SQL-expressible. So the expected
+output of the whole pipeline over the deterministic synthetic corpus is
+produced single-threaded with zero Spark machinery: generate pages ->
+extract text -> extract claims -> chunk -> replay fact mutations. The
+results are written to parquet once and the oracle SQL is a plain SELECT
+over them.
+
+Stages 1-3 call the same per-document row functions the Spark operators map
+over Arrow batches (``pagetext.document_text``, ``chunks.document_chunks``,
+``claims.document_claims``), so this replay checks the distributed plan
+(mapInPandas batching and partitioning, the min-url first-per-doc and
+per-claim_id dedupes, the repartition+sort fact replay) against a serial
+run of the same row functions. The row functions themselves are guarded by
+the committed golden of this replay (tests/test_oracle_golden.py) and by
+differential parity against the reference (tests/test_kernel_parity.py,
+test_fuzz_parity.py).
 
 Reference anchors: extraction cascade app/saia.py:243-634, mutation loop
 app/saia.py:1015-1230, chunking app/utils.py:109-140.
@@ -21,16 +27,12 @@ from __future__ import annotations
 from typing import Any
 
 from ..datagen import build_groups, build_persons, make_page
-from .chunks import chunk_id_for, chunk_text, content_doc_id
-from .claims import extract_claims, source_eligible
-from .entities import EntityCatalog, MessageContext
+from .chunks import chunk_id_for, content_doc_id, document_chunks
+from .claims import document_claims
+from .entities import EntityCatalog
 from .facts import replay_key_mutations
-from .pagetext import text_from_html
-from .text import clean_message_text, fallback_summary
-
-SINGLE_CHUNK_MAX_WORDS = 200  # keep in lockstep with operators/chunking.py
-CHUNK_WORD_BUDGET = 250
-CHUNK_OVERLAP_SENTENCES = 2
+from .pagetext import document_text
+from .text import fallback_summary
 
 
 def expected_documents(
@@ -44,7 +46,7 @@ def expected_documents(
         page = make_page(i, seed, persons, n_groups)
         if lang_filter and page["lang"] != lang_filter:
             continue
-        text = text_from_html(page["html"]) if page["html"] is not None else (page["text"] or "")
+        text = document_text(page["html"], page["text"])
         doc_id = content_doc_id(text)
         row = {
             "doc_id": doc_id,
@@ -70,45 +72,18 @@ def expected_documents(
 def expected_claims(
     documents: list[dict[str, Any]], n_persons: int, seed: int, *, run_ts: str
 ) -> list[dict[str, Any]]:
-    """Stage-3 replay: eligibility gate + the seven-extractor cascade with
-    entity resolution, one row per claim (doc_id, claim_seq, sent_at added),
-    mirroring extract_claims_stage."""
+    """Stage-3 replay: ``document_claims`` per document, one row per claim,
+    against a catalog built from the generator's persons and groups."""
     catalog = EntityCatalog(build_persons(n_persons, seed), build_groups())
-    out: list[dict[str, Any]] = []
-    for doc in documents:
-        ctx = MessageContext(
-            doc_id=doc["doc_id"],
-            sender_id=doc["sender"] or "",
-            receiver_ids=tuple(doc["receivers"]) if doc["receivers"] is not None else (),
-            message_id=doc["message_id"],
-            conversation_id=doc["conversation_id"],
-            conversation_type=doc["conversation_type"],
-            group_id=doc["group_id"],
-            sent_at=doc["timestamp"] or "1970-01-01T00:00:00+00:00",
-            source=doc["source"] or "chat_message",
-            source_kind=doc["source"] or "chat_message",
-        )
-        cleaned = clean_message_text(doc["content"] or "")
-        if not source_eligible(ctx, cleaned):
-            continue
-        for seq, claim in enumerate(extract_claims(cleaned, ctx, catalog, created_at=run_ts)):
-            claim["doc_id"] = doc["doc_id"]
-            claim["claim_seq"] = seq
-            claim["sent_at"] = ctx.sent_at
-            out.append(claim)
-    return out
+    return [c for doc in documents for c in document_claims(doc, catalog, run_ts)]
 
 
 def expected_chunks(documents: list[dict[str, Any]]) -> list[dict[str, Any]]:
-    """Stage-2 replay mirroring build_chunks (embed=False)."""
+    """Stage-2 replay: ``document_chunks`` per document, as build_chunks
+    (embed=False) emits them."""
     out: list[dict[str, Any]] = []
     for doc in documents:
-        text = doc["content"] or ""
-        if len(text.split()) <= SINGLE_CHUNK_MAX_WORDS:
-            pieces = [text] if text.strip() else []
-        else:
-            pieces = chunk_text(text, CHUNK_WORD_BUDGET, CHUNK_OVERLAP_SENTENCES)
-        for seq, piece in enumerate(pieces):
+        for seq, piece in enumerate(document_chunks(doc["content"] or "")):
             out.append(
                 {
                     "chunk_id": chunk_id_for(doc["doc_id"], seq),

@@ -74,6 +74,12 @@ def text_from_html(html_bytes: bytes | bytearray | memoryview | None) -> str:
     return "\n".join(line for line in lines if line)
 
 
+def document_text(html_bytes: bytes | bytearray | memoryview | None, text: str | None) -> str:
+    """Stage 1's text rule for one page: the html wins when present,
+    otherwise the given text ("" when that is null too)."""
+    return text_from_html(html_bytes) if html_bytes is not None else (text or "")
+
+
 def text_from_txt(raw: bytes | bytearray | memoryview | None) -> str:
     """UTF-8 decode, matching Path.read_text(encoding='utf-8')
     (document_ingestion.py:79-80)."""

@@ -1,10 +1,12 @@
 """Stage 2: documents -> chunks with summaries and embeddings.
 
-Reference parity: services.py:1583-1619 (chunk loop + sinks): documents of
-<= 200 words stay single-chunk (P5 fast path); larger ones go through the
-word-budget chunker (utils.py:109-140). Summaries use the deterministic
-600-char rule (P6); embeddings come from the per-executor embedder singleton
-(hash projection here, mpnet in production — kernel/embed.py).
+Reference parity: services.py:1583-1619 (chunk loop + sinks). The chunk
+rule per document — single chunk up to 200 words (P5 fast path), the
+word-budget chunker (utils.py:109-140) above — is
+``kernel/chunks.document_chunks``, which the serial oracle calls too; its
+constants live there. Summaries use the deterministic 600-char rule (P6);
+embeddings come from the per-executor embedder singleton (hash projection
+here, mpnet in production — kernel/embed.py).
 """
 
 from __future__ import annotations
@@ -15,14 +17,11 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from ..kernel.chunks import chunk_id_for, chunk_text
+from ..kernel.chunks import CHUNK_OVERLAP_SENTENCES, CHUNK_WORD_BUDGET  # noqa: F401 -- kgbench/checks.py imports them from here
+from ..kernel.chunks import chunk_id_for, document_chunks
 from ..kernel.embed import SentenceEmbedder
 from ..kernel.text import fallback_summary
 from ..schema import CHUNKS_SCHEMA
-
-SINGLE_CHUNK_MAX_WORDS = 200  # services.py:1583-1600
-CHUNK_WORD_BUDGET = 250
-CHUNK_OVERLAP_SENTENCES = 2
 
 
 def build_chunks(documents: DataFrame, *, embed: bool = True) -> DataFrame:
@@ -36,12 +35,7 @@ def build_chunks(documents: DataFrame, *, embed: bool = True) -> DataFrame:
             seqs: list[int] = []
             contents: list[str] = []
             for doc_id, content in zip(batch["doc_id"], batch["content"]):
-                text = content or ""
-                if len(text.split()) <= SINGLE_CHUNK_MAX_WORDS:
-                    pieces = [text] if text.strip() else []
-                else:
-                    pieces = chunk_text(text, CHUNK_WORD_BUDGET, CHUNK_OVERLAP_SENTENCES)
-                for seq, piece in enumerate(pieces):
+                for seq, piece in enumerate(document_chunks(content or "")):
                     ids.append(chunk_id_for(doc_id, seq))
                     doc_ids.append(doc_id)
                     seqs.append(seq)

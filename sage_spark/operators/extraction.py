@@ -3,13 +3,18 @@
 Two Arrow-batched kernels (BASELINE.json input_hint: no per-row Python):
 
 * ``extract_documents`` — byte-deterministic page-text extraction per url
-  (kernel/pagetext.py) + sha256 doc_id; maps the reference's file-format
-  extractors (utils.py:85-106) and document assembly (services.py:1514-1581).
-* ``extract_claims_stage`` — the seven-extractor cascade (kernel/claims.py)
-  with entity resolution against a broadcast EntityCatalog: the reference's
-  per-row Neo4j lookups (saia.py:1810-1827) restructured as a map-side
-  broadcast hash join. Emits one row per claim with within-document sequence
-  and the physical partition id (per-partition lineage).
+  (``kernel/pagetext.document_text``) + sha256 doc_id; maps the reference's
+  file-format extractors (utils.py:85-106) and document assembly
+  (services.py:1514-1581).
+* ``extract_claims_stage`` — ``kernel/claims.document_claims`` per documents
+  row (context defaults, cleanup, eligibility gate, the seven-extractor
+  cascade) with entity resolution against a broadcast EntityCatalog: the
+  reference's per-row Neo4j lookups (saia.py:1810-1827) restructured as a
+  map-side broadcast hash join. Adds only the physical partition id
+  (per-partition lineage) to each claim.
+
+The serial oracle (kernel/expected.py) calls the same row functions, so the
+differential tests compare the distributed plan alone.
 """
 
 from __future__ import annotations
@@ -22,10 +27,10 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernel.chunks import content_doc_id
-from ..kernel.claims import extract_claims, source_eligible
-from ..kernel.entities import EntityCatalog, MessageContext
-from ..kernel.pagetext import text_from_html
-from ..kernel.text import clean_message_text, fallback_summary
+from ..kernel.claims import document_claims
+from ..kernel.entities import EntityCatalog
+from ..kernel.pagetext import document_text
+from ..kernel.text import fallback_summary
 from ..schema import CLAIMS_SCHEMA, DOCUMENTS_SCHEMA
 
 _DOC_KERNEL_COLS = [
@@ -48,12 +53,7 @@ def extract_documents(webtext: DataFrame, *, lang_filter: str | None = "en") -> 
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            texts = []
-            for html, given in zip(batch["html"], batch["text"]):
-                if html is not None:
-                    texts.append(text_from_html(html))
-                else:
-                    texts.append(given or "")
+            texts = [document_text(html, given) for html, given in zip(batch["html"], batch["text"])]
             out = pd.DataFrame(
                 {
                     "doc_id": [content_doc_id(t) for t in texts],
@@ -114,25 +114,7 @@ def extract_claims_stage(
         for batch in batches:
             rows: list[dict] = []
             for rec in batch.to_dict("records"):
-                ctx = MessageContext(
-                    doc_id=rec["doc_id"],
-                    sender_id=rec["sender"] or "",
-                    receiver_ids=tuple(rec["receivers"]) if rec["receivers"] is not None else (),
-                    message_id=rec["message_id"],
-                    conversation_id=rec["conversation_id"],
-                    conversation_type=rec["conversation_type"],
-                    group_id=rec["group_id"],
-                    sent_at=rec["timestamp"] or "1970-01-01T00:00:00+00:00",
-                    source=rec["source"] or "chat_message",
-                    source_kind=rec["source"] or "chat_message",
-                )
-                cleaned = clean_message_text(rec["content"] or "")
-                if not source_eligible(ctx, cleaned):
-                    continue
-                for seq, claim in enumerate(extract_claims(cleaned, ctx, catalog, created_at=run_ts)):
-                    claim["doc_id"] = rec["doc_id"]
-                    claim["claim_seq"] = seq
-                    claim["sent_at"] = ctx.sent_at
+                for claim in document_claims(rec, catalog, run_ts):
                     claim["partition_id"] = partition_id
                     rows.append(claim)
             yield pd.DataFrame(rows, columns=[f.name for f in CLAIMS_SCHEMA.fields])

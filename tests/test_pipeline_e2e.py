@@ -7,6 +7,8 @@ re-runs (the resume story), and lineage rows.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -18,6 +20,7 @@ from sage_spark.store import TableStore
 
 from .ref_oracle import RefSession, load_reference_saia
 
+REPO_ROOT = Path(__file__).resolve().parents[1]
 N_DOCS = 120
 SEED = 7
 RUN_TS = "2026-05-01T00:00:00+00:00"
@@ -280,6 +283,7 @@ def test_pipeline_matches_pure_replay_on_other_corpora(spark, seed, n_docs, n_pe
     pure-Python replay (kernel/expected.py) for any seed/size — the same
     check the driver runs, generalized beyond the fixed synthetic corpus."""
     from sage_spark.datagen import build_groups, build_persons
+    from sage_spark.kernel.chunks import content_doc_id
     from sage_spark.kernel.expected import (
         expected_claims,
         expected_documents,
@@ -287,15 +291,25 @@ def test_pipeline_matches_pure_replay_on_other_corpora(spark, seed, n_docs, n_pe
     )
     from sage_spark.operators.canonicalize import canonicalize_claims, split_facts
     from sage_spark.operators.extraction import extract_claims_stage, extract_documents
-
-    from pyspark.sql.window import Window
+    from sage_spark.pipeline import _first_per_doc
 
     run_ts = "2026-05-01T00:00:00+00:00"
     webtext, persons_df = synth_webtext(spark, n_docs, n_persons=n_persons, seed=seed, partitions=5)
     persons = [r.asDict() for r in persons_df.collect()]
-    docs = extract_documents(webtext, lang_filter="en")
-    w = Window.partitionBy("doc_id").orderBy(F.col("url").asc())
-    docs = docs.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+    docs = _first_per_doc(extract_documents(webtext, lang_filter="en"))
+    # plus one undated documents row: the Spark stage must give a null
+    # timestamp the same claims (and replay order) as the row function does
+    undated_text = "EMP002 reports to EMP001. The build server is down."
+    undated = {
+        "doc_id": content_doc_id(undated_text), "url": "https://intranet.example/undated/0",
+        "sender": "EMP001", "receivers": ["EMP002"], "subject": None, "content": undated_text,
+        "summary": undated_text, "timestamp": None, "source": "chat_message",
+        "conversation_type": "direct", "conversation_id": "direct:EMP001:EMP002",
+        "group_id": None, "lang": "en", "message_id": "undated0",
+    }
+    docs = docs.unionByName(
+        spark.createDataFrame([tuple(undated[f.name] for f in docs.schema.fields)], docs.schema)
+    )
     claims = extract_claims_stage(docs, persons, build_groups(), run_ts=run_ts)
     got_claims = {
         (r["claim_id"], r["canonical_key"], r["normalized_text"], r["subject_key"], r["value_text"])
@@ -307,7 +321,7 @@ def test_pipeline_matches_pure_replay_on_other_corpora(spark, seed, n_docs, n_pe
         for r in split_facts(union).collect()
     }
 
-    exp_docs = expected_documents(n_docs, n_persons, seed)
+    exp_docs = expected_documents(n_docs, n_persons, seed) + [undated]
     exp_claims_rows = expected_claims(exp_docs, n_persons, seed, run_ts=run_ts)
     exp_claims = {
         (c["claim_id"], c["canonical_key"], c["normalized_text"], c.get("subject_key"), c.get("value_text"))
@@ -572,7 +586,7 @@ def test_insight_job_end_to_end(spark, tmp_path):
             "--store", str(kg), "--run-id", "i1",
             "--run-ts", "2026-05-01T00:00:00+00:00",
         ],
-        capture_output=True, text=True, timeout=500, check=True, cwd="/root/repo",
+        capture_output=True, text=True, timeout=500, check=True, cwd=REPO_ROOT,
     )
     out = tmp_path / "insight"
     proc = subprocess.run(
@@ -580,7 +594,7 @@ def test_insight_job_end_to_end(spark, tmp_path):
             sys.executable, "jobs/run_insight.py",
             "--store", str(kg), "--output", str(out),
         ],
-        capture_output=True, text=True, timeout=500, check=True, cwd="/root/repo",
+        capture_output=True, text=True, timeout=500, check=True, cwd=REPO_ROOT,
     )
     summary = json.loads([l for l in proc.stdout.splitlines() if l.startswith("{")][-1])
     assert summary["rows"] >= summary["messages"] > 0
@@ -628,7 +642,7 @@ def test_dataprep_job_end_to_end(spark, tmp_path):
             "--input", "/root/testdata/sf0.001/documents.parquet",
             "--output", str(out),
         ],
-        capture_output=True, text=True, timeout=500, check=True, cwd="/root/repo",
+        capture_output=True, text=True, timeout=500, check=True, cwd=REPO_ROOT,
     )
     summary = json.loads([l for l in proc.stdout.splitlines() if l.startswith("{")][-1])
     assert summary["input"] >= summary["language"] >= summary["quality"] >= summary["exact_dedup"] >= summary["near_dedup"]
@@ -655,7 +669,7 @@ def test_dataprep_job_end_to_end(spark, tmp_path):
             "--output", str(out2),
             "--verify-jaccard", "0.8",
         ],
-        capture_output=True, text=True, timeout=500, check=True, cwd="/root/repo",
+        capture_output=True, text=True, timeout=500, check=True, cwd=REPO_ROOT,
     )
     summary2 = json.loads([l for l in proc2.stdout.splitlines() if l.startswith("{")][-1])
     assert summary2["near_dedup"] >= summary["near_dedup"]  # verify only un-drops
@@ -685,7 +699,7 @@ def test_dataprep_job_end_to_end(spark, tmp_path):
             "--output", str(out3),
             "--cluster-dedup",
         ],
-        capture_output=True, text=True, timeout=500, check=True, cwd="/root/repo",
+        capture_output=True, text=True, timeout=500, check=True, cwd=REPO_ROOT,
     )
     summary3 = json.loads([l for l in proc3.stdout.splitlines() if l.startswith("{")][-1])
     assert summary3["near_dedup"] <= summary["near_dedup"]
@@ -707,7 +721,7 @@ def test_dataprep_job_end_to_end(spark, tmp_path):
             "--output", str(out4),
             "--clip-spans", "10",
         ],
-        capture_output=True, text=True, timeout=500, check=True, cwd="/root/repo",
+        capture_output=True, text=True, timeout=500, check=True, cwd=REPO_ROOT,
     )
     summary4 = json.loads([l for l in proc4.stdout.splitlines() if l.startswith("{")][-1])
     assert summary4["span_clip"] == summary4["near_dedup"]  # row-preserving
@@ -766,7 +780,7 @@ def test_maintain_job_end_to_end(spark, tmp_path):
             "--store", str(kg), "--run-id", "m1",
             "--run-ts", "2026-05-01T00:00:00+00:00",
         ],
-        capture_output=True, text=True, timeout=500, check=True, cwd="/root/repo",
+        capture_output=True, text=True, timeout=500, check=True, cwd=REPO_ROOT,
     )
     before = sorted((p.relative_to(kg), p.stat().st_size) for p in kg.rglob("*") if p.is_file())
 
@@ -777,7 +791,7 @@ def test_maintain_job_end_to_end(spark, tmp_path):
             "--store", str(kg), "--synthetic", "800", "--output", str(out),
             "--run-ts", "2026-05-02T00:00:00+00:00", "--rank-impact",
         ],
-        capture_output=True, text=True, timeout=500, check=True, cwd="/root/repo",
+        capture_output=True, text=True, timeout=500, check=True, cwd=REPO_ROOT,
     )
     summary = json.loads([l for l in proc.stdout.splitlines() if l.startswith("{")][-1])
 
@@ -854,7 +868,7 @@ def test_kg_stream_job_end_to_end(spark, tmp_path):
                 "--checkpoint", str(tmp_path / "ckpt"),
                 "--persons", str(persons_path),
             ],
-            capture_output=True, text=True, timeout=500, check=True, cwd="/root/repo",
+            capture_output=True, text=True, timeout=500, check=True, cwd=REPO_ROOT,
         )
         return json.loads([l for l in proc.stdout.splitlines() if l.startswith("{")][-1])
 

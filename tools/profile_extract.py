@@ -1,13 +1,15 @@
-"""Pure-Python profile of the claim-extraction cascade (no Spark).
+"""Pure-Python profile of stage 3's row function (no Spark).
 
-Rebuilds exactly what operators/extraction.py::extract_claims_stage does per
-row — MessageContext + clean_message_text + source_eligible + extract_claims —
-over the deterministic synthetic corpus, and prints cProfile hotspots plus a
-plain wall-clock docs/sec. Use it to find per-row Python cost inside the
+Calls ``kernel/claims.document_claims`` — the function
+operators/extraction.py::extract_claims_stage maps over every documents row
+— on the documents rows of the deterministic synthetic corpus
+(``kernel/expected.expected_documents``: real content-hash doc_ids, English
+pages, content-deduplicated), and prints cProfile hotspots plus a plain
+wall-clock docs/sec. Use it to find per-row Python cost inside the
 byte-identity-pinned cascade (guide §4: the boundary is already Arrow; this
 is the Python critical path itself).
 
-Usage: python tools/profile_extract.py [n_docs] [--profile]
+Usage: python tools/profile_extract.py [n_pages] [--profile]
 """
 
 from __future__ import annotations
@@ -20,52 +22,31 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from sage_spark.datagen import build_groups, build_persons, make_page  # noqa: E402
-from sage_spark.kernel.claims import extract_claims, source_eligible  # noqa: E402
-from sage_spark.kernel.entities import EntityCatalog, MessageContext  # noqa: E402
-from sage_spark.kernel.text import clean_message_text  # noqa: E402
+from sage_spark.datagen import build_groups, build_persons  # noqa: E402
+from sage_spark.kernel.claims import document_claims  # noqa: E402
+from sage_spark.kernel.entities import EntityCatalog  # noqa: E402
+from sage_spark.kernel.expected import expected_documents  # noqa: E402
 
 RUN_TS = "2026-05-01T00:00:00+00:00"
+N_PERSONS, SEED = 50, 7
 
 
-def run(pages: list[dict], catalog: EntityCatalog) -> tuple[int, int]:
-    n_claims = 0
-    n_eligible = 0
-    for p in pages:
-        ctx = MessageContext(
-            doc_id="d" + p["message_id"],
-            sender_id=p["sender_id"] or "",
-            receiver_ids=tuple(p["receiver_ids"]),
-            message_id=p["message_id"],
-            conversation_id=p["conversation_id"],
-            conversation_type=p["conversation_type"],
-            group_id=p["group_id"],
-            sent_at=p["warc_ts"].isoformat() + "+00:00",
-            source=p["source"],
-            source_kind=p["source"],
-        )
-        cleaned = clean_message_text(p["text"])
-        if not source_eligible(ctx, cleaned):
-            continue
-        n_eligible += 1
-        n_claims += len(extract_claims(cleaned, ctx, catalog, created_at=RUN_TS))
-    return n_eligible, n_claims
+def run(docs: list[dict], catalog: EntityCatalog) -> int:
+    return sum(len(document_claims(doc, catalog, RUN_TS)) for doc in docs)
 
 
 def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 20000
+    n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 20000
     do_profile = "--profile" in sys.argv
-    persons = build_persons(50, 7)
-    groups = build_groups(8)
-    catalog = EntityCatalog(persons, groups)
-    pages = [make_page(i, 7, persons, 8) for i in range(n_docs)]
+    catalog = EntityCatalog(build_persons(N_PERSONS, SEED), build_groups())
+    docs = expected_documents(n_pages, N_PERSONS, SEED)
     # warm (regex compile etc.)
-    run(pages[:500], catalog)
+    run(docs[:500], catalog)
     if do_profile:
         prof = cProfile.Profile()
         t0 = time.perf_counter()
         prof.enable()
-        n_eligible, n_claims = run(pages, catalog)
+        n_claims = run(docs, catalog)
         prof.disable()
         dt = time.perf_counter() - t0
         stats = pstats.Stats(prof)
@@ -73,12 +54,9 @@ def main() -> None:
         stats.sort_stats("tottime").print_stats(25)
     else:
         t0 = time.perf_counter()
-        n_eligible, n_claims = run(pages, catalog)
+        n_claims = run(docs, catalog)
         dt = time.perf_counter() - t0
-    print(
-        f"docs={n_docs} eligible={n_eligible} claims={n_claims} "
-        f"wall={dt:.3f}s rate={n_docs/dt:.0f} docs/s"
-    )
+    print(f"docs={len(docs)} claims={n_claims} wall={dt:.3f}s rate={len(docs)/dt:.0f} docs/s")
 
 
 if __name__ == "__main__":
