@@ -1,7 +1,17 @@
-"""Load the reference extractor (read-only at /root/reference) as a test
-oracle, stubbing its heavyweight runtime deps (neo4j, pypdf,
-sentence_transformers) that are absent in this environment and irrelevant to
-the pure extraction functions under test.
+"""Load the SAGE reference extractor (a read-only checkout at
+``REFERENCE_ROOT``) as a test oracle, stubbing its heavyweight runtime deps
+(neo4j, pypdf, sentence_transformers) that are absent in this environment and
+irrelevant to the pure extraction functions under test.
+
+The oracle is optional. The checkout is not part of this repository, so a
+case that reads a reference file carries ``needs_reference(<relpath>...)``,
+a ``skipif`` on that file's path, and modules load the oracle only where it
+exists (``has_reference``). Without the checkout the live parity cases skip
+(``app/saia.py``: claim, temporal, prepare-text, promotion-gate, insight
+preview/decoration and their fuzz twins; ``app/utils.py``: the chunker
+parities; ``app/services.py``: the retrieval parities;
+``data/documents_ui/``: the reference corpus cases) and every case that
+checks the kernel on its own still runs.
 
 Also provides ``RefSession`` — an in-memory stand-in for the Neo4j session
 that answers the two read queries the extractor issues (person lookup,
@@ -14,9 +24,24 @@ from __future__ import annotations
 
 import sys
 import types
+from pathlib import Path
 from typing import Any, Optional
 
+import pytest
+
 REFERENCE_ROOT = "/root/reference"
+
+
+def has_reference(*relpaths: str) -> bool:
+    """True when every ``relpaths`` file exists under ``REFERENCE_ROOT``."""
+    return all(Path(REFERENCE_ROOT, p).exists() for p in relpaths)
+
+
+def needs_reference(*relpaths: str):
+    """``skipif`` mark for a case that reads these reference files; the
+    reason names each one that is missing."""
+    missing = [str(Path(REFERENCE_ROOT, p)) for p in relpaths if not Path(REFERENCE_ROOT, p).exists()]
+    return pytest.mark.skipif(bool(missing), reason=f"reference checkout file absent: {', '.join(missing)}")
 
 
 def load_reference_saia():

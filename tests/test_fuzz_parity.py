@@ -1,7 +1,11 @@
 """Property-based differential fuzzing: the kernel must agree with the
 reference extractor on arbitrary generated inputs, not just the curated
 battery. Hypothesis drives sentence-shaped and adversarial inputs through
-both implementations."""
+both implementations.
+
+The claim, temporal and chunker parities read the reference checkout and run
+only where it is present; the serial hash-replay fuzz (oracle vs Spark)
+needs nothing from it."""
 
 from __future__ import annotations
 
@@ -13,10 +17,9 @@ from sage_spark.kernel.entities import EntityCatalog, MessageContext
 from sage_spark.kernel.temporal import resolve_temporal, strip_temporal_tokens, temporal_expressions
 from sage_spark.kernel.text import clean_message_text
 
-from .ref_oracle import RefSession, load_reference_saia
-from .test_chunks_and_facts import REF_CHUNK
-
-saia = load_reference_saia()
+from .ref_oracle import RefSession
+from .test_chunks_and_facts import REF_CHUNK, needs_ref_chunker
+from .test_kernel_parity import needs_saia, saia
 
 PERSONS = [
     {"id": "EMP001", "name": "Alice Johnson", "email": "alice@example.com", "is_user": True},
@@ -89,18 +92,21 @@ def _ours(text: str) -> list[dict]:
     return claims
 
 
+@needs_saia
 @settings(max_examples=300, deadline=None)
 @given(message)
 def test_fuzz_claim_parity(text):
     assert _ours(text) == _reference(text)
 
 
+@needs_saia
 @settings(max_examples=300, deadline=None)
 @given(st.text(max_size=200))
 def test_fuzz_claim_parity_arbitrary_text(text):
     assert _ours(text) == _reference(text)
 
 
+@needs_saia
 @settings(max_examples=200, deadline=None)
 @given(st.text(max_size=120), st.sampled_from(["2026-04-01T10:00:00Z", "2026-12-31T23:59:59+05:30", "2026-02-28T00:00:00"]))
 def test_fuzz_temporal_parity(text, anchor):
@@ -109,6 +115,7 @@ def test_fuzz_temporal_parity(text, anchor):
     assert strip_temporal_tokens(text) == saia._strip_temporal_tokens(text)
 
 
+@needs_ref_chunker
 @settings(max_examples=100, deadline=None)
 @given(
     st.lists(st.text(alphabet="abcdef .!?", min_size=1, max_size=40), max_size=30).map(" ".join),

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from sage_spark.kernel.retrieval import (
@@ -18,19 +17,11 @@ from sage_spark.operators.graph import (
     ist_display,
 )
 
-
-def _reference_services():
-    """The reference's read-side services module, loaded on first use so
-    only the parity tests that need it skip when it is absent."""
-    try:
-        from .test_retrieval_parity import services
-    except ImportError as exc:
-        pytest.skip(f"reference services unavailable: {exc}")
-    return services
+from .test_retrieval_parity import needs_services, services
 
 
+@needs_services
 def test_displayable_entity_parity():
-    services = _reference_services()
     cases = [
         "Alice Johnson", "EMP001", "currentuser", "unknown", "sage", "chat-msg-42",
         "d1-chunk-3", "assignment::direct:a:b::send-report", "direct:a:b",
@@ -41,8 +32,8 @@ def test_displayable_entity_parity():
         assert is_displayable_trace_entity(case) == services._is_displayable_trace_entity(case), case
 
 
+@needs_services
 def test_ist_formatting_parity():
-    services = _reference_services()
     samples = [
         "2026-04-01T10:00:00+00:00",
         "2026-04-01T10:00:00Z",

@@ -1,6 +1,9 @@
 """Differential tests: the insight preview + display decoration vs the
 reference (saia.py:1654-1695 preview assembly, 1945-2084 decoration),
 pinned by the reference's own goldens (tests/test_saia.py:819-926).
+
+Every case that calls the reference runs only where its ``app/saia.py`` is
+present; the blank-message case checks the kernel alone.
 """
 
 from __future__ import annotations
@@ -17,10 +20,8 @@ from sage_spark.kernel.insight import (
     render_record_display_text,
 )
 
-from .ref_oracle import RefSession, load_reference_saia
-from .test_kernel_parity import CATALOG, REF_SESSION, SENTENCES
-
-saia = load_reference_saia()
+from .ref_oracle import RefSession
+from .test_kernel_parity import CATALOG, REF_SESSION, SENTENCES, needs_saia, saia
 
 _VOLATILE = {"created_at", "claim_id", "canonical_key"}
 
@@ -71,6 +72,7 @@ def _our_preview(message: dict) -> list[dict]:
     return claims
 
 
+@needs_saia
 @pytest.mark.parametrize("sentence", SENTENCES)
 def test_preview_decoration_parity(sentence):
     """Every sentence of the extraction battery, through the preview +
@@ -93,6 +95,7 @@ def test_preview_decoration_parity(sentence):
         )
 
 
+@needs_saia
 def test_preview_golden_sharing_report():
     """The reference's pinned preview golden (tests/test_saia.py:819-876)
     with this dimension's display names (u1/u2 have no stored names, so
@@ -110,6 +113,7 @@ def test_preview_golden_sharing_report():
     assert refs[0]["raw"] == "I" and refs[1]["raw"] == "you"
 
 
+@needs_saia
 def test_preview_golden_with_named_senders():
     """The golden's exact display-name scenario: senders whose dimension
     rows carry names must render as those names in the display text
@@ -151,6 +155,7 @@ def test_empty_and_blank_messages_produce_no_preview():
     assert preview_message_claims(_message("   "), CATALOG) == []
 
 
+@needs_saia
 def test_fact_decoration_parity():
     """decorate_fact_for_insight / render_record_display_text across every
     claim-type template, vs the reference on identical records."""
@@ -258,6 +263,7 @@ _record = st.fixed_dictionaries(
 _names = st.dictionaries(st.text(min_size=1, max_size=8), st.text(min_size=1, max_size=12), max_size=4)
 
 
+@needs_saia
 @settings(max_examples=400, deadline=None)
 @given(_record, _names)
 def test_fuzz_display_render_parity(record, names):

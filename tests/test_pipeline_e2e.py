@@ -18,7 +18,7 @@ from sage_spark.kernel.pagetext import text_from_html
 from sage_spark.pipeline import run_pipeline
 from sage_spark.store import TableStore
 
-from .ref_oracle import RefSession, load_reference_saia
+from .ref_oracle import RefSession, load_reference_saia, needs_reference
 
 REPO_ROOT = Path(__file__).resolve().parents[1]
 N_DOCS = 120
@@ -61,15 +61,13 @@ def test_pipeline_counts(pipeline_store):
     assert result.edges > 0
 
 
+@needs_reference("app/saia.py")
 def test_spark_claims_match_reference_on_whole_corpus(spark, pipeline_store):
     """Every (doc, claim) the Spark job emitted must equal what the reference
     extractor produces for the same text + grounding + dimension — and vice
     versa (P/R = 1.0 at full-row granularity, modulo created_at). Skips
-    when the reference extractor cannot be loaded."""
-    try:
-        saia = load_reference_saia()
-    except ImportError as exc:
-        pytest.skip(f"reference extractor unavailable: {exc}")
+    where the reference checkout's extractor is absent."""
+    saia = load_reference_saia()
     store, _, persons, groups = pipeline_store
     session = RefSession(persons, groups)
 

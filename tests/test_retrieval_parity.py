@@ -1,5 +1,9 @@
 """Differential tests: sage_spark.kernel.retrieval vs the reference's
-read-side functions (services.py) on identical inputs."""
+read-side functions (services.py) on identical inputs.
+
+Every case calls the reference, so the module runs only where the reference
+checkout's ``app/services.py`` (and the ``app/saia.py`` its loader installs)
+is present."""
 
 from __future__ import annotations
 
@@ -8,6 +12,12 @@ import types
 from datetime import datetime, timezone
 
 import pytest
+
+from .ref_oracle import has_reference, load_reference_saia, needs_reference
+
+_SERVICES_FILES = ("app/saia.py", "app/services.py")
+needs_services = needs_reference(*_SERVICES_FILES)
+pytestmark = needs_services
 
 
 def _load_reference_services():
@@ -32,8 +42,6 @@ def _load_reference_services():
     sys.modules["langchain_core.output_parsers"].StrOutputParser = _AnyStub
     sys.modules["langchain_core.prompts"].ChatPromptTemplate = _AnyStub
     sys.modules["langchain_groq"].ChatGroq = _AnyStub
-    from .ref_oracle import load_reference_saia
-
     load_reference_saia()  # installs the app package + fake app.utils
     fake_utils = sys.modules["app.utils"]
     fake_utils.GROQ_API_KEY = None
@@ -44,7 +52,7 @@ def _load_reference_services():
     return services
 
 
-services = _load_reference_services()
+services = _load_reference_services() if has_reference(*_SERVICES_FILES) else None
 
 from sage_spark.kernel import retrieval as R  # noqa: E402
 
