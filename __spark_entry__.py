@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sage_spark.datagen import build_groups, build_persons, synth_webtext
 from sage_spark.kernel.embed import hash_embedding
+from sage_spark.kernel.expected import CHUNK_COLS, CLAIM_COLS, FACT_COLS
 from sage_spark.operators.canonicalize import canonicalize_claims, split_facts
 from sage_spark.operators.chunking import build_chunks
 from sage_spark.operators.components import canonical_entity_components, claim_entity_edges
@@ -31,7 +32,7 @@ from sage_spark.operators.dedup import (
     ngram_jaccard_pairs,
     with_simhash,
 )
-from sage_spark.operators.extraction import extract_claims_stage, extract_documents
+from sage_spark.operators.extraction import extract_claims_stage
 from sage_spark.operators.multimodal import extract_audio_features, extract_image_features
 from sage_spark.operators.similarity import cosine_topk, ivf_topk, lsh_topk
 from sage_spark.operators.textstats import (
@@ -41,7 +42,7 @@ from sage_spark.operators.textstats import (
     with_language_id,
     with_quality_stats,
 )
-from sage_spark.pipeline import _first_per_doc
+from sage_spark.pipeline import new_documents
 
 SYNTH_DOCS = 300
 SYNTH_PERSONS = 20
@@ -132,7 +133,7 @@ def _synth_claims(spark: SparkSession) -> DataFrame:
     chain once and localCheckpoint the result)."""
     webtext, persons_df = synth_webtext(spark, SYNTH_DOCS, n_persons=SYNTH_PERSONS, seed=SEED)
     persons = [r.asDict() for r in persons_df.collect()]
-    docs = _first_per_doc(extract_documents(webtext, lang_filter="en"))
+    docs = new_documents(webtext, None, "en")
     return extract_claims_stage(docs, persons, build_groups(), run_ts=RUN_TS).localCheckpoint(
         eager=True
     )
@@ -161,10 +162,7 @@ def _synth_messages(spark: SparkSession) -> DataFrame:
 
 
 def q_kg_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _synth_claims(spark).select(
-        "doc_id", "claim_id", "claim_type", "predicate", "subject_key", "object_key",
-        "value_text", "temporal_start", "canonical_key", "normalized_text",
-    )
+    return _synth_claims(spark).select(*CLAIM_COLS)
 
 
 def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,16 +177,12 @@ def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kg_facts_current(spark: SparkSession, sf_dir: str) -> DataFrame:
     facts = split_facts(_synth_union(spark))
-    return facts.filter(F.col("status") == "current").select(
-        "fact_id", "canonical_key", "claim_type", "predicate", "subject_key",
-        "object_key", "value_text", "status", "support_count",
-    )
+    return facts.filter(F.col("status") == "current").select(*FACT_COLS)
 
 
 def q_kg_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     webtext, _ = synth_webtext(spark, SYNTH_DOCS, n_persons=SYNTH_PERSONS, seed=SEED)
-    docs = _first_per_doc(extract_documents(webtext, lang_filter="en"))
-    return build_chunks(docs, embed=False).select("chunk_id", "doc_id", "seq", "summary")
+    return build_chunks(new_documents(webtext, None, "en"), embed=False).select(*CHUNK_COLS)
 
 
 def q_kg_entity_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1699,12 +1693,7 @@ def _expected_kg_dir() -> str:
             stage / f"{name}.parquet", index=False
         )
 
-    dump(
-        claims,
-        ["doc_id", "claim_id", "claim_type", "predicate", "subject_key", "object_key",
-         "value_text", "temporal_start", "canonical_key", "normalized_text"],
-        "claims",
-    )
+    dump(claims, CLAIM_COLS, "claims")
     triples = [
         {
             "subj": c.get("subject_entity_id") or c.get("subject_key"),
@@ -1715,13 +1704,8 @@ def _expected_kg_dir() -> str:
         for c in claims
     ]
     dump(triples, ["subj", "pred", "obj", "claim_id"], "triples")
-    dump(chunks, ["chunk_id", "doc_id", "seq", "summary"], "chunks")
-    dump(
-        [f for f in facts if f.get("status") == "current"],
-        ["fact_id", "canonical_key", "claim_type", "predicate", "subject_key",
-         "object_key", "value_text", "status", "support_count"],
-        "facts_current",
-    )
+    dump(chunks, CHUNK_COLS, "chunks")
+    dump([f for f in facts if f.get("status") == "current"], FACT_COLS, "facts_current")
     dump(evidence, ["fact_id", "canonical_key", "evidence_doc_id"], "facts_evidence")
     # epoch-1-only serial replay: the kg_facts_as_of oracle (the distributed
     # two-epoch table filtered to the inter-epoch instant must equal this)

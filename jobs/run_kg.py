@@ -86,23 +86,12 @@ def main() -> None:
     else:
         if not args.input or not args.persons:
             ap.error("--input and --persons are required without --synthetic")
-        from sage_spark.sources.webtext import read_webtext
+        from sage_spark.sources.webtext import read_dimensions, read_webtext
 
         webtext = read_webtext(spark, args.input, args.input_format)
-        persons = [r.asDict() for r in spark.read.parquet(args.persons).collect()]
-        groups = (
-            [r.asDict() for r in spark.read.parquet(args.groups).collect()] if args.groups else []
-        )
+        persons, groups = read_dimensions(spark, args.persons, args.groups)
 
     store = TableStore(args.store)
-    claims_hook = None
-    if args.maintain_components:
-        from sage_spark.operators.components import claim_entity_edges, maintain_component_store
-
-        def claims_hook(claims):
-            n = maintain_component_store(spark, store, claim_entity_edges(claims))
-            print(f"components: {n} vertex rows upserted")
-
     result = run_pipeline(
         spark,
         webtext,
@@ -113,8 +102,10 @@ def main() -> None:
         run_ts=run_ts,
         embed_chunks=args.embed_chunks,
         lang_filter=args.lang or None,
-        claims_hook=claims_hook,
+        maintain_components=args.maintain_components,
     )
+    if args.maintain_components:
+        print(f"components: {result.components} vertex rows upserted")
     # rows this run wrote, not store totals: a resumed run prints all zeros
     print(
         f"run {run_id} batch: documents={result.documents} chunks={result.chunks} "

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from sage_spark.schema import RUNS_SCHEMA  # noqa: E402
 from sage_spark.session import build_spark  # noqa: E402
+from sage_spark.sources.webtext import read_dimensions  # noqa: E402
 from sage_spark.store import TableStore  # noqa: E402
 from sage_spark.streaming.ingest import start_kg_ingestion, stream_webtext_from_dir  # noqa: E402
 
@@ -67,10 +68,7 @@ def main() -> None:
     spark = build_spark(app_name="sage-kg-stream")
     spark.sparkContext.setLogLevel("WARN")
 
-    persons = [r.asDict() for r in spark.read.parquet(args.persons).collect()]
-    groups = (
-        [r.asDict() for r in spark.read.parquet(args.groups).collect()] if args.groups else []
-    )
+    persons, groups = read_dimensions(spark, args.persons, args.groups)
     store = TableStore(args.store)
 
     stream = stream_webtext_from_dir(

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from sage_spark.datagen import build_groups, synth_webtext  # noqa: E402
 from sage_spark.operators.components import claim_entity_edges  # noqa: E402
-from sage_spark.operators.extraction import extract_claims_stage, extract_documents  # noqa: E402
+from sage_spark.operators.extraction import extract_claims_stage  # noqa: E402
 from sage_spark.operators.incremental import (  # noqa: E402
     affected_documents,
     changed_entities,
@@ -49,7 +49,7 @@ from sage_spark.operators.incremental import (  # noqa: E402
     impact_radius,
     re_embed_targets,
 )
-from sage_spark.pipeline import _first_per_doc  # noqa: E402
+from sage_spark.pipeline import new_documents  # noqa: E402
 from sage_spark.session import build_spark  # noqa: E402
 from sage_spark.store import TableStore  # noqa: E402
 
@@ -99,24 +99,17 @@ def main() -> None:
     else:
         if not args.input or not args.persons:
             ap.error("--input and --persons are required without --synthetic")
-        from sage_spark.sources.webtext import read_webtext
+        from sage_spark.sources.webtext import read_dimensions, read_webtext
 
         webtext = read_webtext(spark, args.input, args.input_format)
-        persons = [r.asDict() for r in spark.read.parquet(args.persons).collect()]
-        groups = (
-            [r.asDict() for r in spark.read.parquet(args.groups).collect()] if args.groups else []
-        )
+        persons, groups = read_dimensions(spark, args.persons, args.groups)
 
     store = TableStore(args.store)
     out = Path(args.output) if "://" not in args.output else None
 
     # --- the new batch, gated exactly like run_kg's resume path: only docs
     # the store has never seen can change anything ---------------------------
-    documents = _first_per_doc(extract_documents(webtext, lang_filter=args.lang or None))
-    if store.exists("documents"):
-        documents = documents.join(
-            store.read(spark, "documents").select("doc_id"), "doc_id", "left_anti"
-        )
+    documents = new_documents(webtext, store, args.lang or None)
     batch_claims = extract_claims_stage(documents, persons, groups, run_ts=run_ts)
     # the diff/BFS stages each consume the batch twice — pin it once
     batch_claims = batch_claims.localCheckpoint(eager=True)

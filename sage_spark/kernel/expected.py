@@ -9,7 +9,7 @@ results are written to parquet once and the oracle SQL is a plain SELECT
 over them.
 
 Stages 1-3 call the same per-document row functions the Spark operators map
-over Arrow batches (``pagetext.document_text``, ``chunks.document_chunks``,
+over Arrow batches (``pagetext.document_row``, ``chunks.document_chunks``,
 ``claims.document_claims``), so this replay checks the distributed plan
 (mapInPandas batching and partitioning, the min-url first-per-doc and
 per-claim_id dedupes, the repartition+sort fact replay) against a serial
@@ -27,45 +27,41 @@ from __future__ import annotations
 from typing import Any
 
 from ..datagen import build_groups, build_persons, make_page
-from .chunks import chunk_id_for, content_doc_id, document_chunks
+from .chunks import chunk_id_for, document_chunks
 from .claims import document_claims
 from .entities import EntityCatalog
 from .facts import replay_key_mutations
-from .pagetext import document_text
+from .pagetext import document_row
 from .text import fallback_summary
+
+# The columns each KG contract query selects (__spark_entry__.py q_kg_claims,
+# q_kg_chunks, q_kg_facts_current) and the oracle compares them on.
+CLAIM_COLS = [
+    "doc_id", "claim_id", "claim_type", "predicate", "subject_key", "object_key",
+    "value_text", "temporal_start", "canonical_key", "normalized_text",
+]
+CHUNK_COLS = ["chunk_id", "doc_id", "seq", "summary"]
+FACT_COLS = [
+    "fact_id", "canonical_key", "claim_type", "predicate", "subject_key",
+    "object_key", "value_text", "status", "support_count",
+]
 
 
 def expected_documents(
     n_docs: int, n_persons: int, seed: int, *, n_groups: int = 8, lang_filter: str | None = "en"
 ) -> list[dict[str, Any]]:
-    """Stage-1 replay: page text extraction + content doc_id + first-per-doc
-    dedupe (min url), mirroring extract_documents + _first_per_doc."""
+    """Stage-1 replay: ``document_row`` per page + first-per-doc dedupe (min
+    url), mirroring extract_documents + _first_per_doc."""
     persons = build_persons(n_persons, seed)
     by_doc: dict[str, dict[str, Any]] = {}
     for i in range(n_docs):
         page = make_page(i, seed, persons, n_groups)
         if lang_filter and page["lang"] != lang_filter:
             continue
-        text = document_text(page["html"], page["text"])
-        doc_id = content_doc_id(text)
-        row = {
-            "doc_id": doc_id,
-            "url": page["url"],
-            "sender": page["sender_id"],
-            "receivers": list(page["receiver_ids"]) if isinstance(page["receiver_ids"], (list, tuple)) else page["receiver_ids"],
-            "content": text,
-            "summary": fallback_summary(text),
-            "timestamp": page["warc_ts"].isoformat() + "+00:00",
-            "source": page["source"],
-            "conversation_type": page["conversation_type"],
-            "conversation_id": page["conversation_id"],
-            "group_id": page["group_id"],
-            "lang": page["lang"],
-            "message_id": page["message_id"],
-        }
-        prev = by_doc.get(doc_id)
+        row = document_row(page)
+        prev = by_doc.get(row["doc_id"])
         if prev is None or row["url"] < prev["url"]:
-            by_doc[doc_id] = row
+            by_doc[row["doc_id"]] = row
     return sorted(by_doc.values(), key=lambda r: r["doc_id"])
 
 
@@ -557,12 +553,7 @@ def expected_impact_radius(
 ) -> list[dict[str, Any]]:
     """Serial BFS replay of operators/incremental.impact_radius: min-hop
     depth over the undirected, self-loop-free edge set."""
-    adj: dict[str, set[str]] = {}
-    for a, b in edges:
-        if a is None or b is None or a == b:
-            continue
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
+    adj = _undirected_adjacency(edges)
     depth: dict[str, int] = {s: 0 for s in set(seeds)}
     frontier = set(depth)
     for d in range(1, max_depth + 1):

@@ -2,10 +2,9 @@
 
 Two Arrow-batched kernels (BASELINE.json input_hint: no per-row Python):
 
-* ``extract_documents`` — byte-deterministic page-text extraction per url
-  (``kernel/pagetext.document_text``) + sha256 doc_id; maps the reference's
-  file-format extractors (utils.py:85-106) and document assembly
-  (services.py:1514-1581).
+* ``extract_documents`` — ``kernel/pagetext.document_row`` per webtext row:
+  byte-deterministic page text + sha256 doc_id, the reference's document
+  assembly (services.py:1514-1581) over web pages.
 * ``extract_claims_stage`` — ``kernel/claims.document_claims`` per documents
   row (context defaults, cleanup, eligibility gate, the seven-extractor
   cascade) with entity resolution against a broadcast EntityCatalog: the
@@ -24,19 +23,21 @@ from typing import Iterator, Optional
 import pandas as pd
 
 from pyspark import TaskContext
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..kernel.chunks import content_doc_id
 from ..kernel.claims import document_claims
 from ..kernel.entities import EntityCatalog
-from ..kernel.pagetext import document_text
-from ..kernel.text import fallback_summary
+from ..kernel.pagetext import document_row
 from ..schema import CLAIMS_SCHEMA, DOCUMENTS_SCHEMA
 
 _DOC_KERNEL_COLS = [
     "url", "html", "text", "lang", "sender_id", "receiver_ids", "conversation_id",
     "conversation_type", "group_id", "message_id", "source", "warc_ts",
 ]
+# note: StructType.add mutates in place — build a fresh copy instead
+_DOCUMENTS_OUT = T.StructType(
+    list(DOCUMENTS_SCHEMA.fields) + [T.StructField("message_id", T.StringType(), True)]
+)
 
 
 def extract_documents(webtext: DataFrame, *, lang_filter: str | None = "en") -> DataFrame:
@@ -53,35 +54,10 @@ def extract_documents(webtext: DataFrame, *, lang_filter: str | None = "en") -> 
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            texts = [document_text(html, given) for html, given in zip(batch["html"], batch["text"])]
-            out = pd.DataFrame(
-                {
-                    "doc_id": [content_doc_id(t) for t in texts],
-                    "url": batch["url"],
-                    "sender": batch["sender_id"],
-                    "receivers": batch["receiver_ids"],
-                    "subject": [None] * len(batch),
-                    "content": texts,
-                    "summary": [fallback_summary(t) for t in texts],
-                    "timestamp": [
-                        ts.isoformat() + "+00:00" if ts is not None and not pd.isna(ts) else None
-                        for ts in batch["warc_ts"]
-                    ],
-                    "source": batch["source"],
-                    "conversation_type": batch["conversation_type"],
-                    "conversation_id": batch["conversation_id"],
-                    "group_id": batch["group_id"],
-                    "lang": batch["lang"],
-                }
-            )
-            out["message_id"] = batch["message_id"].values
-            yield out
+            rows = [document_row(page) for page in batch.to_dict("records")]
+            yield pd.DataFrame(rows, columns=_DOCUMENTS_OUT.fieldNames())
 
-    # note: StructType.add mutates in place — build a fresh copy instead
-    from pyspark.sql import types as T
-
-    schema = T.StructType(list(DOCUMENTS_SCHEMA.fields) + [T.StructField("message_id", T.StringType(), True)])
-    return src.mapInPandas(kernel, schema=schema)
+    return src.mapInPandas(kernel, schema=_DOCUMENTS_OUT)
 
 
 def extract_claims_stage(

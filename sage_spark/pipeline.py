@@ -31,6 +31,7 @@ from .operators.canonicalize import (
     split_facts,
 )
 from .operators.chunking import build_chunks
+from .operators.components import claim_entity_edges, maintain_component_store
 from .operators.extraction import extract_claims_stage, extract_documents
 from .schema import FACTS_SCHEMA, RUNS_SCHEMA
 from .store import TableStore
@@ -42,6 +43,27 @@ def _first_per_doc(documents: DataFrame) -> DataFrame:
 
     w = Window.partitionBy("doc_id").orderBy(F.col("url").asc())
     return documents.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+
+
+def new_documents(
+    webtext: DataFrame, store: TableStore | None, lang_filter: str | None
+) -> DataFrame:
+    """Stage 1's gate: the documents of ``webtext`` that ``store`` has never
+    seen (every extracted document when ``store`` is None).
+
+    Content-level dedupe (P4/J10): pages with identical extracted text share
+    a doc_id; only one (deterministically the min url) is ingested, exactly
+    like the reference's skip-if-exists gate (services.py:1493-1499). Doing
+    it before the claim kernel also prunes the expensive stage's input.
+    Skip-if-exists: documents already in the store are never re-chunked or
+    re-extracted — THIS is the resume mechanism. A re-run (or a replayed
+    partition) anti-joins to nothing and the whole job is a no-op."""
+    documents = _first_per_doc(extract_documents(webtext, lang_filter=lang_filter))
+    if store is not None and store.exists("documents"):
+        documents = documents.join(
+            store.read(webtext.sparkSession, "documents").select("doc_id"), "doc_id", "left_anti"
+        )
+    return documents
 
 
 def _last_claim_wins(claims: DataFrame) -> DataFrame:
@@ -72,8 +94,9 @@ class PipelineResult:
     """Rows this batch wrote, per table — not store totals (a resumed run
     over already-stored documents reports all zeros). ``claims`` counts
     extracted claims before the per-claim_id dedupe, ``conflicts`` the
-    batch's CONTRADICTS edges; every other field counts the rows handed to
-    that table's upsert."""
+    batch's CONTRADICTS edges, ``components`` the vertex rows the component
+    maintenance upserted (0 when it is off); every other field counts the
+    rows handed to that table's upsert."""
 
     documents: int
     chunks: int
@@ -82,6 +105,7 @@ class PipelineResult:
     facts_superseded: int
     conflicts: int
     edges: int
+    components: int
 
 
 def run_pipeline(
@@ -95,30 +119,16 @@ def run_pipeline(
     run_ts: str,
     embed_chunks: bool = False,
     lang_filter: str | None = "en",
-    claims_hook=None,
+    maintain_components: bool = False,
 ) -> PipelineResult:
-    """claims_hook, when given, is called with this run's claims DataFrame
-    after every other table upsert and before the ``documents`` upsert that
-    commits the batch — the seam maintenance consumers (e.g. the
-    incremental component store, operators/components.maintain_component_
-    store) attach to without re-extracting the batch. A hook that dies
-    leaves the batch uncommitted, so a rerun replays it and calls the hook
-    again; the hook must re-derive the same rows on that replay."""
-    # --- stage 1: byte-deterministic text extraction --------------------------
-    documents = extract_documents(webtext, lang_filter=lang_filter)
-    # Content-level dedupe (P4/J10): pages with identical extracted text share
-    # a doc_id; only one (deterministically the min url) is ingested, exactly
-    # like the reference's skip-if-exists gate (services.py:1493-1499). Doing
-    # it before the claim kernel also prunes the expensive stage's input.
-    documents = _first_per_doc(documents)
-    # Skip-if-exists (P4/J10, services.py:1493-1499): documents already in the
-    # store are never re-chunked or re-extracted — THIS is the resume
-    # mechanism. A re-run (or a replayed partition) anti-joins to nothing and
-    # the whole job is a no-op.
-    if store.exists("documents"):
-        documents = documents.join(
-            store.read(spark, "documents").select("doc_id"), "doc_id", "left_anti"
-        )
+    """With ``maintain_components``, this run's claims' entity-mention edges
+    are folded into the persisted ``components`` assignment table
+    (operators/components.maintain_component_store) after every other table
+    upsert and before the ``documents`` upsert that commits the batch. A
+    maintenance step that dies leaves the batch uncommitted, so a rerun
+    replays it and re-derives the same component rows."""
+    # --- stage 1: byte-deterministic text extraction + new-document gate ------
+    documents = new_documents(webtext, store, lang_filter)
     # One pass of the html kernel feeds both the chunk and claim stages:
     # materialize it once (staging parquet doubles as the stage checkpoint).
     documents, documents_seen = _observed(documents, rows=F.count(F.lit(1)))
@@ -171,13 +181,13 @@ def run_pipeline(
 
     # --- stage 5: materialize ---------------------------------------------------
     # `documents` is the skip-if-exists gate, so it is upserted LAST, after
-    # `runs` and the claims hook: it is the batch's commit record. A job that
-    # dies before it leaves the batch's documents absent, so a rerun replays
-    # the batch instead of anti-joining the half-written batch away. Up to
-    # the facts upsert that replay reaches a clean run's store (keyed
-    # upserts; support is re-derived from the edge store). Once facts have
-    # landed, the replay sees the batch's own facts, so its claims' statuses
-    # and the run's conflict count differ from a clean run's.
+    # `runs` and the component maintenance: it is the batch's commit record.
+    # A job that dies before it leaves the batch's documents absent, so a
+    # rerun replays the batch instead of anti-joining the half-written batch
+    # away. Up to the facts upsert that replay reaches a clean run's store
+    # (keyed upserts; support is re-derived from the edge store). Once facts
+    # have landed, the replay sees the batch's own facts, so its claims'
+    # statuses and the run's conflict count differ from a clean run's.
     chunks, chunks_seen = _observed(chunks, rows=F.count(F.lit(1)))
     store.upsert(chunks, "chunks", ["chunk_id"])
     store.upsert(updated_claims, "claims", ["claim_id"])
@@ -251,8 +261,11 @@ def run_pipeline(
         RUNS_SCHEMA,
     )
     store.upsert(runs.unionByName(summary), "runs", ["run_id", "partition_id", "stage"])
-    if claims_hook is not None:
-        claims_hook(claims)
+    components = (
+        maintain_component_store(spark, store, claim_entity_edges(claims))
+        if maintain_components
+        else 0
+    )
     store.upsert(documents.drop("message_id"), "documents", ["doc_id"])
 
     fact_counts = facts_seen.get
@@ -264,6 +277,7 @@ def run_pipeline(
         facts_superseded=fact_counts["superseded"],
         conflicts=conflict_count,
         edges=edges_seen.get["rows"],
+        components=components,
     )
     store.drop(f"_staging/{run_id}")
     return result

@@ -95,6 +95,16 @@ def read_webtext_table(spark: SparkSession, identifier: str) -> DataFrame:
     )
 
 
+def read_dimensions(
+    spark: SparkSession, persons_path: str, groups_path: str | None
+) -> tuple[list[dict], list[dict]]:
+    """The persons and groups dimension parquets as the row dicts the claims
+    stage broadcasts; no groups path means no groups."""
+    persons = [r.asDict() for r in spark.read.parquet(persons_path).collect()]
+    groups = [r.asDict() for r in spark.read.parquet(groups_path).collect()] if groups_path else []
+    return persons, groups
+
+
 def read_webtext(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
     """Format-dispatching reader for jobs/run_kg.py --input."""
     if fmt == "parquet":

@@ -231,11 +231,11 @@ class TableStore:
         writer.partitionBy(BUCKET_COL).parquet(str(path))
 
     def compact(self, spark: SparkSession, table: str) -> None:
-        """Maintenance rewrite (Iceberg's rewrite_data_files analog). Upserts
-        already leave one file per touched bucket dir, but dirs written any
-        other way (appends from several tasks, tables laid down before
-        upserts clustered on the bucket) hold many small files and scan
-        cost creeps up. Compaction rewrites the table so each bucket dir
+        """Maintenance rewrite (Iceberg's rewrite_data_files analog). Every
+        write through the store leaves one file per bucket dir; dirs that
+        hold more (laid down by a store version that did not cluster its
+        writes on the bucket, or given files from outside the store) cost
+        scan time per file. Compaction rewrites the table so each bucket dir
         holds one file (rows and bucket assignment unchanged), via a temp
         dir + rename-aside swap so a killed compaction never corrupts the
         table: the old table is renamed aside before the new one lands and

@@ -75,15 +75,6 @@ def start_kg_ingestion(
         if batch_df.isEmpty():
             return
         run_ts = datetime.now(timezone.utc).isoformat()
-        claims_hook = None
-        if maintain_components:
-            from ..operators.components import claim_entity_edges, maintain_component_store
-
-            def claims_hook(claims: DataFrame) -> None:
-                maintain_component_store(
-                    batch_df.sparkSession, store, claim_entity_edges(claims)
-                )
-
         run_pipeline(
             batch_df.sparkSession,
             batch_df,
@@ -93,7 +84,7 @@ def start_kg_ingestion(
             run_id=f"{run_prefix}-{batch_id}",
             run_ts=run_ts,
             embed_chunks=False,
-            claims_hook=claims_hook,
+            maintain_components=maintain_components,
         )
 
     writer = stream.writeStream.foreachBatch(process_batch).option("checkpointLocation", checkpoint_dir)

@@ -1,9 +1,9 @@
 """Kernel tests: chunker parity with the reference, fact-mutation scenarios
 from the reference test suite, page-text determinism.
 
-The chunker parity and the ID-mapping corpus case compare against the
-reference checkout and run only where its files are present; every other
-case checks the kernel on its own."""
+The chunker parity cases compare against the reference checkout and run
+only where its files are present; every other case checks the kernel on
+its own."""
 
 from __future__ import annotations
 
@@ -17,7 +17,7 @@ from sage_spark.kernel.chunks import chunk_text, content_doc_id, sentence_split
 from sage_spark.kernel.claims import extract_claims
 from sage_spark.kernel.entities import MessageContext
 from sage_spark.kernel.facts import fact_identity, replay_key_mutations
-from sage_spark.kernel.pagetext import parse_id_mappings, parse_message_headers, text_from_html
+from sage_spark.kernel.pagetext import text_from_html
 
 from .ref_oracle import REFERENCE_ROOT, has_reference, needs_reference
 
@@ -228,112 +228,6 @@ def test_html_text_extraction_is_deterministic_and_skips_script():
     text = text_from_html(html)
     assert text == "Hello world.\nSecond & third"
     assert text_from_html(html) == text
-
-
-@needs_reference("data/documents_ui/ID Mappings.txt")
-def test_id_mapping_parse_matches_reference_corpus():
-    text = Path(REFERENCE_ROOT, "data/documents_ui/ID Mappings.txt").read_text()
-    rows = parse_id_mappings(text)
-    assert rows[0] == {"id": "EMP001", "name": "Alice Johnson", "role": "Project Manager"}
-    assert len(rows) == 5
-
-
-def test_message_header_parse():
-    text = "Sender ID: EMP001\nReceiver: EMP002, EMP004\nSubject: Kickoff\nMessage: Hello team\nsecond line\nSent Time: 2026-04-01T10:00:00Z\n"
-    parsed = parse_message_headers(text)
-    assert parsed["sender"] == "EMP001"
-    assert parsed["receivers"] == ["EMP002", "EMP004"]
-    assert parsed["subject"] == "Kickoff"
-    assert parsed["content"] == "Hello team\nsecond line"
-    assert parsed["timestamp"] == "2026-04-01T10:00:00Z"
-
-
-def test_pdf_page_join_rule_golden():
-    """S2: the page-join rule (reference utils.py:85-88) without pypdf — an
-    injected fake reader stands in for the decoder; the rule (join with
-    single spaces, skip empty pages) is what's under test."""
-    from sage_spark.kernel.pagetext import join_pdf_pages, text_from_pdf
-
-    assert join_pdf_pages(["page one", "", "page two", None, "page three"]) == (
-        "page one page two page three"
-    )
-    assert join_pdf_pages([]) == ""
-    assert join_pdf_pages(["", None]) == ""
-
-    class FakePage:
-        def __init__(self, text):
-            self._text = text
-
-        def extract_text(self):
-            return self._text
-
-    class FakeReader:
-        def __init__(self, stream):
-            # fake decode: one page per newline-separated record, blank
-            # records decode to empty pages (scanned-image analog)
-            self.pages = [FakePage(line) for line in stream.read().decode("utf-8").split("\n")]
-
-    raw = b"Alpha body text\n\nBeta body text"
-    assert text_from_pdf(raw, reader_factory=FakeReader) == "Alpha body text Beta body text"
-    assert text_from_pdf(None, reader_factory=FakeReader) == ""
-
-    # without a reader and without pypdf, the gate must be an explicit
-    # NotImplementedError, never silent empty output
-    import importlib.util
-    import pytest
-
-    if importlib.util.find_spec("pypdf") is None:
-        with pytest.raises(NotImplementedError):
-            text_from_pdf(b"%PDF-1.4 fake")
-
-
-def _mk_pdf(content_streams: list[bytes], *, compress: bool = True) -> bytes:
-    """Minimal structurally-valid PDF: one stream object per content stream
-    (optionally FlateDecode), enough for the basic extractor's walk."""
-    import zlib
-
-    out = [b"%PDF-1.4\n"]
-    for i, cs in enumerate(content_streams):
-        body = zlib.compress(cs) if compress else cs
-        filt = b"/Filter /FlateDecode " if compress else b""
-        out.append(
-            str(i + 1).encode() + b" 0 obj\n<< " + filt + b"/Length "
-            + str(len(body)).encode() + b" >>\nstream\n" + body + b"\nendstream\nendobj\n"
-        )
-    out.append(b"trailer\n<< >>\n%%EOF")
-    return b"".join(out)
-
-
-def test_pdf_basic_stdlib_extractor():
-    """The opt-in pure-stdlib PDF path (no pypdf): Tj / TJ-array / hex
-    strings with escape+octal decoding inside BT..ET, T*/Td line advances,
-    Flate and plain streams, unsupported filters skipped, junk-safe.
-    Explicitly NOT pypdf-parity — that contract stays on the gated path."""
-    from sage_spark.kernel.pagetext import text_from_pdf, text_from_pdf_basic
-
-    cs1 = (
-        b"BT /F1 12 Tf 72 720 Td (Hello \\(World\\) \\101\\102) Tj "
-        b"0 -14 Td [(Sec) -250 (ond line)] TJ ET"
-    )
-    cs2 = b"BT <48657820546578 74> Tj ET"
-    pdf = _mk_pdf([cs1, cs2])
-    # two content streams = two "pages" under the reference's space-join rule
-    assert text_from_pdf_basic(pdf) == "Hello (World) AB\nSecond line Hex Text"
-    assert text_from_pdf_basic(_mk_pdf([cs1], compress=False)) == "Hello (World) AB\nSecond line"
-    # the gated entry point routes here only on explicit opt-in (pypdf absent)
-    import importlib.util
-
-    if importlib.util.find_spec("pypdf") is None:
-        assert text_from_pdf(pdf, allow_basic_fallback=True) == text_from_pdf_basic(pdf)
-    # malformed inputs degrade to empty output, never raise
-    assert text_from_pdf_basic(b"not a pdf") == ""
-    assert (
-        text_from_pdf_basic(
-            b"%PDF-1.4\n1 0 obj\n<< /Filter /DCTDecode >>\nstream\n\xff\xd8junk\nendstream\nendobj"
-        )
-        == ""
-    )
-    assert text_from_pdf_basic(None) == ""
 
 
 def test_sentence_embedder_structure():

@@ -19,6 +19,9 @@ from pathlib import Path
 
 from kgbench.checks import digest
 from sage_spark.kernel.expected import (
+    CHUNK_COLS,
+    CLAIM_COLS,
+    FACT_COLS,
     expected_chunks,
     expected_claims,
     expected_documents,
@@ -29,16 +32,6 @@ GOLDEN = Path(__file__).resolve().parent / "golden" / "kg_oracle.json"
 
 N_DOCS, N_PERSONS, SEED = 300, 20, 7
 RUN_TS = "2026-05-01T00:00:00+00:00"
-
-CLAIM_COLS = [
-    "doc_id", "claim_id", "claim_type", "predicate", "subject_key", "object_key",
-    "value_text", "temporal_start", "canonical_key", "normalized_text",
-]
-CHUNK_COLS = ["chunk_id", "doc_id", "seq", "summary"]
-FACT_COLS = [
-    "fact_id", "canonical_key", "claim_type", "predicate", "subject_key",
-    "object_key", "value_text", "status", "support_count",
-]
 
 
 def _digest(rows: list[dict], cols: list[str]) -> dict:

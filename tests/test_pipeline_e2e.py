@@ -281,30 +281,29 @@ def test_pipeline_matches_pure_replay_on_other_corpora(spark, seed, n_docs, n_pe
     pure-Python replay (kernel/expected.py) for any seed/size — the same
     check the driver runs, generalized beyond the fixed synthetic corpus."""
     from sage_spark.datagen import build_groups, build_persons
-    from sage_spark.kernel.chunks import content_doc_id
     from sage_spark.kernel.expected import (
         expected_claims,
         expected_documents,
         expected_facts_and_edges,
     )
     from sage_spark.operators.canonicalize import canonicalize_claims, split_facts
-    from sage_spark.operators.extraction import extract_claims_stage, extract_documents
-    from sage_spark.pipeline import _first_per_doc
+    from sage_spark.kernel.pagetext import document_row
+    from sage_spark.operators.extraction import extract_claims_stage
+    from sage_spark.pipeline import new_documents
 
     run_ts = "2026-05-01T00:00:00+00:00"
     webtext, persons_df = synth_webtext(spark, n_docs, n_persons=n_persons, seed=seed, partitions=5)
     persons = [r.asDict() for r in persons_df.collect()]
-    docs = _first_per_doc(extract_documents(webtext, lang_filter="en"))
+    docs = new_documents(webtext, None, "en")
     # plus one undated documents row: the Spark stage must give a null
     # timestamp the same claims (and replay order) as the row function does
-    undated_text = "EMP002 reports to EMP001. The build server is down."
-    undated = {
-        "doc_id": content_doc_id(undated_text), "url": "https://intranet.example/undated/0",
-        "sender": "EMP001", "receivers": ["EMP002"], "subject": None, "content": undated_text,
-        "summary": undated_text, "timestamp": None, "source": "chat_message",
-        "conversation_type": "direct", "conversation_id": "direct:EMP001:EMP002",
-        "group_id": None, "lang": "en", "message_id": "undated0",
-    }
+    undated = document_row({
+        "url": "https://intranet.example/undated/0", "warc_ts": None, "html": None,
+        "text": "EMP002 reports to EMP001. The build server is down.", "lang": "en",
+        "sender_id": "EMP001", "receiver_ids": ["EMP002"],
+        "conversation_id": "direct:EMP001:EMP002", "conversation_type": "direct",
+        "group_id": None, "message_id": "undated0", "source": "chat_message",
+    })
     docs = docs.unionByName(
         spark.createDataFrame([tuple(undated[f.name] for f in docs.schema.fields)], docs.schema)
     )

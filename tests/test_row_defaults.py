@@ -1,8 +1,10 @@
-"""Null-field defaults of stage 3's row function, called directly (no Spark).
+"""Null-field defaults of the stage 1 and stage 3 row functions.
 
 ``kernel/claims.document_claims`` is what extract_claims_stage maps over
 every documents row; these are the rows whose nullable columns
-(DOCUMENTS_SCHEMA) are null or whose content is gated out.
+(DOCUMENTS_SCHEMA) are null or whose content is gated out, called directly
+(no Spark). ``kernel/pagetext.document_row`` is what extract_documents maps
+over every webtext row; its null-field case runs through the Spark stage.
 """
 
 from __future__ import annotations
@@ -12,6 +14,8 @@ import pytest
 from sage_spark.datagen import build_groups, build_persons
 from sage_spark.kernel.claims import document_claims
 from sage_spark.kernel.entities import EntityCatalog
+from sage_spark.kernel.pagetext import document_row
+from sage_spark.schema import WEBTEXT_SCHEMA
 
 RUN_TS = "2026-05-01T00:00:00+00:00"
 CATALOG = EntityCatalog(build_persons(10, 7), build_groups())
@@ -57,3 +61,23 @@ def test_null_sender_and_receivers_do_not_raise():
 @pytest.mark.parametrize("overrides", [{"sender": "sage"}, {"content": " \n\t "}])
 def test_gated_rows_yield_no_claims(overrides):
     assert _claims(**overrides) == []
+
+
+def test_page_with_null_fields_yields_its_document_row(spark):
+    """An undated page with no html and no receivers: extract_documents
+    stores exactly ``document_row`` of it, with a null timestamp."""
+    from sage_spark.operators.extraction import extract_documents
+
+    page = {
+        "url": "https://intranet.example/undated/0", "warc_ts": None, "html": None,
+        "text": "EMP002 reports to EMP001.", "lang": "en", "sender_id": "EMP001",
+        "receiver_ids": None, "conversation_id": "direct:EMP001:EMP002",
+        "conversation_type": "direct", "group_id": None, "message_id": "undated0",
+        "source": "chat_message",
+    }
+    webtext = spark.createDataFrame(
+        [tuple(page[f.name] for f in WEBTEXT_SCHEMA.fields)], WEBTEXT_SCHEMA
+    )
+    expected = document_row(page)
+    assert expected["timestamp"] is None
+    assert [r.asDict() for r in extract_documents(webtext).collect()] == [expected]

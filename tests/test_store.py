@@ -165,7 +165,7 @@ def test_pipeline_reports_batch_counts_and_resume_is_zero(spark, tmp_path, layou
     assert r2.chunks == grown["chunks"] - totals["chunks"]
 
     r3 = run(full, "s3")
-    assert r3 == PipelineResult(0, 0, 0, 0, 0, 0, 0)
+    assert r3 == PipelineResult(0, 0, 0, 0, 0, 0, 0, 0)
     assert _totals(spark, store) == grown
     summary = (
         store.read(spark, "runs")
@@ -204,11 +204,13 @@ def _kg_state(spark, store: TableStore, run_id: str) -> dict[str, list[str]]:
     return state
 
 
-def _clean_and_resumed(spark, tmp_path, crash_on: str, hook=None) -> tuple[TableStore, TableStore]:
+def _clean_and_resumed(
+    spark, tmp_path, crash_on: str, maintain_components: bool = False
+) -> tuple[TableStore, TableStore]:
     """Two batches into a clean store, and into a store whose ``crash_on``
     upsert dies once during the second batch, which is then rerun with the
-    same run id and timestamp. ``hook(store, claims)``, when given, is each
-    run's claims hook. Returns (clean, crashed)."""
+    same run id and timestamp. ``maintain_components`` is passed to every
+    run. Returns (clean, crashed)."""
     groups = build_groups()
     first, persons_df = synth_webtext(spark, 20, n_persons=10, seed=7, partitions=2)
     persons = [r.asDict() for r in persons_df.collect()]
@@ -218,7 +220,7 @@ def _clean_and_resumed(spark, tmp_path, crash_on: str, hook=None) -> tuple[Table
         run_pipeline(
             spark, webtext, persons, groups, store, run_id=run_id,
             run_ts="2026-04-02T00:00:00+00:00",
-            claims_hook=hook and (lambda claims: hook(store, claims)),
+            maintain_components=maintain_components,
         )
 
     clean = TableStore(tmp_path / "clean", buckets=4)
@@ -244,16 +246,10 @@ def test_crash_mid_materialization_resumes_to_the_clean_store(spark, tmp_path):
 
 
 def test_crash_in_component_maintenance_resumes_to_the_clean_store(spark, tmp_path):
-    """The claims hook (here the incremental component store) runs before
-    the `documents` commit record: a batch whose `components` upsert dies
-    is rerun in full, and the rerun leaves the components and documents a
-    clean run leaves."""
-    from sage_spark.operators.components import claim_entity_edges, maintain_component_store
-
-    def maintain(store, claims):
-        maintain_component_store(spark, store, claim_entity_edges(claims))
-
-    clean, crashed = _clean_and_resumed(spark, tmp_path, "components", maintain)
+    """The incremental component store is maintained before the `documents`
+    commit record: a batch whose `components` upsert dies is rerun in full,
+    and the rerun leaves the components and documents a clean run leaves."""
+    clean, crashed = _clean_and_resumed(spark, tmp_path, "components", True)
     for table in ("components", "documents"):
         rows = [sorted(map(repr, store.read(spark, table).collect())) for store in (clean, crashed)]
         assert rows[0] == rows[1], table
