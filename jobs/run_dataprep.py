@@ -33,6 +33,8 @@ Local smoke run:
 
     python jobs/run_dataprep.py --input /root/testdata/sf0.001/documents.parquet \
         --output /tmp/prep
+
+In-process, ``main(argv)`` takes the same arguments and returns the summary.
 """
 
 from __future__ import annotations
@@ -65,7 +67,7 @@ from sage_spark.operators.textstats import (  # noqa: E402
 from sage_spark.session import build_spark  # noqa: E402
 
 
-def main() -> None:
+def main(argv: list[str]) -> dict:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="documents parquet (doc_id, text, source, ...)")
     ap.add_argument("--output", required=True)
@@ -99,7 +101,7 @@ def main() -> None:
              "BOTH a and b of an unpaired (a, c)+(b, c) wedge; cluster mode "
              "keeps one representative per chained group",
     )
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     spark = build_spark(app_name="sage-dataprep")
     spark.sparkContext.setLogLevel("WARN")
@@ -178,7 +180,8 @@ def main() -> None:
         "window": args.window,
     }
     print(json.dumps(summary))
+    return summary
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -19,6 +19,8 @@ Local smoke run (after a run_kg.py --synthetic run):
 
     python jobs/run_insight.py --store /tmp/vkg --output /tmp/insight
 
+In-process, ``main(argv)`` takes the same arguments and returns the summary.
+
 Message linkage: documents carrying ``origin_message_id`` /
 ``linked_message_id`` columns or ``chat-msg-<id>`` doc_ids link through
 the reference's three evidence rules; for stores without chat linkage
@@ -49,13 +51,13 @@ from sage_spark.session import build_spark  # noqa: E402
 from sage_spark.store import TableStore  # noqa: E402
 
 
-def main() -> None:
+def main(argv: list[str]) -> dict:
     ap = argparse.ArgumentParser()
     ap.add_argument("--store", required=True, help="KG store root (run_kg.py output)")
     ap.add_argument("--output", required=True)
     ap.add_argument("--persons", default=None, help="parquet with (id, name[, email]) display rows")
     ap.add_argument("--messages", default=None, help="comma-separated message ids to scope to")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     spark = build_spark(app_name="sage-insight")
     spark.sparkContext.setLogLevel("WARN")
@@ -96,7 +98,8 @@ def main() -> None:
         "replacements": written.filter(F.col("previous_fact_id").isNotNull()).count(),
     }
     print(json.dumps(summary))
+    return summary
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

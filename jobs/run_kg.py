@@ -12,6 +12,8 @@ Cluster usage (the north-rule deployment shape):
 Local smoke run (synthesizes input deterministically):
 
     python jobs/run_kg.py --synthetic 10000 --store /tmp/kgstore
+
+In-process, ``main(argv)`` takes the same arguments and returns the PipelineResult.
 """
 
 from __future__ import annotations
@@ -23,13 +25,13 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from sage_spark.datagen import build_groups, synth_webtext  # noqa: E402
-from sage_spark.pipeline import run_pipeline  # noqa: E402
+from sage_spark.pipeline import PipelineResult, run_pipeline  # noqa: E402
 from sage_spark.session import build_spark  # noqa: E402
+from sage_spark.sources.webtext import WEBTEXT_FORMATS, read_batch  # noqa: E402
 from sage_spark.store import TableStore  # noqa: E402
 
 
-def main() -> None:
+def main(argv: list[str]) -> PipelineResult:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="webtext parquet/Iceberg path")
     ap.add_argument("--persons", help="persons-dimension parquet path")
@@ -40,7 +42,7 @@ def main() -> None:
     ap.add_argument("--lang", default="en")
     ap.add_argument(
         "--input-format", default="parquet",
-        choices=["parquet", "jsonl", "json", "table", "iceberg"],
+        choices=WEBTEXT_FORMATS,
         help="'table'/'iceberg' resolve --input as a catalog table identifier",
     )
     ap.add_argument("--embed-chunks", action="store_true")
@@ -72,24 +74,19 @@ def main() -> None:
         "the bulk-load migration path for reference deployments keeping a "
         "Neo4j serving copy",
     )
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     run_ts = args.run_ts or datetime.now(timezone.utc).isoformat()
     run_id = args.run_id or f"run-{run_ts.replace(':', '').replace('+', 'Z')}"
     spark = build_spark(app_name=f"sage-kg-{run_id}")
     spark.sparkContext.setLogLevel("WARN")
 
-    if args.synthetic:
-        webtext, persons_df = synth_webtext(spark, args.synthetic)
-        persons = [r.asDict() for r in persons_df.collect()]
-        groups = build_groups()
-    else:
-        if not args.input or not args.persons:
-            ap.error("--input and --persons are required without --synthetic")
-        from sage_spark.sources.webtext import read_dimensions, read_webtext
-
-        webtext = read_webtext(spark, args.input, args.input_format)
-        persons, groups = read_dimensions(spark, args.persons, args.groups)
+    try:
+        webtext, persons, groups = read_batch(
+            spark, args.synthetic, args.input, args.input_format, args.persons, args.groups
+        )
+    except ValueError as e:
+        ap.error(str(e))
 
     store = TableStore(args.store)
     result = run_pipeline(
@@ -129,7 +126,8 @@ def main() -> None:
         exported = export_neo4j_admin_csv(spark, store, args.export_neo4j)
         counts = " ".join(f"{k}={n}" for k, n in sorted(exported.items()))
         print(f"neo4j export {args.export_neo4j}: {counts}")
+    return result
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

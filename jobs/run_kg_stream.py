@@ -19,6 +19,7 @@ Cluster usage:
 Default is a drain run (trigger availableNow): process everything currently
 in the directory, then exit and print one JSON summary — the shape cron
 deployments and tests want. --continuous keeps the query running.
+In-process, ``main(argv)`` takes the same arguments and returns the summary.
 """
 
 from __future__ import annotations
@@ -32,14 +33,14 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from sage_spark.schema import RUNS_SCHEMA  # noqa: E402
+from sage_spark.schema import DOCUMENTS_SCHEMA, FACTS_SCHEMA, RUNS_SCHEMA  # noqa: E402
 from sage_spark.session import build_spark  # noqa: E402
 from sage_spark.sources.webtext import read_dimensions  # noqa: E402
 from sage_spark.store import TableStore  # noqa: E402
 from sage_spark.streaming.ingest import start_kg_ingestion, stream_webtext_from_dir  # noqa: E402
 
 
-def main() -> None:
+def main(argv: list[str]) -> dict:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input-dir", required=True, help="webtext parquet file-drop directory")
     ap.add_argument("--store", required=True, help="output table-store root")
@@ -63,7 +64,7 @@ def main() -> None:
         "'components' assignment table (incremental connected components; "
         "only changed/new rows are upserted per batch)",
     )
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     spark = build_spark(app_name="sage-kg-stream")
     spark.sparkContext.setLogLevel("WARN")
@@ -90,26 +91,22 @@ def main() -> None:
     )
     query.awaitTermination()
 
-    # a drain that found no files leaves a fresh store without a runs table
+    # a drain that found no files leaves a fresh store without any table
     runs = store.read(spark, "runs", RUNS_SCHEMA)
     this_run = runs.filter(F.col("run_id").startswith(f"{args.run_prefix}-"))
+    facts = store.read(spark, "facts", FACTS_SCHEMA)
     summary = {
         "batches": this_run.select("run_id").distinct().count(),
-        "documents_total": store.read(spark, "documents").count()
-        if store.exists("documents")
-        else 0,
-        "facts_current": store.read(spark, "facts")
-        .filter(F.col("status") == "current")
-        .count()
-        if store.exists("facts")
-        else 0,
+        "documents_total": store.read(spark, "documents", DOCUMENTS_SCHEMA).count(),
+        "facts_current": facts.filter(F.col("status") == "current").count(),
     }
     if args.maintain_components:
         summary["components_vertices"] = (
             store.read(spark, "components").count() if store.exists("components") else 0
         )
     print(json.dumps(summary, sort_keys=True))
+    return summary
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -25,6 +25,8 @@ Local smoke run (synthesizes the batch deterministically):
 
     python jobs/run_maintain.py --store /tmp/kgstore --synthetic 2000 \
         --output /tmp/maint
+
+In-process, ``main(argv)`` takes the same arguments and returns the summary.
 """
 
 from __future__ import annotations
@@ -39,7 +41,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from sage_spark.datagen import build_groups, synth_webtext  # noqa: E402
 from sage_spark.operators.components import claim_entity_edges  # noqa: E402
 from sage_spark.operators.extraction import extract_claims_stage  # noqa: E402
 from sage_spark.operators.incremental import (  # noqa: E402
@@ -51,10 +52,11 @@ from sage_spark.operators.incremental import (  # noqa: E402
 )
 from sage_spark.pipeline import new_documents  # noqa: E402
 from sage_spark.session import build_spark  # noqa: E402
+from sage_spark.sources.webtext import WEBTEXT_FORMATS, read_batch  # noqa: E402
 from sage_spark.store import TableStore  # noqa: E402
 
 
-def main() -> None:
+def main(argv: list[str]) -> dict:
     ap = argparse.ArgumentParser()
     ap.add_argument("--store", required=True, help="existing table-store root (read-only here)")
     ap.add_argument("--output", required=True, help="analysis output root")
@@ -63,7 +65,7 @@ def main() -> None:
     ap.add_argument("--groups", help="groups-dimension parquet path")
     ap.add_argument(
         "--input-format", default="parquet",
-        choices=["parquet", "jsonl", "json", "table", "iceberg"],
+        choices=WEBTEXT_FORMATS,
         help="'table'/'iceberg' resolve --input as a catalog table identifier",
     )
     ap.add_argument("--lang", default="en")
@@ -86,23 +88,18 @@ def main() -> None:
         "--synthetic", type=int, default=0,
         help="generate an N-doc synthetic batch instead of --input",
     )
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     run_ts = args.run_ts or datetime.now(timezone.utc).isoformat()
     spark = build_spark(app_name="sage-kg-maintain")
     spark.sparkContext.setLogLevel("WARN")
 
-    if args.synthetic:
-        webtext, persons_df = synth_webtext(spark, args.synthetic)
-        persons = [r.asDict() for r in persons_df.collect()]
-        groups = build_groups()
-    else:
-        if not args.input or not args.persons:
-            ap.error("--input and --persons are required without --synthetic")
-        from sage_spark.sources.webtext import read_dimensions, read_webtext
-
-        webtext = read_webtext(spark, args.input, args.input_format)
-        persons, groups = read_dimensions(spark, args.persons, args.groups)
+    try:
+        webtext, persons, groups = read_batch(
+            spark, args.synthetic, args.input, args.input_format, args.persons, args.groups
+        )
+    except ValueError as e:
+        ap.error(str(e))
 
     store = TableStore(args.store)
     out = Path(args.output) if "://" not in args.output else None
@@ -200,7 +197,8 @@ def main() -> None:
         summary["reembed_targets"] = reembed.filter(F.col("needs_reembed")).count()
 
     print(json.dumps(summary, sort_keys=True))
+    return summary
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -68,24 +68,13 @@ def minhash_signature_wide(
 
     One vectorized numpy kernel per Arrow batch (kernel/minhash.py) —
     shingle windows, the bit-exact XXH64, and the family mins all evaluated
-    as matrix ops, no per-shingle anything. Measured at 120k docs
-    (local[16], warm): signature 13.8 s -> ~3 s against the all-JVM
-    explode -> xxhash -> groupBy-min form, which spends ~half its time in
-    the interpreted HOF ``transform`` that builds the shingle array (~1500
-    substr lambda calls per doc). That form is the oracle in
-    tests/test_operators.py, which pins the two equal on corpus + edge
-    cases."""
-    # A small input file arrives as one split and would run the signature
-    # single-threaded (the Arrow kernel batches per partition) — spread it
-    # first.
-    return _minhash_signature_arrow(spread_input(df), text_col, id_col, shingle_len, num_hashes)
-
-
-def _minhash_signature_arrow(
-    df: DataFrame, text_col: str, id_col: str, shingle_len: int, num_hashes: int
-) -> DataFrame:
-    """mapInPandas signature: map-side only (zero Exchange beyond the input
-    spread), Arrow-batched, ~25 numpy matrix ops per batch per lane."""
+    as matrix ops, no per-shingle anything; map-side only (zero Exchange
+    beyond the input spread). Measured at 120k docs (local[16], warm):
+    signature 13.8 s -> ~3 s against the all-JVM explode -> xxhash ->
+    groupBy-min form, which spends ~half its time in the interpreted HOF
+    ``transform`` that builds the shingle array (~1500 substr lambda calls
+    per doc). That form is the oracle in tests/test_operators.py, which
+    pins the two equal on corpus + edge cases."""
     from pyspark.sql import types as T
 
     id_field = df.schema[id_col]
@@ -109,7 +98,10 @@ def _minhash_signature_arrow(
             out.update({f"mh_{i}": sigs[:, i] for i in range(num_hashes)})
             yield pd.DataFrame(out)
 
-    return df.select(id_col, text_col).mapInPandas(compute, out_schema)
+    # A small input file arrives as one split and would run the signature
+    # single-threaded (the Arrow kernel batches per partition) — spread it
+    # first.
+    return spread_input(df).select(id_col, text_col).mapInPandas(compute, out_schema)
 
 
 def minhash_lsh_candidates(

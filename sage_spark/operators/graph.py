@@ -1,9 +1,8 @@
 """Graph-navigation operators over the materialized node/edge tables.
 
 J3 one-hop expansion (services.py:44-45,72), J8 fact -> supporting-document
-join (services.py:98-99,110-111), A5 ingestion summary (document_
-ingestion.py:258-272), A8 entity-id collection (saia.py:1945-1960), plus
-the Spark column form of F6 IST rendering (services.py:572-583).
+join (services.py:98-99,110-111), plus the Spark column form of F6 IST
+rendering (services.py:572-583).
 
 It also holds what the iterative graph operators share:
 ``symmetric_adjacency``, the one edge list → undirected adjacency builder,
@@ -94,25 +93,6 @@ def facts_with_evidence(
         .withColumnRenamed("url", "evidence_url")
         .withColumnRenamed("timestamp", "evidence_timestamp")
     )
-
-
-def ingestion_summary(runs: DataFrame) -> DataFrame:
-    """A5: per-status tallies of the lineage table."""
-    return runs.groupBy("status").agg(
-        F.count("*").alias("n_partitions"),
-        F.sum("docs_processed").alias("docs_processed"),
-        F.sum("claims_extracted").alias("claims_extracted"),
-        F.sum("conflicts_found").alias("conflicts_found"),
-    )
-
-
-def distinct_entity_ids(claims: DataFrame, facts: DataFrame) -> DataFrame:
-    """A8: distinct subject/object entity ids across claims + facts."""
-    cols = ["subject_entity_id", "object_entity_id"]
-    stacked = claims.select(F.explode(F.array(*cols)).alias("entity_id")).unionByName(
-        facts.select(F.explode(F.array(*cols)).alias("entity_id"))
-    )
-    return stacked.filter(F.col("entity_id").isNotNull()).distinct().orderBy("entity_id")
 
 
 def ist_display(col) -> F.Column:

@@ -1,5 +1,5 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata.
+with typed metadata; the feature stages cover images and audio.
 
 The Spark-side machinery (schemas, Arrow batch shapes, mapInPandas
 signatures, partition sizing) is real and tested. Container-header decode
@@ -67,16 +67,6 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
         T.StructField("embedding", T.ArrayType(T.FloatType()), True),
     ]
 )
-
-FRAME_SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("frame_index", T.IntegerType(), False),
-        T.StructField("frame_ts_ms", T.LongType(), True),
-        T.StructField("frame_sha256", T.StringType(), True),
-    ]
-)
-
 
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 # JPEG start-of-frame markers carrying dimensions (C4/C8/CC are not SOFs)
@@ -271,39 +261,3 @@ def extract_audio_features(media: DataFrame, *, strict: bool = False, embed_dim:
             yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields])
 
     return src.mapInPandas(kernel, schema=AUDIO_FEATURES_SCHEMA)
-
-
-def sample_video_frames(media: DataFrame, *, every_ms: int = 1000, max_frames: int = 8, strict: bool = False) -> DataFrame:
-    """Frame-sampling stage (video -> frame rows). STUB decode: frame count
-    and hashes derive deterministically from content; the real path swaps in
-    pyav/ffmpeg inside the same kernel."""
-    src = media.filter(F.col("media_type") == "video").select("media_id", "payload")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for media_id, payload in zip(batch["media_id"], batch["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                if strict:
-                    raise NotImplementedError("video decode requires pyav/ffmpeg; not installed here")
-                # hash the payload ONCE and fork per-frame states from it:
-                # sha256(data + suffix) == copy-of-sha256(data).update(suffix)
-                # (streaming-hash property), so an 8-frame sample no longer
-                # re-hashes a MB-size payload 8 times
-                base = hashlib.sha256(data)
-                digest = base.digest()
-                n = 1 + digest[2] % max_frames
-                for i in range(n):
-                    h = base.copy()
-                    h.update(i.to_bytes(4, "big"))
-                    rows.append(
-                        {
-                            "media_id": media_id,
-                            "frame_index": i,
-                            "frame_ts_ms": i * every_ms,
-                            "frame_sha256": h.hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SAMPLE_SCHEMA.fields])
-
-    return src.mapInPandas(kernel, schema=FRAME_SAMPLE_SCHEMA)

@@ -4,7 +4,7 @@ The engine's canonical input is an Iceberg/parquet table shaped like
 BASELINE.json's input_hint (url, warc_ts, html, text, lang + grounding
 sidecar). Crawl dumps frequently arrive as JSONL (one page object per line,
 bytes base64-encoded); this adapter reads/writes that interchange format
-with the exact same schema, so `jobs/run_kg.py --input` accepts either.
+with the exact same schema, so the jobs' `--input` accepts either.
 
 Scale notes: the JSONL read is schema-enforced (no sampling-based inference
 pass over 100 TB), line-splittable (gzip-free dumps parallelize per block),
@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..datagen import build_groups, synth_webtext
 from ..schema import WEBTEXT_SCHEMA
 
 # JSON cannot carry bytes: html rides base64 in `html_b64`, timestamps ride
@@ -105,12 +106,35 @@ def read_dimensions(
     return persons, groups
 
 
-def read_webtext(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    """Format-dispatching reader for jobs/run_kg.py --input."""
-    if fmt == "parquet":
-        return spark.read.schema(WEBTEXT_SCHEMA).parquet(path)
-    if fmt in ("jsonl", "json"):
-        return read_webtext_jsonl(spark, path)
-    if fmt in ("table", "iceberg"):
-        return read_webtext_table(spark, path)
-    raise ValueError(f"unsupported webtext format: {fmt}")
+# --input-format name -> reader; 'table'/'iceberg' resolve the path as a
+# catalog table identifier
+WEBTEXT_FORMATS = {
+    "parquet": lambda spark, path: spark.read.schema(WEBTEXT_SCHEMA).parquet(path),
+    "jsonl": read_webtext_jsonl,
+    "json": read_webtext_jsonl,
+    "table": read_webtext_table,
+    "iceberg": read_webtext_table,
+}
+
+
+def read_webtext(spark: SparkSession, path: str, fmt: str) -> DataFrame:
+    """Format-dispatching reader for the jobs' --input."""
+    if fmt not in WEBTEXT_FORMATS:
+        raise ValueError(f"unsupported webtext format: {fmt}")
+    return WEBTEXT_FORMATS[fmt](spark, path)
+
+
+def read_batch(
+    spark: SparkSession, synthetic: int, path: str | None, fmt: str,
+    persons_path: str | None, groups_path: str | None,
+) -> tuple[DataFrame, list[dict], list[dict]]:
+    """A batch job's (webtext, persons, groups): ``synthetic`` generated pages
+    with their persons and the default groups when it is non-zero, else
+    ``path`` read as ``fmt`` plus the dimension parquets."""
+    if synthetic:
+        webtext, persons = synth_webtext(spark, synthetic)
+        return webtext, [r.asDict() for r in persons.collect()], build_groups()
+    if not path or not persons_path:
+        raise ValueError("--input and --persons are required without --synthetic")
+    webtext = read_webtext(spark, path, fmt)
+    return (webtext, *read_dimensions(spark, persons_path, groups_path))

@@ -10,10 +10,8 @@ from sage_spark.kernel.retrieval import (
     is_displayable_trace_entity,
 )
 from sage_spark.operators.graph import (
-    distinct_entity_ids,
     expand_one_hop,
     facts_with_evidence,
-    ingestion_summary,
     ist_display,
 )
 
@@ -79,21 +77,6 @@ def test_facts_with_evidence_picks_first_doc(spark):
     )
     out = facts_with_evidence(facts, edges, claims, docs).collect()
     assert len(out) == 1 and out[0]["evidence_doc_id"] == "d1"  # min doc_id among SUPPORTS
-
-
-def test_ingestion_summary_and_entity_ids(spark):
-    runs = spark.createDataFrame(
-        [("r1", 0, "s", "completed", "t", 10, 5, 4, 1, None)],
-        "run_id string, partition_id int, stage string, status string, processed_at string, "
-        "docs_processed long, claims_extracted long, claims_canonicalized long, conflicts_found long, errors_json string",
-    )
-    s = ingestion_summary(runs).collect()[0]
-    assert s["status"] == "completed" and s["docs_processed"] == 10
-
-    claims = spark.createDataFrame([("u1", "u2"), ("u1", None)], "subject_entity_id string, object_entity_id string")
-    facts = spark.createDataFrame([("g1", None)], "subject_entity_id string, object_entity_id string")
-    ids = [r["entity_id"] for r in distinct_entity_ids(claims, facts).collect()]
-    assert ids == ["g1", "u1", "u2"]
 
 
 def test_chat_conversation_id_derivation_matches_log(spark):

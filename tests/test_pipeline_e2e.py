@@ -2,28 +2,50 @@
 
 Covers: byte-identical stage-1 extraction, Spark-vs-reference claim parity
 over the whole generated corpus, fact canonicalization behavior, idempotent
-re-runs (the resume story), and lineage rows.
+re-runs (the resume story), lineage rows, and the five jobs/ entry points
+called in-process on the suite's session (tests/test_submit.py runs run_kg
+through spark-submit and each job as a script).
 """
 
 from __future__ import annotations
-
-from pathlib import Path
 
 import pytest
 
 from pyspark.sql import functions as F
 
+# conftest puts this checkout's root first on sys.path, so these are its jobs/
+from jobs import run_dataprep, run_insight, run_kg, run_kg_stream, run_maintain
 from sage_spark.datagen import build_groups, build_persons, make_page, synth_webtext
 from sage_spark.kernel.pagetext import text_from_html
 from sage_spark.pipeline import run_pipeline
 from sage_spark.store import TableStore
 
 from .ref_oracle import RefSession, load_reference_saia, needs_reference
+from .test_plans import SF
 
-REPO_ROOT = Path(__file__).resolve().parents[1]
 N_DOCS = 120
 SEED = 7
 RUN_TS = "2026-05-01T00:00:00+00:00"
+
+
+def _run_job(spark, job, *argv):
+    """``job.main(argv)`` in the suite's session. The job's build_spark
+    re-applies its builder options to the running session (its app name,
+    shuffle partitions from the host's core count, ...); every runtime conf
+    the call changed is put back, so later tests see the fixture's session."""
+    conf = spark._jsparkSession.sessionState().conf()
+    before = spark.conf.getAll
+    try:
+        return job.main([str(a) for a in argv])
+    finally:
+        after = spark.conf.getAll
+        for key in after.keys() - before.keys():
+            conf.unsetConf(key)
+        for key, value in before.items():
+            if after.get(key) != value:
+                conf.setConfString(key, value)
+        assert spark.conf.getAll == before
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
 
 
 @pytest.fixture(scope="module")
@@ -572,28 +594,13 @@ def test_insight_job_end_to_end(spark, tmp_path):
     walk must cover exactly the claim-bearing documents, link every
     CONTRADICTS row to a fact, put predecessors only on SUPPORTS rows, and
     agree with the store's own claim/edge tables."""
-    import json
-    import subprocess
-    import sys
-
     kg = tmp_path / "kgi"
-    subprocess.run(
-        [
-            sys.executable, "jobs/run_kg.py", "--synthetic", "400",
-            "--store", str(kg), "--run-id", "i1",
-            "--run-ts", "2026-05-01T00:00:00+00:00",
-        ],
-        capture_output=True, text=True, timeout=500, check=True, cwd=REPO_ROOT,
+    _run_job(
+        spark, run_kg, "--synthetic", "400", "--store", kg, "--run-id", "i1",
+        "--run-ts", "2026-05-01T00:00:00+00:00",
     )
     out = tmp_path / "insight"
-    proc = subprocess.run(
-        [
-            sys.executable, "jobs/run_insight.py",
-            "--store", str(kg), "--output", str(out),
-        ],
-        capture_output=True, text=True, timeout=500, check=True, cwd=REPO_ROOT,
-    )
-    summary = json.loads([l for l in proc.stdout.splitlines() if l.startswith("{")][-1])
+    summary = _run_job(spark, run_insight, "--store", kg, "--output", out)
     assert summary["rows"] >= summary["messages"] > 0
     assert summary["with_fact_link"] > 0 and summary["replacements"] > 0
 
@@ -628,20 +635,9 @@ def test_dataprep_job_end_to_end(spark, tmp_path):
     """jobs/run_dataprep.py stage chain over the driver documents table:
     monotone survivor counts, pack manifest consistent with total tokens,
     and cleaned corpus free of exact duplicates."""
-    import json
-    import subprocess
-    import sys
-
+    docs = f"{SF}/documents.parquet"
     out = tmp_path / "prep"
-    proc = subprocess.run(
-        [
-            sys.executable, "jobs/run_dataprep.py",
-            "--input", "/root/testdata/sf0.001/documents.parquet",
-            "--output", str(out),
-        ],
-        capture_output=True, text=True, timeout=500, check=True, cwd=REPO_ROOT,
-    )
-    summary = json.loads([l for l in proc.stdout.splitlines() if l.startswith("{")][-1])
+    summary = _run_job(spark, run_dataprep, "--input", docs, "--output", out)
     assert summary["input"] >= summary["language"] >= summary["quality"] >= summary["exact_dedup"] >= summary["near_dedup"]
     assert summary["documents_out"] > 0 and summary["total_tokens"] > 0
 
@@ -659,16 +655,9 @@ def test_dataprep_job_end_to_end(spark, tmp_path):
     # --verify-jaccard: near-dedup drops only pairs whose EXACT shingle
     # Jaccard clears the bar (LSH false positives survive)
     out2 = tmp_path / "prep_verified"
-    proc2 = subprocess.run(
-        [
-            sys.executable, "jobs/run_dataprep.py",
-            "--input", "/root/testdata/sf0.001/documents.parquet",
-            "--output", str(out2),
-            "--verify-jaccard", "0.8",
-        ],
-        capture_output=True, text=True, timeout=500, check=True, cwd=REPO_ROOT,
+    summary2 = _run_job(
+        spark, run_dataprep, "--input", docs, "--output", out2, "--verify-jaccard", "0.8"
     )
-    summary2 = json.loads([l for l in proc2.stdout.splitlines() if l.startswith("{")][-1])
     assert summary2["near_dedup"] >= summary["near_dedup"]  # verify only un-drops
     corpus2 = spark.read.parquet(str(out2 / "corpus"))
     ids1 = {r["doc_id"] for r in corpus.select("doc_id").collect()}
@@ -689,16 +678,7 @@ def test_dataprep_job_end_to_end(spark, tmp_path):
     # side of a pair -> the cluster survivor set is a SUBSET of the
     # pairwise one; and no near-dup pair survives intact.
     out3 = tmp_path / "prep_cluster"
-    proc3 = subprocess.run(
-        [
-            sys.executable, "jobs/run_dataprep.py",
-            "--input", "/root/testdata/sf0.001/documents.parquet",
-            "--output", str(out3),
-            "--cluster-dedup",
-        ],
-        capture_output=True, text=True, timeout=500, check=True, cwd=REPO_ROOT,
-    )
-    summary3 = json.loads([l for l in proc3.stdout.splitlines() if l.startswith("{")][-1])
+    summary3 = _run_job(spark, run_dataprep, "--input", docs, "--output", out3, "--cluster-dedup")
     assert summary3["near_dedup"] <= summary["near_dedup"]
     corpus3 = spark.read.parquet(str(out3 / "corpus"))
     ids3 = {r["doc_id"] for r in corpus3.select("doc_id").collect()}
@@ -711,16 +691,7 @@ def test_dataprep_job_end_to_end(spark, tmp_path):
     # doc; token mass can only shrink; the pack manifest still tiles the
     # (clipped) stream exactly.
     out4 = tmp_path / "prep_clipped"
-    proc4 = subprocess.run(
-        [
-            sys.executable, "jobs/run_dataprep.py",
-            "--input", "/root/testdata/sf0.001/documents.parquet",
-            "--output", str(out4),
-            "--clip-spans", "10",
-        ],
-        capture_output=True, text=True, timeout=500, check=True, cwd=REPO_ROOT,
-    )
-    summary4 = json.loads([l for l in proc4.stdout.splitlines() if l.startswith("{")][-1])
+    summary4 = _run_job(spark, run_dataprep, "--input", docs, "--output", out4, "--clip-spans", "10")
     assert summary4["span_clip"] == summary4["near_dedup"]  # row-preserving
     corpus4 = spark.read.parquet(str(out4 / "corpus"))
     ids4 = {r["doc_id"] for r in corpus4.select("doc_id").collect()}
@@ -766,31 +737,18 @@ def test_maintain_job_end_to_end(spark, tmp_path):
     must classify every promotable batch claim exactly once, seed the BFS
     with the non-confirmed entities (depth 0 == changed_entities), stay
     strictly read-only on the store, and write the three analysis tables."""
-    import json
-    import subprocess
-    import sys
-
     kg = tmp_path / "kgm"
-    subprocess.run(
-        [
-            sys.executable, "jobs/run_kg.py", "--synthetic", "400",
-            "--store", str(kg), "--run-id", "m1",
-            "--run-ts", "2026-05-01T00:00:00+00:00",
-        ],
-        capture_output=True, text=True, timeout=500, check=True, cwd=REPO_ROOT,
+    _run_job(
+        spark, run_kg, "--synthetic", "400", "--store", kg, "--run-id", "m1",
+        "--run-ts", "2026-05-01T00:00:00+00:00",
     )
     before = sorted((p.relative_to(kg), p.stat().st_size) for p in kg.rglob("*") if p.is_file())
 
     out = tmp_path / "maint"
-    proc = subprocess.run(
-        [
-            sys.executable, "jobs/run_maintain.py",
-            "--store", str(kg), "--synthetic", "800", "--output", str(out),
-            "--run-ts", "2026-05-02T00:00:00+00:00", "--rank-impact",
-        ],
-        capture_output=True, text=True, timeout=500, check=True, cwd=REPO_ROOT,
+    summary = _run_job(
+        spark, run_maintain, "--store", kg, "--synthetic", "800", "--output", out,
+        "--run-ts", "2026-05-02T00:00:00+00:00", "--rank-impact",
     )
-    summary = json.loads([l for l in proc.stdout.splitlines() if l.startswith("{")][-1])
 
     # read-only contract: byte-for-byte identical store file listing
     after = sorted((p.relative_to(kg), p.stat().st_size) for p in kg.rglob("*") if p.is_file())
@@ -837,12 +795,6 @@ def test_kg_stream_job_end_to_end(spark, tmp_path):
     ingests the files present, one with a NEW file ingests only that file
     (streaming checkpoint resume), and one with nothing new is a no-op on
     every store count."""
-    import json
-    import subprocess
-    import sys
-
-    from sage_spark.datagen import synth_webtext
-
     webtext, persons_df = synth_webtext(spark, 120, n_persons=12, seed=9)
     drop = tmp_path / "drop"
     drop.mkdir()
@@ -857,17 +809,10 @@ def test_kg_stream_job_end_to_end(spark, tmp_path):
     assert parts1 and parts2
 
     def drain() -> dict:
-        proc = subprocess.run(
-            [
-                sys.executable, "jobs/run_kg_stream.py",
-                "--input-dir", str(drop),
-                "--store", str(tmp_path / "store"),
-                "--checkpoint", str(tmp_path / "ckpt"),
-                "--persons", str(persons_path),
-            ],
-            capture_output=True, text=True, timeout=500, check=True, cwd=REPO_ROOT,
+        return _run_job(
+            spark, run_kg_stream, "--input-dir", drop, "--store", tmp_path / "store",
+            "--checkpoint", tmp_path / "ckpt", "--persons", persons_path,
         )
-        return json.loads([l for l in proc.stdout.splitlines() if l.startswith("{")][-1])
 
     s0 = drain()
     assert s0 == {"batches": 0, "documents_total": 0, "facts_current": 0}
@@ -883,6 +828,18 @@ def test_kg_stream_job_end_to_end(spark, tmp_path):
 
     s3 = drain()
     assert s3 == s2
+
+
+def test_batch_jobs_without_input_are_usage_errors(spark, tmp_path, capsys):
+    """run_kg and run_maintain given neither --synthetic nor --input and
+    --persons exit with argparse's usage-error code and say what is missing."""
+    for job, argv in ((run_kg, []), (run_maintain, ["--output", tmp_path / "out"])):
+        with pytest.raises(SystemExit) as exit_info:
+            _run_job(spark, job, "--store", tmp_path / "store", *argv)
+        assert exit_info.value.code == 2
+        assert "error: --input and --persons are required without --synthetic" in (
+            capsys.readouterr().err
+        )
 
 
 def test_canonicalize_uncontested_fast_path_matches_serial_replay(spark):

@@ -8,7 +8,9 @@ by spark-submit; sage_spark/session.py). The unit tests pin that decision:
 ``.master()`` set in app code silently overrides ``--master``, which would
 force a YARN/k8s submission back to local mode, and a shuffle-partition
 fallback computed from the driver host's core count would pin a
-1000-executor job to ~32 partitions.
+1000-executor job to ~32 partitions. Every job also runs as a plain
+script far enough to print its ``--help`` (its ``__main__`` wiring and the
+``sys.path`` line that finds the package).
 """
 
 from __future__ import annotations
@@ -100,3 +102,19 @@ def test_spark_submit_py_files_e2e(tmp_path: Path) -> None:
     assert int(counts["documents"]) > 0
     assert int(counts["facts_current"]) > 0
     assert any((store / "facts").rglob("*.parquet"))
+
+
+@pytest.mark.parametrize(
+    "job", ["run_dataprep", "run_insight", "run_kg", "run_kg_stream", "run_maintain"]
+)
+def test_job_script_help_exits_zero(job: str, tmp_path: Path) -> None:
+    """``python jobs/<job>.py --help`` from a directory without the package:
+    the import resolves through the script's own sys.path line, and argparse
+    exits before any JVM starts."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, str(REPO / "jobs" / f"{job}.py"), "--help"],
+        capture_output=True, text=True, timeout=120, cwd=tmp_path, env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert proc.stdout.startswith(f"usage: {job}.py")
