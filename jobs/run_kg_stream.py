@@ -18,7 +18,10 @@ Cluster usage:
 
 Default is a drain run (trigger availableNow): process everything currently
 in the directory, then exit and print one JSON summary — the shape cron
-deployments and tests want. --continuous keeps the query running.
+deployments and tests want: the store's batch, document and current-fact
+counts, and what this drain's batches wrote (documents_ingested,
+claims_extracted, conflicts_found, summed from their run-level ``runs``
+rows). --continuous keeps the query running.
 In-process, ``main(argv)`` takes the same arguments and returns the summary.
 """
 
@@ -38,6 +41,27 @@ from sage_spark.session import build_spark  # noqa: E402
 from sage_spark.sources.webtext import read_dimensions  # noqa: E402
 from sage_spark.store import TableStore  # noqa: E402
 from sage_spark.streaming.ingest import start_kg_ingestion, stream_webtext_from_dir  # noqa: E402
+
+
+BATCH_DELTAS = ("documents_ingested", "claims_extracted", "conflicts_found")
+
+
+def _batch_totals(spark, store: TableStore, run_prefix: str) -> dict:
+    """Batch count and summed ``BATCH_DELTAS`` over the run-level ``runs``
+    rows (``partition_id = -1``, one per batch) of this prefix's runs. A
+    fresh store without a ``runs`` table reads all zeros."""
+    totals = (
+        store.read(spark, "runs", RUNS_SCHEMA)
+        .filter(F.col("run_id").startswith(f"{run_prefix}-") & (F.col("partition_id") == -1))
+        .agg(
+            F.count(F.lit(1)).alias("batches"),
+            F.sum("docs_processed").alias("documents_ingested"),
+            F.sum("claims_extracted").alias("claims_extracted"),
+            F.sum("conflicts_found").alias("conflicts_found"),
+        )
+        .first()
+    )
+    return {key: value or 0 for key, value in totals.asDict().items()}
 
 
 def main(argv: list[str]) -> dict:
@@ -71,6 +95,7 @@ def main(argv: list[str]) -> dict:
 
     persons, groups = read_dimensions(spark, args.persons, args.groups)
     store = TableStore(args.store)
+    before = _batch_totals(spark, store, args.run_prefix)
 
     stream = stream_webtext_from_dir(
         spark,
@@ -91,14 +116,14 @@ def main(argv: list[str]) -> dict:
     )
     query.awaitTermination()
 
-    # a drain that found no files leaves a fresh store without any table
-    runs = store.read(spark, "runs", RUNS_SCHEMA)
-    this_run = runs.filter(F.col("run_id").startswith(f"{args.run_prefix}-"))
+    after = _batch_totals(spark, store, args.run_prefix)
     facts = store.read(spark, "facts", FACTS_SCHEMA)
     summary = {
-        "batches": this_run.select("run_id").distinct().count(),
+        "batches": after["batches"],
         "documents_total": store.read(spark, "documents", DOCUMENTS_SCHEMA).count(),
         "facts_current": facts.filter(F.col("status") == "current").count(),
+        # this drain's batches: what they wrote, not store totals
+        **{key: after[key] - before[key] for key in BATCH_DELTAS},
     }
     if args.maintain_components:
         summary["components_vertices"] = (

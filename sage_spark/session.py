@@ -3,6 +3,14 @@
 Tuned for correctness at small scale and a plan shape that survives 100 TB:
 AQE on (runtime broadcast conversion + skew-join splitting), explicit
 shuffle-partition sizing, Arrow enabled for the pandas-UDF kernels.
+
+A standalone session also fits its driver JVM to the host: the heap
+(``default_driver_memory``, override ``SAGE_SPARK_DRIVER_MEM``) and the
+JIT policy (``default_java_options``, override
+``SAGE_SPARK_DRIVER_JAVA_OPTS``). A ``run_kg`` batch is a short job in a
+fresh JVM, and with the JVM's stock tiering most of its CPU goes to C2
+compiles that the job ends before earning back. Under spark-submit the
+driver JVM already exists, so neither is set.
 """
 
 from __future__ import annotations
@@ -58,12 +66,37 @@ def default_driver_memory(
     return f"{min(max(phys_bytes // 2**31, 1), 16)}g"
 
 
+# C1 only: a run_kg-sized job ends before C2's compiles pay back (on 4
+# cores, C2 was most of a fresh-JVM batch's CPU). Long in-session runs do
+# earn them back and want stock tiering: BENCH_jit_host4.json has both.
+JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
+
+
+def default_java_options(environ: os._Environ[str] | dict[str, str]) -> str:
+    """Driver JVM flags for a standalone session: ``SAGE_SPARK_DRIVER_JAVA_OPTS``
+    when set (the empty string gives back the JVM's stock tiered JIT), else
+    ``JAVA_OPTIONS``; nothing under spark-submit, whose driver JVM is
+    already running."""
+    if _under_spark_submit(environ):
+        return ""
+    return environ.get("SAGE_SPARK_DRIVER_JAVA_OPTS", JAVA_OPTIONS)
+
+
 def build_spark(
     app_name: str = "sage-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The engine's session: ``getOrCreate`` with the defaults above.
+
+    A standalone call also sizes the driver heap (``default_driver_memory``)
+    and puts the JIT policy (``default_java_options``) in
+    ``spark.driver.defaultJavaOptions``, so ``extra_conf``'s
+    ``spark.driver.extraJavaOptions`` add to it. Both take effect only when
+    this call starts the JVM. Under spark-submit neither is set. On a
+    running session the builder options are re-applied to its runtime conf
+    (``spark.sql.shuffle.partitions`` included)."""
     master, shuffle_partitions, submitted = resolve_session_shape(
         master, shuffle_partitions, os.environ
     )
@@ -95,6 +128,9 @@ def build_spark(
         # under spark-submit the driver JVM already exists; driver memory can
         # only come from the submit command line, so setting it here is noise
         builder = builder.config("spark.driver.memory", default_driver_memory(os.environ))
+    java_options = default_java_options(os.environ)
+    if java_options:
+        builder = builder.config("spark.driver.defaultJavaOptions", java_options)
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

@@ -31,8 +31,9 @@ RUN_TS = "2026-05-01T00:00:00+00:00"
 def _run_job(spark, job, *argv):
     """``job.main(argv)`` in the suite's session. The job's build_spark
     re-applies its builder options to the running session (its app name,
-    shuffle partitions from the host's core count, ...); every runtime conf
-    the call changed is put back, so later tests see the fixture's session."""
+    shuffle partitions from the host's core count, the driver JVM's
+    defaultJavaOptions, ...); every runtime conf the call changed is put
+    back, so later tests see the fixture's session."""
     conf = spark._jsparkSession.sessionState().conf()
     before = spark.conf.getAll
     try:
@@ -794,7 +795,8 @@ def test_kg_stream_job_end_to_end(spark, tmp_path):
     into a fresh store prints an all-zero summary, the next invocation
     ingests the files present, one with a NEW file ingests only that file
     (streaming checkpoint resume), and one with nothing new is a no-op on
-    every store count."""
+    every store count. Each drain's documents_ingested / claims_extracted /
+    conflicts_found are what that drain added to the store."""
     webtext, persons_df = synth_webtext(spark, 120, n_persons=12, seed=9)
     drop = tmp_path / "drop"
     drop.mkdir()
@@ -807,6 +809,8 @@ def test_kg_stream_job_end_to_end(spark, tmp_path):
     parts1 = list((tmp_path / "b1").glob("part-*.parquet"))
     parts2 = list((tmp_path / "b2").glob("part-*.parquet"))
     assert parts1 and parts2
+    store = TableStore(tmp_path / "store")
+    deltas = ("documents_ingested", "claims_extracted", "conflicts_found")
 
     def drain() -> dict:
         return _run_job(
@@ -814,20 +818,46 @@ def test_kg_stream_job_end_to_end(spark, tmp_path):
             "--checkpoint", tmp_path / "ckpt", "--persons", persons_path,
         )
 
+    def written() -> dict:
+        """The store's documents, the claims its per-partition lineage rows
+        count (the claims table keeps one row per claim_id, fewer than were
+        extracted), and the conflicts its run summary rows record."""
+        if not store.exists("runs"):
+            return dict.fromkeys(deltas, 0)
+        runs = store.read(spark, "runs")
+        return {
+            "documents_ingested": store.read(spark, "documents").count(),
+            "claims_extracted": runs.filter(F.col("partition_id") >= 0)
+            .agg(F.sum("claims_extracted")).first()[0],
+            "conflicts_found": runs.filter(F.col("partition_id") == -1)
+            .agg(F.sum("conflicts_found")).first()[0],
+        }
+
+    def drained(before: dict, after: dict) -> dict:
+        return {key: after[key] - before[key] for key in deltas}
+
     s0 = drain()
-    assert s0 == {"batches": 0, "documents_total": 0, "facts_current": 0}
+    assert s0 == {"batches": 0, "documents_total": 0, "facts_current": 0, **dict.fromkeys(deltas, 0)}
+    w0 = written()
 
     parts1[0].rename(drop / "f1.parquet")
     s1 = drain()
     assert s1["batches"] == 1 and s1["documents_total"] > 0
+    w1 = written()
+    assert {key: s1[key] for key in deltas} == drained(w0, w1)
+    assert s1["documents_ingested"] == s1["documents_total"] and s1["claims_extracted"] > 0
 
     parts2[0].rename(drop / "f2.parquet")
     s2 = drain()
     assert s2["batches"] == 2
     assert s2["documents_total"] > s1["documents_total"]
+    w2 = written()
+    assert {key: s2[key] for key in deltas} == drained(w1, w2)
+    assert s2["documents_ingested"] == s2["documents_total"] - s1["documents_total"]
 
     s3 = drain()
-    assert s3 == s2
+    assert s3 == {**s2, **dict.fromkeys(deltas, 0)}
+    assert written() == w2
 
 
 def test_batch_jobs_without_input_are_usage_errors(spark, tmp_path, capsys):

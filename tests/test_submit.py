@@ -8,7 +8,9 @@ by spark-submit; sage_spark/session.py). The unit tests pin that decision:
 ``.master()`` set in app code silently overrides ``--master``, which would
 force a YARN/k8s submission back to local mode, and a shuffle-partition
 fallback computed from the driver host's core count would pin a
-1000-executor job to ~32 partitions. Every job also runs as a plain
+1000-executor job to ~32 partitions. The driver JVM's JIT policy is set
+only outside spark-submit, and a fresh standalone driver runs it together
+with the caller's extraJavaOptions. Every job also runs as a plain
 script far enough to print its ``--help`` (its ``__main__`` wiring and the
 ``sys.path`` line that finds the package).
 """
@@ -24,7 +26,12 @@ from pathlib import Path
 
 import pytest
 
-from sage_spark.session import _under_spark_submit, default_driver_memory, resolve_session_shape
+from sage_spark.session import (
+    _under_spark_submit,
+    default_driver_memory,
+    default_java_options,
+    resolve_session_shape,
+)
 
 REPO = Path(__file__).resolve().parents[1]
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
@@ -60,6 +67,47 @@ def test_default_driver_memory_fits_the_host() -> None:
     # this host: never more than it physically has
     host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     assert int(default_driver_memory({})[:-1]) * gib <= max(host, gib)
+
+
+def test_default_java_options() -> None:
+    assert default_java_options({}) == "-XX:TieredStopAtLevel=1"
+    # the environment override replaces the policy; empty is stock tiering
+    env = {"SAGE_SPARK_DRIVER_JAVA_OPTS": "-XX:CICompilerCount=2"}
+    assert default_java_options(env) == "-XX:CICompilerCount=2"
+    assert default_java_options({"SAGE_SPARK_DRIVER_JAVA_OPTS": ""}) == ""
+    # spark-submit already started the driver JVM: nothing to set
+    assert default_java_options({"PYSPARK_GATEWAY_PORT": "50000"}) == ""
+    assert default_java_options({**env, "PYSPARK_GATEWAY_PORT": "50000"}) == ""
+
+
+_PROBE = """
+from sage_spark.session import build_spark
+spark = build_spark(extra_conf={"spark.driver.extraJavaOptions": "-Dsage.probe=1"})
+bean = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+print("\\n".join(bean.getInputArguments()))
+spark.stop()
+"""
+
+
+def test_jit_policy_and_extra_java_options_reach_a_fresh_driver(tmp_path: Path) -> None:
+    """A fresh standalone driver JVM runs the policy AND the caller's
+    extraJavaOptions: the policy sits in spark.driver.defaultJavaOptions,
+    so extraJavaOptions (kgbench's -Djava.io.tmpdir) append to it."""
+    env = {
+        k: v
+        for k, v in os.environ.items()
+        if k not in ("SAGE_SPARK_DRIVER_JAVA_OPTS", "PYSPARK_GATEWAY_PORT", "PYSPARK_GATEWAY_SECRET")
+    }
+    env["PYTHONPATH"] = str(REPO)
+    env["SAGE_SPARK_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", _PROBE],
+        capture_output=True, text=True, timeout=300, cwd=tmp_path, env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    args = proc.stdout.splitlines()
+    assert "-XX:TieredStopAtLevel=1" in args, args
+    assert "-Dsage.probe=1" in args
 
 
 def test_spark_submit_py_files_e2e(tmp_path: Path) -> None:
