@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .similarity import _dot, _norm, with_lsh_bucket
+from .similarity import _dot, _norm
 from .spread import spread_input
 from .textstats import char_ngrams
 
@@ -249,64 +249,6 @@ def with_simhash(df: DataFrame, text_col: str = "text", out_col: str = "simhash"
     return df.withColumn(out_col, F.when(n > 0, sim).otherwise(F.lit(0).cast("long")))
 
 
-def embedding_near_duplicates_bucketed(
-    df: DataFrame,
-    embedding_col: str = "embedding",
-    id_col: str = "vec_id",
-    *,
-    dim: int,
-    threshold: float = 0.95,
-    bands: int = 4,
-    planes_per_band: int = 4,
-    seed: int = 13,
-    max_bucket_size: int = 1024,
-) -> DataFrame:
-    """The 100 TB path for embedding near-dup: banded hyperplane LSH
-    blocking, then exact cosine verification within buckets only.
-
-    A cos>=0.95 pair agrees with a random hyperplane w.p. ~0.9, so one band
-    of ``planes_per_band`` sign bits matches w.p. 0.9^p; ``bands``
-    independent bands lift recall to 1-(1-0.9^p)^B (~0.99 at 4x4). The only
-    shuffles key on (band, bucket) shorts; candidate pairs reuse the
-    no-self-join bucket combinatorics of the minhash path, and only
-    candidate pairs ever compute a dot product."""
-    src = df.select(F.col(id_col), F.col(embedding_col).alias("__v"))
-    banded = None
-    for band in range(bands):
-        b = with_lsh_bucket(
-            src, "__v", dim=dim, n_planes=planes_per_band, seed=seed + 101 * band, out_col="bucket"
-        ).select(F.col(id_col), F.lit(band).alias("band"), "bucket")
-        banded = b if banded is None else banded.unionByName(b)
-    buckets = (
-        banded.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .withColumn("ids", F.slice("ids", 1, max_bucket_size))
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ids"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.id_a", "p.id_b").dropDuplicates(["id_a", "id_b"])
-    left = src.select(F.col(id_col).alias("id_a"), F.col("__v").alias("__va"))
-    right = src.select(F.col(id_col).alias("id_b"), F.col("__v").alias("__vb"))
-    cand = pairs.join(left, "id_a").join(right, "id_b")
-    va, vb = F.col("__va"), F.col("__vb")
-    return (
-        cand.withColumn("cosine", _dot(va, vb) / (_norm(va) * _norm(vb)))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
 def embedding_near_duplicates(
     df: DataFrame,
     embedding_col: str = "embedding",
@@ -315,8 +257,9 @@ def embedding_near_duplicates(
     threshold: float = 0.95,
 ) -> DataFrame:
     """Cosine near-dup pairs over an embedding column via zip_with dot
-    products. All-pairs (the oracle path); at scale use
-    ``embedding_near_duplicates_bucketed`` above."""
+    products. All-pairs: a ``<`` self-join over every id pair, so cost
+    grows with the square of the input; a scale path would first block
+    candidates on ``similarity.with_lsh_bucket`` bands."""
     vecs = df.select(F.col(id_col), F.col(embedding_col).alias("v"))
     pairs = vecs.alias("l").join(vecs.alias("r"), F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
     lv, rv = F.col("l.v"), F.col("r.v")

@@ -69,7 +69,11 @@ def default_driver_memory(
 # C1 only: a run_kg-sized job ends before C2's compiles pay back (on 4
 # cores, C2 was most of a fresh-JVM batch's CPU). Long in-session runs do
 # earn them back and want stock tiering: BENCH_jit_host4.json has both.
-JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
+# C1 frames are larger than C2's, and a task thread deserializing a deep
+# task binary (a 60-iteration PageRank's) overflowed the default 1 MB
+# stack; Spark treats StackOverflowError as fatal and exits the whole JVM.
+# 4 MB threads are reserved, not committed, until a task needs them.
+JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -Xss4m"
 
 
 def default_java_options(environ: os._Environ[str] | dict[str, str]) -> str:

@@ -16,14 +16,19 @@ parquet analog of an Iceberg MERGE at 10^12-row store scale. Every bucketed
 write clusters its rows on the bucket first, so each touched bucket dir is
 rewritten by one task into exactly one file: a long ingest never fragments
 the dirs. Each table records its bucket count and hash keys (always its
-upsert keys) in ``_LAYOUT.json``; upserts and compaction refuse a table
-whose record is missing (written flat, or externally) or differs from the
-store's, while plain ``read`` still serves it. Iceberg additionally gives atomic
-snapshot commits; dynamic overwrite swaps each touched bucket dir
-non-atomically, an accepted stand-in here.
+upsert keys) in ``_LAYOUT.json``; upserts refuse a table whose record is
+missing (written flat, or externally) or differs from the store's, while
+plain ``read`` still serves it. Iceberg additionally gives atomic snapshot
+commits; dynamic overwrite swaps each touched bucket dir non-atomically, an
+accepted stand-in here.
 
-Full-table writes go to a temp dir then swap, so a killed job never leaves a
-half-written table.
+A table is published one way: the upsert that creates it writes
+``name.__tmp__`` (bucket files, then the layout record) and renames it into
+place. A job killed before that rename leaves a staged dir that the next
+access adopts if it holds its layout record (the data is complete) and the
+next create rewrites otherwise. ``overwrite`` is a plain Spark overwrite for
+run-scoped scratch (``_staging/{run_id}/...``), which a replay under the same
+run id rewrites.
 """
 
 from __future__ import annotations
@@ -54,9 +59,9 @@ class TableStore:
 
     def list_tables(self) -> list[str]:
         """Published table names: every table dir in the store root, with
-        swap/compaction staging dirs (``name.__tmp__`` etc.) and hidden
-        working dirs (``_staging`` and friends — the parquet hidden-path
-        convention) excluded."""
+        staged creates (``name.__tmp__``, and any other ``.__`` name) and
+        hidden working dirs (``_staging`` and friends — the parquet
+        hidden-path convention) excluded."""
         return sorted(
             p.name
             for p in self.root.iterdir()
@@ -65,44 +70,15 @@ class TableStore:
 
     # -- crash recovery ----------------------------------------------------
     def _recover(self, table: str) -> None:
-        """Heal the two-step swap windows (overwrite/compact rename the old
-        table aside before publishing the new one). If a crash left the
-        table path absent, restore it from, in order of preference:
-
-        * ``.__old__`` — the pre-swap table, always complete by construction;
-        * a COMPLETE staged dir (``.__tmp__``/``.__compact__`` carrying
-          Spark's ``_SUCCESS`` marker) — the post-swap content.
-
-        Without this, a killed compaction made ``read`` silently return an
-        empty table and a later upsert recreated it fresh — permanent data
-        loss with no error (round-4 advice, store.py compact window)."""
+        """Finish a create upsert killed between its staged write and the
+        publish rename: adopt ``name.__tmp__`` when it holds the layout
+        record, which ``upsert`` writes after the bucket files, so the data
+        is complete. A staged dir without it stays for the next create to
+        delete and rewrite."""
         target = self.path(table)
-        if target.exists():
-            return
-        aside = target.with_name(target.name + ".__old__")
-        if aside.exists():
-            aside.rename(target)
-            return
-        for suffix in (".__compact__", ".__tmp__"):
-            staged = target.with_name(target.name + suffix)
-            if staged.exists() and (staged / "_SUCCESS").exists():
-                staged.rename(target)
-                return
-
-    def _swap_in(self, tmp: Path, target: Path) -> None:
-        """Publish ``tmp`` as ``target`` without a window where the table
-        path is absent-and-unrecoverable: rename the old table aside, then
-        the new one into place, then drop the aside. A crash at any point
-        leaves either the target or a recoverable aside/staged dir for
-        ``_recover``."""
-        aside = target.with_name(target.name + ".__old__")
-        if aside.exists():  # stale from an earlier crash; target exists, so it lost
-            shutil.rmtree(aside)
-        if target.exists():
-            target.rename(aside)
-        tmp.rename(target)
-        if aside.exists():
-            shutil.rmtree(aside)
+        staged = target.with_name(target.name + ".__tmp__")
+        if not target.exists() and (staged / LAYOUT_FILE).exists():
+            staged.rename(target)
 
     # -- layout metadata ---------------------------------------------------
     def _write_layout(self, target: Path, keys: list[str]) -> None:
@@ -113,13 +89,13 @@ class TableStore:
     def _read_layout(self, table: str) -> dict:
         """The table's layout record; a table without one (written flat,
         before layout versioning, or externally) fails loudly rather than
-        being merged into or compacted as if its dirs were hashed."""
+        being merged into as if its dirs were hashed."""
         p = self.path(table) / LAYOUT_FILE
         if not p.exists():
             raise ValueError(
                 f"table {table!r} has no {LAYOUT_FILE}: it predates layout "
                 "versioning (or was written externally); rebuild it (read, drop, "
-                "upsert its rows) before upserting into or compacting it"
+                "upsert its rows) before upserting into it"
             )
         return json.loads(p.read_text())
 
@@ -148,13 +124,9 @@ class TableStore:
         return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
 
     def overwrite(self, df: DataFrame, table: str) -> None:
-        self._recover(table)
-        target = self.path(table)
-        tmp = target.with_name(target.name + ".__tmp__")
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        df.write.mode("overwrite").parquet(str(tmp))
-        self._swap_in(tmp, target)
+        """Unbucketed scratch write (no layout record, so never upserted
+        into); a killed write is redone by the replay that rewrites it."""
+        df.write.mode("overwrite").parquet(str(self.path(table)))
 
     def _bucket_expr(self, keys: list[str]) -> Column:
         key = F.concat_ws("\x1f", *[F.col(k).cast("string") for k in keys])
@@ -201,9 +173,8 @@ class TableStore:
             if tmp.exists():
                 shutil.rmtree(tmp)
             self._write_buckets(updates, tmp)
-            # layout rides inside tmp BEFORE the publish rename: a crash
-            # after the rename (or a _recover that adopts this staged dir)
-            # must never yield a bucketed table without its layout record
+            # the layout record lands last: _recover adopts a staged dir
+            # only when it holds one, so its bucket files are complete
             self._write_layout(tmp, keys)
             tmp.rename(target)
             return
@@ -230,39 +201,9 @@ class TableStore:
             writer = writer.option("partitionOverwriteMode", "dynamic")
         writer.partitionBy(BUCKET_COL).parquet(str(path))
 
-    def compact(self, spark: SparkSession, table: str) -> None:
-        """Maintenance rewrite (Iceberg's rewrite_data_files analog). Every
-        write through the store leaves one file per bucket dir; dirs that
-        hold more (laid down by a store version that did not cluster its
-        writes on the bucket, or given files from outside the store) cost
-        scan time per file. Compaction rewrites the table so each bucket dir
-        holds one file (rows and bucket assignment unchanged), via a temp
-        dir + rename-aside swap so a killed compaction never corrupts the
-        table: the old table is renamed aside before the new one lands and
-        ``_recover`` restores whichever complete copy survives a crash.
-        A table without a layout record raises instead of being rewritten."""
-        self._recover(table)
-        target = self.path(table)
-        if not target.exists():
-            return
-        layout = self._read_layout(table)
-        df = spark.read.parquet(str(target))
-        tmp = target.with_name(target.name + ".__compact__")
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        self._write_buckets(df, tmp)
-        # the layout record rides along through the rewrite
-        (tmp / LAYOUT_FILE).write_text(json.dumps(layout))
-        self._swap_in(tmp, target)
-
     def drop(self, table: str) -> None:
         target = self.path(table)
-        for p in (
-            target,
-            target.with_name(target.name + ".__old__"),
-            target.with_name(target.name + ".__tmp__"),
-            target.with_name(target.name + ".__compact__"),
-        ):
+        for p in (target, target.with_name(target.name + ".__tmp__")):
             if p.exists():
                 shutil.rmtree(p)
 

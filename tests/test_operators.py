@@ -190,34 +190,6 @@ def test_embedding_near_duplicates_and_topk(spark):
     assert top[0]["similarity"] == pytest.approx(1.0)
 
 
-def test_embedding_near_dup_bucketed_matches_all_pairs(spark):
-    """The banded-LSH blocking path must recover every >=0.97 pair the
-    all-pairs oracle finds on planted duplicates, with identical cosines."""
-    import numpy as np
-
-    from sage_spark.operators.dedup import embedding_near_duplicates_bucketed
-
-    rng_base = [hash_embedding(f"base {i}", 32) for i in range(40)]
-    rows = []
-    vid = 0
-    for i, base in enumerate(rng_base):
-        rows.append((vid, [float(v) for v in base])); vid += 1
-        if i % 4 == 0:  # plant a near-duplicate of every 4th vector
-            noise = np.array(hash_embedding(f"noise {i}", 32)) * 0.03
-            v = np.array(base) + noise
-            v = v / np.linalg.norm(v)
-            rows.append((vid, [float(x) for x in v])); vid += 1
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-
-    exact = {(r["id_a"], r["id_b"]): round(r["cosine"], 9) for r in embedding_near_duplicates(df, threshold=0.97).collect()}
-    assert len(exact) == 10  # one pair per planted dup
-    bucketed = {
-        (r["id_a"], r["id_b"]): round(r["cosine"], 9)
-        for r in embedding_near_duplicates_bucketed(df, dim=32, threshold=0.97, bands=4, planes_per_band=4).collect()
-    }
-    assert bucketed == exact
-
-
 def test_lsh_and_ivf_topk_agree_with_exact(spark):
     vecs = [(i, [float(v) for v in hash_embedding(f"v{i}", 32)]) for i in range(200)]
     df = spark.createDataFrame(vecs, "vec_id int, embedding array<double>")

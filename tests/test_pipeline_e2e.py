@@ -460,89 +460,27 @@ def test_bucketed_store_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     assert again == got
 
 
-def test_bucketed_store_compaction(spark, tmp_path):
-    """Bucket dirs written by several tasks (e.g. appends from an external
-    writer) hold several files each; compact() must rewrite each dir to ONE
-    file with rows, bucket assignment, and subsequent-upsert behavior all
-    unchanged (the rewrite_data_files maintenance op of an Iceberg table)."""
-    import glob
-    import os
-
-    from sage_spark.store import BUCKET_COL, TableStore
-
-    store = TableStore(tmp_path / "cstore", buckets=4)
-    root = tmp_path / "cstore" / "t"
-    for batch in range(3):
-        df = spark.createDataFrame(
-            [(f"id{batch}_{i}", f"v{batch}") for i in range(60)], "k string, v string"
-        )
-        if batch == 0:
-            store.upsert(df, "t", ["k"])  # creates the table and its layout record
-        else:
-            # upserts leave one file per bucket; fragment the dirs explicitly
-            (
-                df.withColumn(BUCKET_COL, store._bucket_expr(["k"]))
-                .repartition(3)
-                .write.mode("append")
-                .partitionBy(BUCKET_COL)
-                .parquet(str(root))
-            )
-    buckets = sorted(p for p in os.listdir(root) if p.startswith("__bucket="))
-
-    def files(b):
-        return [f for f in glob.glob(f"{root}/{b}/*") if f.endswith(".parquet")]
-
-    assert any(len(files(b)) > 1 for b in buckets), "multi-task appends should fragment dirs"
-    before = sorted(map(tuple, store.read(spark, "t").collect()))
-    store.compact(spark, "t")
-    after_buckets = sorted(p for p in os.listdir(root) if p.startswith("__bucket="))
-    assert after_buckets == buckets  # layout preserved
-    for b in after_buckets:
-        assert len(files(b)) == 1, (b, files(b))
-    assert sorted(map(tuple, store.read(spark, "t").collect())) == before
-    # bucketed upserts still prune correctly against the compacted layout
-    store.upsert(
-        spark.createDataFrame([("id0_0", "NEW")], "k string, v string"), "t", ["k"]
-    )
-    got = {r["k"]: r["v"] for r in store.read(spark, "t").collect()}
-    assert got["id0_0"] == "NEW" and len(got) == 180
-
-
 def test_store_crash_recovery_and_layout_versioning(spark, tmp_path):
-    """The round-4 advice items on store.py: (a) a crash inside the
-    compact/overwrite swap must never lose the table — whichever complete
-    copy survives (the aside-renamed old table or a _SUCCESS-marked staged
-    dir) is restored on the next access; (b) an upsert keyed differently
-    from the table's recorded layout must fail loudly, not silently merge
-    into the wrong dirs; (c) compaction preserves the layout record, so
-    later upserts still merge; (d) a table without a layout record is
-    refused."""
+    """The round-4 advice items on store.py: (a) a staged create without
+    its layout record is incomplete and is never adopted as the table;
+    (b) an upsert keyed differently from the table's recorded layout must
+    fail loudly, not silently merge into the wrong dirs; (c) a table
+    without a layout record is refused."""
     import shutil
 
     import pytest
     from pyspark.sql import types as T
 
-    from sage_spark.store import TableStore
+    from sage_spark.store import LAYOUT_FILE, TableStore
 
     store = TableStore(tmp_path / "rstore", buckets=4)
     rows = [(f"id{i}", i) for i in range(50)]
     store.upsert(spark.createDataFrame(rows, "k string, v int"), "t", ["k"])
-    expect = sorted(map(tuple, store.read(spark, "t").collect()))
     root = tmp_path / "rstore"
 
-    # crash window 1: old table renamed aside, new one not yet in place
-    (root / "t").rename(root / "t.__old__")
-    assert sorted(map(tuple, store.read(spark, "t").collect())) == expect
-    assert (root / "t").exists() and not (root / "t.__old__").exists()
-
-    # crash window 2: target gone, a COMPLETE compacted copy staged
-    (root / "t").rename(root / "t.__compact__")
-    assert (root / "t.__compact__" / "_SUCCESS").exists()
-    assert sorted(map(tuple, store.read(spark, "t").collect())) == expect
-
-    # an INCOMPLETE staged dir (no _SUCCESS) must NOT be adopted
+    # an INCOMPLETE staged dir (no layout record) must NOT be adopted
     (root / "t").rename(root / "t.__tmp__")
-    (root / "t.__tmp__" / "_SUCCESS").unlink()
+    (root / "t.__tmp__" / LAYOUT_FILE).unlink()
     schema = T.StructType([T.StructField("k", T.StringType()), T.StructField("v", T.IntegerType())])
     assert store.read(spark, "t", schema).count() == 0
     shutil.rmtree(root / "t.__tmp__")
@@ -552,13 +490,11 @@ def test_store_crash_recovery_and_layout_versioning(spark, tmp_path):
     probe = spark.createDataFrame([("id1", 100)], "k string, v int")
     with pytest.raises(ValueError, match="layout mismatch"):
         store.upsert(probe, "u", ["v"])  # requested (v) != recorded (k)
-    # compaction preserves the layout record: the next upsert still merges
-    store.compact(spark, "u")
     store.upsert(probe, "u", ["k"])
     got = {r["k"]: r["v"] for r in store.read(spark, "u").collect()}
     assert len(got) == 50 and got["id1"] == 100
     # a pre-versioning table (no _LAYOUT.json) fails loudly
-    (root / "u" / "_LAYOUT.json").unlink()
+    (root / "u" / LAYOUT_FILE).unlink()
     with pytest.raises(ValueError, match="predates layout versioning"):
         store.upsert(probe, "u", ["k"])
 
@@ -709,8 +645,8 @@ def test_dataprep_job_end_to_end(spark, tmp_path):
 def test_store_append_recovers_crashed_swap_and_empty_upsert_noop(spark, tmp_path):
     """A bucketed upsert of an EMPTY batch against an absent table is a
     no-op, never an unreadable zero-file partitioned dir; and a staged
-    .__tmp__ from a crash-after-write carries its layout record, so
-    _recover adoption yields a fully usable bucketed table."""
+    .__tmp__ from a crash before the publish rename carries its layout
+    record, so _recover adoption yields a fully usable bucketed table."""
     from pyspark.sql import types as T
 
     from sage_spark.store import LAYOUT_FILE, TableStore
@@ -724,8 +660,8 @@ def test_store_append_recovers_crashed_swap_and_empty_upsert_noop(spark, tmp_pat
     assert bstore.read(spark, "e", schema).count() == 0
 
     # staged-dir adoption keeps the table bucketed-usable: the layout file
-    # is written INSIDE tmp before the publish rename, so a _SUCCESS-marked
-    # .__tmp__ adopted by _recover passes the layout check
+    # is written INSIDE tmp before the publish rename, and _recover adopts
+    # only a .__tmp__ that holds it, so the adopted table passes the check
     bstore.upsert(spark.createDataFrame([("a", 1)], "k string, v int"), "b", ["k"])
     (tmp_path / "bstore" / "b").rename(tmp_path / "bstore" / "b.__tmp__")
     assert (tmp_path / "bstore" / "b.__tmp__" / LAYOUT_FILE).exists()

@@ -1,8 +1,8 @@
 """TableStore upserts on its hash-bucketed layout: the file shape an
 upsert leaves behind, the Spark jobs it costs, the empty-batch no-op, the
 16-bucket default and the refusal to merge into a table without a layout
-record, and the batch (not store) counts ``run_pipeline`` reports on a
-resumed run."""
+record, the rerun of a create killed before that record, and the batch
+(not store) counts ``run_pipeline`` reports on a resumed run."""
 
 from __future__ import annotations
 
@@ -100,8 +100,8 @@ def test_default_layout_is_16_buckets_and_layoutless_tables_are_refused(spark, t
     """A store built without a bucket count lays tables out in 16 hashed
     dirs with a layout record. A table without that record (written by
     ``overwrite``, as a flat store was) or with another bucket count still
-    reads, but an upsert or compaction of it raises instead of merging into
-    dirs it cannot prune."""
+    reads, but an upsert into it raises instead of merging into dirs it
+    cannot prune."""
     store = TableStore(tmp_path / "s")
     df, rows = _batch(spark, 0, n=200)
     store.upsert(df, "t", ["k"])
@@ -114,14 +114,43 @@ def test_default_layout_is_16_buckets_and_layoutless_tables_are_refused(spark, t
     upd, _ = _batch(spark, 1, n=3)
     with pytest.raises(ValueError, match=f"no {LAYOUT_FILE}"):
         store.upsert(upd, "flat", ["k"])
-    with pytest.raises(ValueError, match=f"no {LAYOUT_FILE}"):
-        store.compact(spark, "flat")
     assert {r["k"]: r["v"] for r in store.read(spark, "flat").collect()} == rows
 
     other = TableStore(tmp_path / "s", buckets=4)
     with pytest.raises(ValueError, match="layout mismatch"):
         other.upsert(upd, "t", ["k"])
     assert {r["k"]: r["v"] for r in other.read(spark, "t").collect()} == rows
+
+
+class _LayoutCrashOnce(TableStore):
+    """A store whose first layout record write dies, as a job killed
+    between a create upsert's bucket files and its ``_LAYOUT.json``."""
+
+    crashed = False
+
+    def _write_layout(self, target, keys):
+        if not self.crashed:
+            self.crashed = True
+            raise RuntimeError("injected crash before the layout record")
+        super()._write_layout(target, keys)
+
+
+def test_rerun_of_a_create_killed_before_its_layout_record_publishes_the_table(spark, tmp_path):
+    """The killed create leaves ``t.__tmp__`` with its bucket files and
+    Spark's ``_SUCCESS`` marker but no layout record. The rerun of the same
+    upsert must not adopt that dir (a table without a layout record refuses
+    every upsert): it rewrites it and publishes the table."""
+    store = _LayoutCrashOnce(tmp_path / "s", buckets=4)
+    df, rows = _batch(spark, 0)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        store.upsert(df, "t", ["k"])
+    staged = store.root / "t.__tmp__"
+    assert (staged / "_SUCCESS").exists() and not (staged / LAYOUT_FILE).exists()
+    assert not store.path("t").exists()
+
+    store.upsert(df, "t", ["k"])
+    assert {r["k"]: r["v"] for r in store.read(spark, "t").collect()} == rows
+    assert (store.path("t") / LAYOUT_FILE).exists() and not staged.exists()
 
 
 def _totals(spark, store: TableStore) -> dict[str, int]:

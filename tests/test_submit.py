@@ -70,7 +70,7 @@ def test_default_driver_memory_fits_the_host() -> None:
 
 
 def test_default_java_options() -> None:
-    assert default_java_options({}) == "-XX:TieredStopAtLevel=1"
+    assert default_java_options({}) == "-XX:TieredStopAtLevel=1 -Xss4m"
     # the environment override replaces the policy; empty is stock tiering
     env = {"SAGE_SPARK_DRIVER_JAVA_OPTS": "-XX:CICompilerCount=2"}
     assert default_java_options(env) == "-XX:CICompilerCount=2"
@@ -106,7 +106,7 @@ def test_jit_policy_and_extra_java_options_reach_a_fresh_driver(tmp_path: Path) 
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
     args = proc.stdout.splitlines()
-    assert "-XX:TieredStopAtLevel=1" in args, args
+    assert "-XX:TieredStopAtLevel=1" in args and "-Xss4m" in args, args
     assert "-Dsage.probe=1" in args
 
 

@@ -29,14 +29,11 @@ def main() -> None:
     n_delta = int(sys.argv[2]) if len(sys.argv) > 2 else 1_000
     cores = int(sys.argv[3]) if len(sys.argv) > 3 else 16
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", str(2 * cores))
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
+    from sage_spark.session import build_spark
+
+    spark = build_spark(app_name="cc-bench", master=f"local[{cores}]", shuffle_partitions=2 * cores)
     spark.sparkContext.setLogLevel("ERROR")
     from sage_spark.operators.components import connected_components, incremental_components
 
